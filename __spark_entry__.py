@@ -406,11 +406,10 @@ FROM planted GROUP BY event_type
 def _q_rt_nan_floats(spark, sf_dir) -> DataFrame:
     """NaN fidelity: plant BOTH NaN and NULL into a double column and a
     double-list column, round-trip through the engine, and report
-    null/NaN/finite per row. NULL is recorded in a JVM-side validity
-    companion before the pandas hop, so NaN stays a VALUE (the reference
-    keeps NaN distinct from null with explicit NaN statistics rules,
-    src/basic.rs:331-336) — without the companion both collapse to NaN in
-    pandas and NaN would decode as NULL."""
+    null/NaN/finite per row. NULL travels as Arrow validity and NaN as a
+    value in both directions, so NaN stays a VALUE (the reference keeps
+    NaN distinct from null with explicit NaN statistics rules,
+    src/basic.rs:331-336)."""
     encode_job, decode_job = _engine(spark)
     nan = F.lit(float("nan")).cast("double")
     ev = _read(spark, sf_dir, "events").select(

@@ -7,8 +7,9 @@ Layers:
 - ``engine.chunk``   — chunk framing + checksums (the column-chunk unit,
   reference ``src/column/page.rs`` / ``src/file/metadata.rs:294-444``);
 - ``engine.selector`` — per-chunk codec auto-selection from sampled stats;
-- ``engine.jobs``    — distributed encode/decode as pure ``mapInPandas``
-  stages over DataFrames, with salted partitioning and checkpointed resume;
+- ``engine.jobs``    — distributed encode/decode as Arrow-native
+  ``mapInArrow``/``applyInArrow`` stages over DataFrames, with salted
+  partitioning and checkpointed resume;
 - ``engine.ops``     — training-data pipeline operators (dedup, similarity
   search, text analysis, multimodal plumbing).
 """

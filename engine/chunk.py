@@ -258,8 +258,7 @@ def encode_chunk(values, codec: str, dtype: str = "int32", valid=None) -> bytes:
 
     With ``valid``, numeric ``values`` may be either full-length (nulls will
     be shredded out) or already dense (``len(values) == valid.sum()`` — the
-    job layer passes dense arrays because pandas cannot represent null ints
-    in a typed numpy array). Byte arrays with ``valid`` are always dense:
+    job layer passes the dense non-null values it reads off Arrow). Byte arrays with ``valid`` are always dense:
     ``(lengths, data)`` describe only the non-null values.
     """
     cid = CODEC_IDS[codec]

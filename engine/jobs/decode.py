@@ -5,7 +5,7 @@ get_row_iter``, ``src/file/reader.rs:132-292`` + record assembly
 ``src/record/reader.rs:378-520``): each ``chunk_id`` group holds one encoded
 blob per column; decode is a pure ``applyInArrow`` stage that reverses the
 column-chunk framing, verifies checksums, and reassembles rows straight
-into Arrow arrays (r8: no pandas hop in the corpus decode path). Token
+into Arrow arrays (no pandas hop in any decode path). Token
 arrays must come back bit-identical (the round-trip invariant of the
 reference's encoding tests, ``src/encodings/encoding.rs:1179-1265``).
 """
@@ -13,7 +13,6 @@ reference's encoding tests, ``src/encodings/encoding.rs:1179-1265``).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -36,10 +35,23 @@ ALL_COLUMNS = list(_FIELDS)
 DECODED_SCHEMA = StructType(list(_FIELDS.values()))
 
 
-def _string_array_from_flat(lengths: np.ndarray, data: bytes, binary: bool = False):
+def _string_array_from_flat(
+    lengths: np.ndarray, data: bytes, valid=None, binary: bool = False
+):
+    """utf8/binary Arrow array over dense decoded (lengths, data); with
+    ``valid`` the dense values scatter to the True slots and the rest are
+    NULL (zero-length slots under a validity bitmap, no per-value Python)."""
     import pyarrow as pa
 
-    offsets = np.concatenate(([0], np.cumsum(np.asarray(lengths, dtype=np.int64))))
+    lengths = np.asarray(lengths, dtype=np.int64)
+    validity = None
+    if valid is not None:
+        valid = np.asarray(valid, dtype=bool)
+        full = np.zeros(len(valid), dtype=np.int64)
+        full[valid] = lengths
+        lengths = full
+        validity = pa.py_buffer(np.packbits(valid, bitorder="little"))
+    offsets = np.concatenate(([0], np.cumsum(lengths)))
     if offsets[-1] > np.iinfo(np.int32).max:
         # mirrors _list_array's guard: int32 Arrow offsets would wrap and
         # decode silently-corrupt values past 2^31 payload bytes
@@ -50,23 +62,11 @@ def _string_array_from_flat(lengths: np.ndarray, data: bytes, binary: bool = Fal
         pa.binary() if binary else pa.utf8(),
         len(lengths),
         [
-            None,
+            validity,
             pa.py_buffer(offsets.astype(np.int32).tobytes()),
             pa.py_buffer(data),
         ],
     )
-
-
-def _scatter_dense_strings(lengths, data, valid, binary: bool):
-    """Dense decoded byte-array values + validity -> full-length object
-    ndarray with None at nulls (shared by the scalar and list decode
-    paths)."""
-    dense = _string_array_from_flat(lengths, data, binary).to_numpy(
-        zero_copy_only=False
-    )
-    out = np.full(len(valid), None, dtype=object)
-    out[valid] = dense
-    return out
 
 
 def _list_array(lengths: np.ndarray, values_pa, record_valid=None):
@@ -107,45 +107,10 @@ def _unpack_list_chunk(decoded):
     return lengths, values, None
 
 
-def _list_series(decoded, elem: str) -> pd.Series:
-    """Decoded LIST chunk tuple -> pandas series of arrays (with null lists
-    and null elements restored)."""
-    import pyarrow as pa
-
-    lengths, values, record_valid = _unpack_list_chunk(decoded)
-    if elem in ("bytes", "binary"):
-        binary = elem == "binary"
-        if isinstance(values, tuple) and len(values) == 3:
-            balens, data, elem_valid = values
-            out = _scatter_dense_strings(balens, data, elem_valid, binary)
-            values_pa = pa.array(out, type=pa.binary() if binary else pa.string())
-        else:
-            values_pa = _string_array_from_flat(*values, binary=binary)
-    else:
-        if isinstance(values, tuple):
-            vals, elem_valid = values  # full-length with fill + mask
-            values_pa = pa.array(vals, mask=~elem_valid)
-        else:
-            values_pa = pa.array(values)
-    return _list_array(lengths, values_pa, record_valid).to_pandas()
-
-
-def _check_group_consistent(pdf: pd.DataFrame) -> None:
+def _check_arrow_group_consistent(tbl) -> None:
     """All column rows of one chunk must agree on n_docs — the reference's
     row-group row-count consistency check (src/file/writer.rs:303-313); a
     disagreement means a corrupt or mixed-up store."""
-    nd = pdf["n_docs"].to_numpy()
-    if len(nd) and (nd != nd[0]).any():
-        cid = pdf["chunk_id"].iloc[0]
-        raise ValueError(
-            f"chunk {cid!r}: columns disagree on row count "
-            f"({sorted(set(int(x) for x in nd))})"
-        )
-
-
-def _check_arrow_group_consistent(tbl) -> None:
-    """Arrow-table form of :func:`_check_group_consistent` (shared by the
-    chunk decoder and the fused aggregate)."""
     nd = tbl.column("n_docs").to_numpy(zero_copy_only=False)
     if len(nd) and (nd != nd[0]).any():
         cid = tbl.column("chunk_id")[0].as_py()
@@ -157,9 +122,8 @@ def _check_arrow_group_consistent(tbl) -> None:
 
 def _decode_group_arrow(tbl, columns: list[str], arrow_schema):
     """Arrow-native chunk decode: one chunk's column rows (a pa.Table)
-    -> one decoded pa.Table. The assembled Arrow arrays (_list_array /
-    _string_array_from_flat) are returned directly instead of detouring
-    through pandas object Series and back (guide §4.2)."""
+    -> one decoded pa.Table, assembled with _list_array /
+    _string_array_from_flat (guide §4.2)."""
     import pyarrow as pa
 
     _check_arrow_group_consistent(tbl)
@@ -261,6 +225,15 @@ def decode_tokens_agg(chunks_df: DataFrame, colocated: bool = False) -> DataFram
         blobs = dict(
             zip(tbl.column("column").to_pylist(), tbl.column("payload").to_pylist())
         )
+        missing = sorted({"tokens", "n_tok", "doc_id"} - set(blobs))
+        if missing:
+            cid = tbl.column("chunk_id")[0].as_py()
+            if colocated:
+                raise ValueError(
+                    f"chunk {cid} incomplete in partition — input not "
+                    "co-located; call with colocated=False"
+                )
+            raise ValueError(f"chunk {cid}: no column rows for {missing}")
         lens = chunk.decode_chunk(blobs["n_tok"]).astype(np.int64)
         flat = np.asarray(chunk.decode_chunk(blobs["tokens"])).astype(np.int64)
         if int(lens.sum()) != flat.size:
@@ -323,46 +296,37 @@ _SPARK_TYPES = {
 }
 
 
-_PD_NULLABLE = {
-    "int32": "Int32",
-    "int64": "Int64",
-    "float32": "Float32",
-    "float64": "Float64",
-    "bool": "boolean",
-}
+def _values_array(decoded, kind: str):
+    """Decoded flat chunk -> Arrow array with its NULLs restored from the
+    def-level validity (NaN stays a value: Arrow keeps the two apart)."""
+    import pyarrow as pa
+
+    if kind in ("bytes", "binary"):
+        return _string_array_from_flat(*decoded, binary=kind == "binary")
+    if isinstance(decoded, tuple):
+        vals, valid = decoded
+        return pa.array(vals, mask=~valid)
+    return pa.array(decoded)
 
 
-def _null_series(kind: str, n: int) -> pd.Series:
-    """All-NULL column of ``kind`` (schema-evolution fill for chunks written
-    before the column existed)."""
-    if kind in _PD_NULLABLE:
-        return pd.Series(pd.array([None] * n, dtype=_PD_NULLABLE[kind]))
-    return pd.Series(np.full(n, None, dtype=object))
-
-
-def _nullable_series(vals: np.ndarray, valid: np.ndarray, kind: str) -> pd.Series:
-    """Dense-decoded values + validity -> pandas series with real nulls.
-    All families use pandas masked extension arrays so Arrow carries a true
-    validity bitmap — a NaN stand-in would make Spark see non-null NaN."""
-    if kind in ("int32", "int64"):
-        arr = pd.arrays.IntegerArray(vals.astype(kind), mask=~valid)
-    elif kind in ("float32", "float64"):
-        arr = pd.arrays.FloatingArray(vals.astype(kind), mask=~valid)
-    elif kind == "bool":
-        arr = pd.arrays.BooleanArray(vals.astype(bool), mask=~valid)
-    else:
-        raise ValueError(f"no nullable family for kind {kind}")
-    return pd.Series(arr)
+def _column_array(decoded, kind: str):
+    """Decoded chunk of a generic-table column -> its Arrow array."""
+    if kind.startswith("list:"):
+        lengths, values, record_valid = _unpack_list_chunk(decoded)
+        return _list_array(lengths, _values_array(values, kind[5:]), record_valid)
+    return _values_array(decoded, kind)
 
 
 def decode_table(
     chunks_df: DataFrame, columns: dict, select: list[str] | None = None
 ) -> DataFrame:
     """Generic decode for any table encoded via ``encode_table`` with a
-    ``columns`` spec (name -> (kind, ...)). The inverse of the generic
-    ``derive_columns`` path: list columns are only supported through the
-    specialized tokenized-sequences decoder. Nullable chunks (FLAG_NULLABLE)
-    come back with their nulls restored from the def-level section.
+    ``columns`` spec (name -> (kind, ...)): the inverse of the generic
+    ``derive_columns`` path, as a grouped ``applyInArrow`` that rebuilds
+    each chunk's columns straight into Arrow arrays. NULL values, NULL lists
+    and NULL list elements come back from the def-level sections as Arrow
+    validity; NaN stays a value. ``int32_list`` token columns decode through
+    the corpus decoder, :func:`decode_chunks`.
 
     ``select``: optional projection — only the requested columns' payload
     rows are shuffled and deserialized (the generic-table analog of
@@ -421,16 +385,10 @@ def decode_table(
             ]
         )
         return out.unionByName(null_rows)
-    from pyspark.sql.types import ArrayType, StructType, _parse_datatype_string
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
 
-    from pyspark.sql.types import BooleanType, IntegerType
-
-    from .encode import EVALID_SUFFIX, check_companion_names
-
-    check_companion_names(columns)
     fields = []
-    int64_lists = []
-    float_lists = []
     for name, spec in columns.items():
         kind = spec[0]
         if kind == "int32_list":
@@ -442,25 +400,9 @@ def decode_table(
         else:
             dt = _parse_datatype_string(_SPARK_TYPES[kind])
         fields.append(StructField(name, dt, True))
-        if kind == "list:int64":
-            # int64-null lists cannot ride pandas (Spark's serializer
-            # materializes them as float64, rounding above 2^53): emit
-            # zero-filled exact values + a validity-list companion, rebuilt
-            # JVM-side with zip_with after the pandas hop
-            int64_lists.append(name)
-            fields.append(
-                StructField(f"{name}{EVALID_SUFFIX}", ArrayType(BooleanType()), True)
-            )
-        elif kind in ("list:float32", "list:float64"):
-            # float lists lose NaN on the RETURN hop (Spark's pandas->Arrow
-            # conversion marks NaN list elements null): emit zero-filled
-            # finite values + a ternary code companion (0=null, 1=value,
-            # 2=NaN), rebuilt JVM-side with zip_with
-            float_lists.append(name)
-            fields.append(
-                StructField(f"{name}{EVALID_SUFFIX}", ArrayType(IntegerType()), True)
-            )
     schema = StructType(fields)
+    arrow_schema = to_arrow_schema(schema)
+    kinds = {name: spec[0] for name, spec in columns.items()}
 
     logical = {
         name: spec[3]
@@ -468,119 +410,30 @@ def decode_table(
         if len(spec) > 3 and spec[3]
     }
 
-    def gen(pdf: pd.DataFrame) -> pd.DataFrame:
-        if "n_docs" in pdf.columns:
-            _check_group_consistent(pdf)
-        blobs = dict(zip(pdf["column"], pdf["payload"]))
-        n_docs = int(pdf["n_docs"].iloc[0]) if "n_docs" in pdf.columns else None
-        out = {}
-        for name, spec in columns.items():
-            kind = spec[0]
-            if name not in blobs:
+    def gen(tbl):
+        import pyarrow as pa
+
+        has_n_docs = "n_docs" in tbl.column_names
+        if has_n_docs:
+            _check_arrow_group_consistent(tbl)
+        blobs = dict(
+            zip(tbl.column("column").to_pylist(), tbl.column("payload").to_pylist())
+        )
+        out = []
+        for field in arrow_schema:
+            if field.name in blobs:
+                decoded = chunk.decode_chunk(blobs[field.name])
+                out.append(_column_array(decoded, kinds[field.name]))
+            elif has_n_docs:
                 # schema evolution: chunks written before this column was
                 # added decode it as all-NULL (parquet's missing-column
                 # semantics); n_docs from the chunk metadata sizes the fill
-                if n_docs is None:
-                    raise KeyError(f"column {name} missing and no n_docs metadata")
-                out[name] = _null_series(kind, n_docs)
-                if kind in ("list:int64", "list:float32", "list:float64"):
-                    out[f"{name}{EVALID_SUFFIX}"] = _null_series("bytes", n_docs)
-                continue
-            decoded = chunk.decode_chunk(blobs[name])
-            if kind == "list:int64":
-                import pyarrow as pa
-
-                lengths, values, record_valid = _unpack_list_chunk(decoded)
-                if isinstance(values, tuple):
-                    vals_full, elem_valid = values  # zero-filled + mask
-                else:
-                    vals_full = values
-                    elem_valid = np.ones(len(values), dtype=bool)
-                # values WITHOUT nulls stay int64 ndarrays through pandas —
-                # exact; the validity rides its own bool-list column
-                out[name] = _list_array(
-                    lengths, pa.array(np.ascontiguousarray(vals_full, np.int64)),
-                    record_valid,
-                ).to_pandas()
-                out[f"{name}{EVALID_SUFFIX}"] = _list_array(
-                    lengths, pa.array(np.ascontiguousarray(elem_valid, bool)),
-                    record_valid,
-                ).to_pandas()
-            elif kind in ("list:float32", "list:float64"):
-                import pyarrow as pa
-
-                lengths, values, record_valid = _unpack_list_chunk(decoded)
-                if isinstance(values, tuple):
-                    vals_full, elem_valid = values  # full-length with fill
-                else:
-                    vals_full = np.asarray(values)
-                    elem_valid = np.ones(len(vals_full), dtype=bool)
-                vals_full = np.asarray(vals_full, dtype=kind[5:])
-                nan_mask = np.isnan(vals_full) & elem_valid
-                code = np.where(
-                    elem_valid, np.where(nan_mask, 2, 1), 0
-                ).astype(np.int32)
-                # only code==1 positions carry real values across the hop;
-                # everything else zero-fills so no NaN reaches pandas
-                finite = np.where(code == 1, vals_full, 0.0).astype(kind[5:])
-                out[name] = _list_array(
-                    lengths, pa.array(finite), record_valid
-                ).to_pandas()
-                out[f"{name}{EVALID_SUFFIX}"] = _list_array(
-                    lengths, pa.array(code), record_valid
-                ).to_pandas()
-            elif kind.startswith("list:"):
-                out[name] = _list_series(decoded, kind[5:])
-            elif kind in ("bytes", "binary"):
-                binary = kind == "binary"
-                if isinstance(decoded, tuple) and len(decoded) == 3:
-                    lens, data, valid = decoded
-                    out[name] = pd.Series(
-                        _scatter_dense_strings(lens, data, valid, binary)
-                    )
-                else:
-                    out[name] = _string_array_from_flat(*decoded, binary=binary).to_pandas()
-            elif isinstance(decoded, tuple):
-                out[name] = _nullable_series(decoded[0], decoded[1], kind)
-            elif kind in ("float32", "float64"):
-                # even a chunk with ZERO nulls must return floats as a
-                # masked extension array: Spark's pandas->Arrow serializer
-                # masks plain numpy series with series.isnull(), which is
-                # True for NaN — a bare ndarray would turn decoded NaN
-                # values into NULL on the return hop
-                out[name] = pd.Series(
-                    pd.arrays.FloatingArray(
-                        np.asarray(decoded, dtype=kind),
-                        mask=np.zeros(len(decoded), dtype=bool),
-                    )
-                )
+                out.append(pa.nulls(tbl.column("n_docs")[0].as_py(), field.type))
             else:
-                out[name] = decoded
-        return pd.DataFrame(out)
+                raise KeyError(f"column {field.name} missing and no n_docs metadata")
+        return pa.Table.from_arrays(out, names=arrow_schema.names).cast(arrow_schema)
 
-    out = chunks_df.groupBy("chunk_id").applyInPandas(lambda p: gen(p), schema)
-    for name in int64_lists:
-        evcol = f"{name}{EVALID_SUFFIX}"
-        out = out.withColumn(
-            name,
-            F.zip_with(
-                F.col(f"`{name}`"),
-                F.col(f"`{evcol}`"),
-                lambda v, m: F.when(m, v),
-            ),
-        ).drop(evcol)
-    for name in float_lists:
-        evcol = f"{name}{EVALID_SUFFIX}"
-        phys = _SPARK_TYPES[columns[name][0][5:]]  # float / double
-        # closure factory, NOT a default arg: zip_with requires a
-        # two-parameter lambda
-        merge = (
-            lambda n: lambda v, c: F.when(c == 2, n).when(c == 1, v)
-        )(F.lit(float("nan")).cast(phys))
-        out = out.withColumn(
-            name,
-            F.zip_with(F.col(f"`{name}`"), F.col(f"`{evcol}`"), merge),
-        ).drop(evcol)
+    out = chunks_df.groupBy("chunk_id").applyInArrow(gen, schema)
     if logical:
         from ..jobs.encode import logical_spec
 
@@ -661,8 +514,10 @@ def token_histogram(chunks_df: DataFrame, column: str = "tokens") -> DataFrame:
     pruned = chunks_df.where(F.col("column") == column).select("payload")
 
     def hist(batches):
-        for pdf in batches:
-            for blob in pdf["payload"]:
+        import pyarrow as pa
+
+        for rb in batches:
+            for blob in rb.column(0).to_pylist():
                 info = chunk.read_info(blob)
                 if info.dtype == "bytes" or info.codec == "list":
                     raise ValueError(
@@ -674,11 +529,12 @@ def token_histogram(chunks_df: DataFrame, column: str = "tokens") -> DataFrame:
                     dense, valid = vals[0], vals[1]
                     vals = np.asarray(dense)[np.asarray(valid, bool)]
                 u, c = np.unique(np.asarray(vals), return_counts=True)
-                yield pd.DataFrame(
-                    {"token": u.astype(np.int64), "cnt": c.astype(np.int64)}
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(u.astype(np.int64)), pa.array(c.astype(np.int64))],
+                    names=["token", "cnt"],
                 )
 
-    partial = pruned.mapInPandas(hist, "token long, cnt long")
+    partial = pruned.mapInArrow(hist, "token long, cnt long")
     return partial.groupBy("token").agg(F.sum("cnt").alias("n"))
 
 

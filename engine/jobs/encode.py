@@ -10,7 +10,8 @@ write_batch -> close``, ``src/file/writer.rs:119-248`` /
   then a streaming ``mapInArrow`` pass detects bucket boundaries and encodes
   every column with numpy kernels straight off the Arrow buffers (the
   column-chunk write loop, ``src/file/writer.rs:339-357``) — zero per-row
-  Python, no pandas sort or materialization, no whole-group shuffle;
+  Python, no pandas sort or materialization, no whole-group shuffle; NULL
+  values, lists and list elements come off the Arrow validity bitmaps;
 - each column emits one chunk row carrying the ``PageWriteSpec``-equivalent
   metrics (codec, n_values, raw/encoded bytes, crc32 —
   ``src/column/page.rs:151-158``) plus min/max statistics for integer
@@ -25,11 +26,11 @@ write_batch -> close``, ``src/file/writer.rs:119-248`` /
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
@@ -80,27 +81,6 @@ CHUNK_SCHEMA = StructType(
 
 _STAT_TRUNC = 64  # string min/max are truncated like parquet's column index
 
-# validity-companion suffixes (nullable int64 precision guard, see
-# encode_table): reserved column-name space
-VALID_SUFFIX = "__valid"
-EVALID_SUFFIX = "__evalid"
-
-
-def check_companion_names(columns: dict) -> None:
-    """Reject column sets where a data column is named like another
-    column's validity companion — the bucket encoder detects companions by
-    name, so '<int column>__valid' next to that int column would silently
-    be consumed as a validity mask (and decode would emit a duplicate
-    '<list column>__evalid' schema field). Shared by encode and decode."""
-    names = set(columns)
-    for name in names:
-        for suffix in (VALID_SUFFIX, EVALID_SUFFIX):
-            if f"{name}{suffix}" in names:
-                raise ValueError(
-                    f"column {name}{suffix!r} collides with the reserved "
-                    f"validity-companion name for {name!r}; rename it"
-                )
-
 # column name -> (kind, per-column codec override or None for auto-select)
 DEFAULT_COLUMNS = {
     "tokens": ("int32_list", None),
@@ -110,93 +90,11 @@ DEFAULT_COLUMNS = {
 }
 
 
-def _encode_group(
-    pdf: pd.DataFrame,
-    columns: dict,
-    block_codec: str | None = None,
-    bloom_cols: frozenset | None = None,
-) -> pd.DataFrame:
-    """Encode one bucket (rows NOT yet sorted) — test/compat entry."""
-    sort_col = "doc_id" if "doc_id" in pdf.columns else pdf.columns[1]
-    pdf = pdf.sort_values(sort_col, kind="mergesort").reset_index(drop=True)
-    return _encode_group_sorted(pdf, columns, block_codec, bloom_cols)
+@functools.cache
+def _chunk_arrow_schema():
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-
-def _scalar_dense(ser: pd.Series, kind: str):
-    """(dense ndarray of ``kind``, valid mask or None, null_count).
-
-    Arrow->pandas hands null ints/bools over as NaN/None-bearing object or
-    float columns, so a typed full-length numpy array cannot exist — the
-    dense (non-null) values plus a validity mask are the honest shape (the
-    reference shreds exactly this way, src/column/writer.rs:304-322). For
-    float columns NaN means NULL (Arrow validity is lost in the pandas hop).
-    """
-    na = ser.isna()
-    nc = int(na.sum())
-    dense_src = ser[~na] if nc else ser
-    dense = dense_src.to_numpy(dtype=kind)
-    if kind == "int64" and getattr(dense_src.dtype, "kind", "") == "f":
-        # misuse guard: a nullable int64 that bypassed encode_table's
-        # validity-companion split arrives here as float64 and silently
-        # rounds above 2^53 — fail loudly instead of corrupting IDs
-        if not np.array_equal(dense.astype("float64"), dense_src.to_numpy()):
-            raise ValueError(
-                "int64 column arrived as float64 with values above 2^53 "
-                "(lossy); encode via encode_table so the validity-companion "
-                "split keeps exact int64 through the pandas hop"
-            )
-    return dense, (~na).to_numpy() if nc else None, nc
-
-
-def _ba_from_series(ser: pd.Series, binary: bool):
-    """(lengths, concat data, valid mask or None, null_count) lifted
-    STRAIGHT from the column's Arrow buffers — Arrow already holds the
-    (offsets, data) representation, so no per-value Python objects are
-    materialized in the encode hot path (VERDICT r2 #3: ``tolist()`` was
-    the last per-row Python in encode)."""
-    import pyarrow as pa
-
-    arr = pa.Array.from_pandas(ser, type=pa.binary() if binary else pa.string())
-    if isinstance(arr, pa.ChunkedArray):
-        raise ValueError("byte-array chunk exceeds 2^31 bytes; page the column")
-    null_count = int(arr.null_count)
-    valid = None
-    if null_count:
-        valid = ~np.asarray(arr.is_null())
-        arr = arr.drop_null()
-    lengths, data = bytearrays.flat_from_arrow(arr)
-    return lengths, data, valid, null_count, arr
-
-
-def _list_from_series(ser: pd.Series, binary: bool):
-    """(list lengths int32, flat child Arrow array) lifted from a NON-NULL
-    pandas Series of lists via Arrow ListArray buffers — the list analog of
-    ``_ba_from_series``: Arrow already holds (offsets, values), so neither
-    the lengths nor the flattened elements ever pass through per-row Python
-    (closes the last ``tolist()`` in any encode path, VERDICT r3 #2).
-
-    ``binary=True`` pins the child type to ``pa.binary()``; otherwise the
-    child type is inferred (int64 stays exact, float32/float64 preserved).
-    Child nulls (None elements inside lists) stay Arrow nulls for the
-    caller to shred."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if len(ser) == 0:
-        return np.empty(0, np.int32), pa.array([], type=pa.binary() if binary else pa.null())
-    try:
-        arr = pa.Array.from_pandas(
-            ser, type=pa.list_(pa.binary()) if binary else None
-        )
-    except OverflowError as e:
-        raise ValueError(
-            "list elements out of int64 range (Arrow cannot represent "
-            "Python ints above 2^63-1 in a signed child)"
-        ) from e
-    if isinstance(arr, pa.ChunkedArray):
-        raise ValueError("list chunk exceeds 2^31 child values/bytes; page the column")
-    lengths = pc.list_value_length(arr).to_numpy(zero_copy_only=False).astype(np.int32)
-    return lengths, arr.flatten()
+    return to_arrow_schema(CHUNK_SCHEMA)
 
 
 def _ba_stats(arr) -> tuple[str, str]:
@@ -206,8 +104,7 @@ def _ba_stats(arr) -> tuple[str, str]:
     UTF-8; truncated like parquet's column-index bounds: a prefix of min is
     still a valid lower bound; for max a bare prefix would be a WRONG upper
     bound, so only truncate when the remaining prefix can be bumped (last
-    char < U+10FFFF). Shared by the pandas and Arrow-native encode paths so
-    the emitted statistics can never drift."""
+    char < U+10FFFF)."""
     import pyarrow.compute as pc
 
     mm = pc.min_max(arr)
@@ -227,313 +124,26 @@ def _ba_stats(arr) -> tuple[str, str]:
     return vmin_s, vmax_s
 
 
-def _encode_group_sorted(
-    pdf: pd.DataFrame,
-    columns: dict,
-    block_codec: str | None = None,
-    bloom_cols: frozenset | None = None,
-) -> pd.DataFrame:
-    """Encode one bucket whose rows are already doc_id-sorted (the streaming
-    path sorts in Tungsten via sortWithinPartitions — no pandas sort).
-    ``block_codec``: optional block compression stacked over every chunk
-    payload (WriterProperties.compression; reference compresses encoded page
-    bytes the same way)."""
-    chunk_id = pdf["chunk_id"].iloc[0]
-    n_docs = len(pdf)
-    meta = {
-        c: (pdf[c].iloc[0] if c in pdf.columns else None)
-        for c in skew.BUCKET_META_COLS
-    }
-    rows = []
-    for col, spec in columns.items():
-        kind, override = spec[0], spec[1]
-        # optional third element: candidate codec set (WriterProperties
-        # dictionary toggles narrow it, reference set_dictionary_enabled)
-        candidates = spec[2] if len(spec) > 2 and spec[2] else None
-        vmin = vmax = vmin_d = vmax_d = vmin_s = vmax_s = None
-        null_count = 0
-        bloom_blob = None
-        if kind == "int32_list":
-            if pdf[col].isna().any():
-                raise ValueError(
-                    f"column {col}: NULL token arrays are not part of the "
-                    "corpus contract; use the generic list:<kind> path for "
-                    "nullable lists"
-                )
-            # Arrow hands list elements over as int32 ndarrays already; one
-            # concatenate, no per-row conversion loop
-            arrays = pdf[col].to_numpy()
-            flat = (
-                np.concatenate(arrays).astype(np.int32, copy=False)
-                if len(arrays)
-                else np.empty(0, np.int32)
-            )
-            if override is None and flat.size > chunk.DEFAULT_PAGE_VALUES:
-                # oversized stream: page it so codec choice tracks regime
-                # shifts and decode memory stays bounded (reference page
-                # cutting, src/column/writer.rs:407-410)
-                codec = "paged"
-                blob = chunk.encode_chunk_paged(flat, "int32")
-            else:
-                codec, _, _ = selector.select_codec(
-                    flat,
-                    override=override,
-                    candidates=candidates or selector.INT_CANDIDATES,
-                )
-                blob = chunk.encode_chunk(flat, codec, "int32")
-            if flat.size:
-                vmin, vmax = int(flat.min()), int(flat.max())
-        elif kind in ("int32", "int64"):
-            vcol = f"{col}{VALID_SUFFIX}"
-            if vcol in pdf.columns:
-                # companion path: values arrived as EXACT zero-filled int64
-                # (never through float64), validity rides alongside
-                valid_arr = pdf[vcol].to_numpy(dtype=bool)
-                null_count = int((~valid_arr).sum())
-                full = pdf[col].to_numpy(dtype=kind)
-                if null_count:
-                    valid, vals = valid_arr, full[valid_arr]
-                else:
-                    valid, vals = None, full
-            else:
-                vals, valid, null_count = _scalar_dense(pdf[col], kind)
-            codec, _, _ = selector.select_codec(
-                vals, override=override, candidates=candidates or selector.INT_CANDIDATES
-            )
-            blob = chunk.encode_chunk(vals, codec, kind, valid=valid)
-            if vals.size:
-                vmin, vmax = int(vals.min()), int(vals.max())
-        elif kind in ("float32", "float64"):
-            vcol = f"{col}{VALID_SUFFIX}"
-            if vcol in pdf.columns:
-                # companion path: NULL was recorded JVM-side BEFORE the
-                # pandas hop, so a genuine NaN value stays a value (the
-                # reference keeps NaN distinct from null and has explicit
-                # NaN statistics rules, src/basic.rs:331-336)
-                valid_arr = pdf[vcol].to_numpy(dtype=bool)
-                null_count = int((~valid_arr).sum())
-                full = pdf[col].to_numpy(dtype=kind)
-                if null_count:
-                    valid, vals = valid_arr, full[valid_arr]
-                else:
-                    valid, vals = None, full
-            else:
-                vals, valid, null_count = _scalar_dense(pdf[col], kind)
-            codec = selector.select_float_codec(vals, override=override)
-            blob = chunk.encode_chunk(vals, codec, kind, valid=valid)
-            if vals.size and not np.isnan(vals).all():
-                # NaN never enters min/max (parquet sort-order rule); an
-                # all-NaN chunk carries no float stats and the pruning
-                # keep-on-absent rule retains it
-                vmin_d = float(np.nanmin(vals))
-                vmax_d = float(np.nanmax(vals))
-        elif kind == "bool":
-            vals, valid, null_count = _scalar_dense(pdf[col], kind)
-            codec = selector.select_bool_codec(vals, override=override)
-            blob = chunk.encode_chunk(vals, codec, "bool", valid=valid)
-            if vals.size:
-                # booleans carry min/max as 0/1 in the integer family
-                # (parquet does the same; false < true sort order,
-                # reference src/file/statistics.rs:246-340)
-                vmin, vmax = int(vals.min()), int(vals.max())
-        elif kind.startswith("list:"):
-            elem = kind[5:]
-            ser = pdf[col]
-            na = ser.isna()
-            null_count = int(na.sum())
-            valid = (~na).to_numpy() if null_count else None
-            dense_ser = ser[~na] if null_count else ser
-            # lengths + flat child lifted from Arrow ListArray buffers
-            # (offsets -> lengths, values child) exactly like _ba_from_series
-            # does for strings — no per-row ``tolist()``/concatenate loops
-            # (reference batch value paths, src/column/writer.rs:204-253)
-            lengths, child = _list_from_series(
-                dense_ser, binary=elem in ("bytes", "binary")
-            )
-            codec = "list"
-            if elem in ("bytes", "binary"):
-                if child.null_count:
-                    elem_valid = ~np.asarray(child.is_null())
-                    child = child.drop_null()
-                else:
-                    elem_valid = None
-                ba = bytearrays.flat_from_arrow(child)
-                blob = chunk.encode_chunk_list(
-                    lengths, ba, "bytes", valid=valid, elem_valid=elem_valid
-                )
-            else:
-                import pyarrow as pa
-
-                np_elem = np.dtype(bool) if elem == "bool" else np.dtype(elem)
-                evcol = f"{col}{EVALID_SUFFIX}"
-                if (
-                    evcol not in pdf.columns
-                    and child.null_count
-                    and pa.types.is_integer(child.type)
-                ):
-                    # Arrow preserved exact integers ALONGSIDE element
-                    # validity (object-list input, e.g. [2**60, None]):
-                    # shred from the Arrow buffers directly — the old
-                    # to_numpy hop rendered this case as float64 + NaN and
-                    # tripped the 2^53 guard on values it used to encode
-                    # exactly (r4 review)
-                    elem_na = np.asarray(child.is_null())
-                    elem_valid = ~elem_na
-                    try:
-                        # checked cast: Arrow may have inferred uint64 for
-                        # Python ints above int64 max — a bare numpy astype
-                        # would WRAP those silently (r4 review #2)
-                        dense_arr = child.drop_null().cast(
-                            pa.from_numpy_dtype(np_elem)
-                        )
-                    except pa.lib.ArrowInvalid as e:
-                        raise ValueError(
-                            f"list:{elem} elements out of range for {elem}: {e}"
-                        ) from e
-                    dense = dense_arr.to_numpy(zero_copy_only=False).astype(
-                        np_elem, copy=False
-                    )
-                    flat0 = src = dense  # exact; guard below is a no-op
-                else:
-                    # nulled child slots surface as NaN (numeric) / None
-                    # (bool object) — identical to what the Spark
-                    # Arrow->pandas hop produces, so the downstream na
-                    # logic covers both sources
-                    flat0 = (
-                        child.to_numpy(zero_copy_only=False)
-                        if len(child)
-                        else np.empty(0, np_elem)
-                    )
-                    if evcol in pdf.columns:
-                        # companion path: int64 elements arrived exact
-                        # (zero-filled, never through float64); validity
-                        # rides as a parallel bool-array column
-                        ev_ser = pdf[evcol]
-                        _, ev_child = _list_from_series(
-                            ev_ser[~na] if null_count else ev_ser, binary=False
-                        )
-                        ev_flat = (
-                            ev_child.to_numpy(zero_copy_only=False).astype(bool)
-                            if len(ev_child)
-                            else np.empty(0, bool)
-                        )
-                        elem_na = ~ev_flat
-                    elif flat0.dtype == object:
-                        elem_na = pd.isna(flat0)
-                    elif np.issubdtype(flat0.dtype, np.floating):
-                        # int lists with nulls arrive as float+NaN from the
-                        # SPARK hop; for float lists NaN means NULL (same
-                        # convention as scalar float columns)
-                        elem_na = np.isnan(flat0.astype("float64"))
-                    else:
-                        elem_na = None
-                    if (
-                        flat0.dtype.kind in "ui"
-                        and np_elem.kind == "i"
-                        and flat0.size
-                        and (
-                            flat0.max() > np.iinfo(np_elem).max
-                            or (
-                                flat0.dtype.kind == "i"
-                                and flat0.min() < np.iinfo(np_elem).min
-                            )
-                        )
-                    ):
-                        # integer children outside the target range would
-                        # WRAP under a bare astype — covers uint64 above
-                        # int64 max AND int64 children narrowing to
-                        # list:int32 (r4 review #2 + #3)
-                        raise ValueError(
-                            f"list:{elem} elements out of range for {elem}"
-                        )
-                    if elem_na is not None and elem_na.any():
-                        elem_valid = ~elem_na
-                        dense = flat0[elem_valid].astype(np_elem)
-                        src = flat0[elem_valid]
-                    else:
-                        elem_valid = None
-                        dense = flat0.astype(np_elem)
-                        src = flat0
-                if elem == "int64" and np.issubdtype(flat0.dtype, np.floating):
-                    # same misuse guard as _scalar_dense: int64 list elements
-                    # that detoured through float64 round above 2^53
-                    if not np.array_equal(
-                        dense.astype("float64"), src.astype("float64")
-                    ):
-                        raise ValueError(
-                            "list:int64 elements arrived as float64 with "
-                            "values above 2^53 (lossy); encode via "
-                            "encode_table so the __evalid companion keeps "
-                            "exact int64 through the pandas hop"
-                        )
-                blob = chunk.encode_chunk_list(
-                    lengths, dense, elem, valid=valid, elem_valid=elem_valid
-                )
-                if dense.size:
-                    if elem in ("int32", "int64"):
-                        vmin, vmax = int(dense.min()), int(dense.max())
-                    elif elem in ("float32", "float64") and not np.isnan(dense).all():
-                        vmin_d = float(np.nanmin(dense))
-                        vmax_d = float(np.nanmax(dense))
-        elif kind in ("bytes", "binary"):
-            lengths, data, valid, null_count, arr = _ba_from_series(
-                pdf[col], binary=kind == "binary"
-            )
-            if bloom_cols and col in bloom_cols:
-                from .. import bloom as bloom_mod
-
-                bloom_blob = bloom_mod.build(lengths, data)
-            codec = selector.select_ba_codec(lengths, data, override=override)
-            if candidates and codec not in candidates:
-                codec = "delta_length_ba"
-            blob = chunk.encode_chunk((lengths, data), codec, "bytes", valid=valid)
-            if len(arr) and kind == "bytes":
-                vmin_s, vmax_s = _ba_stats(arr)
-        else:
-            raise ValueError(f"unknown column kind {kind}")
-        if block_codec:
-            blob = chunk.compress_chunk(blob, block_codec)
-        info = chunk.read_info(blob)
-        rows.append(
-            {
-                "chunk_id": chunk_id,
-                **meta,
-                "column": col,
-                "codec": codec,
-                "n_values": info.n_values,
-                "n_docs": n_docs,
-                "raw_bytes": info.raw_bytes,
-                "enc_bytes": info.enc_bytes,
-                "checksum": info.checksum,
-                "vmin": vmin,
-                "vmax": vmax,
-                "vmin_d": vmin_d,
-                "vmax_d": vmax_d,
-                "vmin_s": vmin_s,
-                "vmax_s": vmax_s,
-                "null_count": null_count,
-                "bloom": bloom_blob,
-                "payload": blob,
-            }
-        )
-    return pd.DataFrame(rows)
+def _num_stats(vals: np.ndarray, kind: str) -> dict:
+    """min/max statistics of dense values: ints and bools (as 0/1, false <
+    true, reference src/file/statistics.rs:246-340) in the integer family,
+    floats in the double family. NaN never enters min/max (parquet
+    sort-order rule); an all-NaN chunk carries no float stats and the
+    pruning keep-on-absent rule retains it."""
+    if not vals.size:
+        return {}
+    if kind in ("float32", "float64"):
+        if np.isnan(vals).all():
+            return {}
+        return {"vmin_d": float(np.nanmin(vals)), "vmax_d": float(np.nanmax(vals))}
+    return {"vmin": int(vals.min()), "vmax": int(vals.max())}
 
 
-# Arrow-native encode hot path (guide §4.2: hand whole Arrow batches to
-# vectorized kernels; the pandas hop materialized one ndarray object per row
-# for list columns and re-built Arrow arrays for byte-array columns). Kinds
-# outside this set — or columns whose runtime null-ness needs the pandas
-# NaN/None conventions (validity companions, nullable scalars, list:*,
-# floats) — fall back to ``_encode_group_sorted`` over ``tbl.to_pandas()``,
-# which is behavior-identical to the old mapInPandas input.
-_FAST_SCALAR_NP = {"int32": np.dtype(np.int32), "int64": np.dtype(np.int64),
-                   "bool": np.dtype(bool)}
-
-
-def _one_chunk(tbl, name: str):
-    """Single contiguous Arrow array for ``tbl[name]`` (the table arrives
-    combine_chunks()ed; >1 chunk means a >2^31-byte column that the frame
-    format requires paging for — same guard as ``flat_from_arrow``)."""
+def _one_chunk(tbl, name: str, kind: str):
+    """Single contiguous Arrow array for ``tbl[name]``. The table arrives
+    combine_chunks()ed, so more than one chunk means the bucket's column
+    overflowed Arrow's int32 offsets — byte-array data or list child values
+    past 2^31 — which the frame format requires paging for."""
     ca = tbl.column(name)
     if ca.num_chunks == 1:
         return ca.chunk(0)
@@ -541,120 +151,171 @@ def _one_chunk(tbl, name: str):
         import pyarrow as pa
 
         return pa.array([], type=ca.type)
-    raise ValueError("byte-array chunk exceeds 2^31 bytes; page the column")
+    if kind in ("bytes", "binary"):
+        what = "bytes"
+    elif kind in ("list:bytes", "list:binary"):
+        what = "child values or bytes"
+    else:
+        what = "child values"
+    raise ValueError(
+        f"column {name!r} ({kind}): bucket exceeds 2^31 {what}; "
+        "page the column (smaller rows_per_bucket)"
+    )
 
 
-def _group_is_fast(tbl, columns: dict) -> bool:
-    """True when every column of this bucket can take the Arrow-native
-    path with results identical to the pandas path."""
-    names = set(tbl.schema.names)
-    for col, spec in columns.items():
-        kind = spec[0]
-        if kind in ("bytes", "binary"):
-            continue  # fully native incl. nulls (same Arrow ops as before)
-        ca = tbl.column(col)
-        if kind == "int32_list":
-            if ca.null_count:
-                return False  # record nulls: pandas path raises the contract error
-            if any(c.flatten().null_count for c in ca.chunks):
-                return False  # element nulls: keep pandas semantics
-            continue
-        if (
-            kind in _FAST_SCALAR_NP
-            and f"{col}{VALID_SUFFIX}" not in names
-            and ca.null_count == 0
-        ):
-            continue
-        return False
-    return True
+def _cast_input(arr, kind: str, col: str):
+    """``arr`` as the Arrow type of the scalar ``kind``. Input of another
+    type goes through a SAFE cast, so a lossy float->int, a uint64 above
+    int64 max or an int64 narrowed to int32 raises instead of wrapping."""
+    import pyarrow as pa
+
+    target = pa.from_numpy_dtype(np.dtype(kind))
+    if arr.type == target:
+        return arr
+    try:
+        return arr.cast(target, safe=True)
+    except (pa.ArrowInvalid, pa.ArrowNotImplementedError) as e:
+        raise ValueError(
+            f"column {col!r}: {arr.type} values do not fit {kind} "
+            f"(lossy or out of range cast): {e}"
+        ) from e
+
+
+def _shred(arr):
+    """(non-null values, validity mask or None, null_count) straight off the
+    Arrow validity bitmap — the reference's nullable write shape, dense
+    values plus def levels (src/column/writer.rs:304-322). NaN is a value,
+    never a null."""
+    null_count = arr.null_count
+    if not null_count:
+        return arr, None, 0
+    valid = ~arr.is_null().to_numpy(zero_copy_only=False)
+    return arr.drop_null(), valid, null_count
+
+
+def _numpy(arr, kind: str) -> np.ndarray:
+    return np.ascontiguousarray(arr.to_numpy(zero_copy_only=False), dtype=kind)
+
+
+def _encode_column(arr, col: str, spec, bloom: bool):
+    """One column of one bucket -> (codec, framed blob, null_count, stats,
+    bloom blob or None)."""
+    kind, override = spec[0], spec[1]
+    # optional third element: candidate codec set (WriterProperties
+    # dictionary toggles narrow it, reference set_dictionary_enabled)
+    candidates = spec[2] if len(spec) > 2 and spec[2] else None
+    if kind == "int32_list":
+        if arr.null_count:
+            raise ValueError(
+                f"column {col}: NULL token arrays are not part of the "
+                "corpus contract; use the generic list:<kind> path for "
+                "nullable lists"
+            )
+        child = _cast_input(arr.flatten(), "int32", col)
+        if child.null_count:
+            raise ValueError(
+                f"column {col}: NULL token elements are not part of the "
+                "corpus contract; use list:int32 for lists with NULL elements"
+            )
+        flat = _numpy(child, "int32")
+        if override is None and flat.size > chunk.DEFAULT_PAGE_VALUES:
+            # oversized stream: page it so codec choice tracks regime
+            # shifts and decode memory stays bounded (reference page
+            # cutting, src/column/writer.rs:407-410)
+            codec = "paged"
+            blob = chunk.encode_chunk_paged(flat, "int32")
+        else:
+            codec, _, _ = selector.select_codec(
+                flat,
+                override=override,
+                candidates=candidates or selector.INT_CANDIDATES,
+            )
+            blob = chunk.encode_chunk(flat, codec, "int32")
+        return codec, blob, 0, _num_stats(flat, "int32"), None
+    if kind in ("bytes", "binary"):
+        dense, valid, null_count = _shred(arr)
+        lengths, data = bytearrays.flat_from_arrow(dense)
+        bloom_blob = None
+        if bloom:
+            from .. import bloom as bloom_mod
+
+            bloom_blob = bloom_mod.build(lengths, data)
+        codec = selector.select_ba_codec(lengths, data, override=override)
+        if candidates and codec not in candidates:
+            codec = "delta_length_ba"
+        blob = chunk.encode_chunk((lengths, data), codec, "bytes", valid=valid)
+        stats = {}
+        if len(dense) and kind == "bytes":
+            stats = dict(zip(("vmin_s", "vmax_s"), _ba_stats(dense)))
+        return codec, blob, null_count, stats, bloom_blob
+    if kind.startswith("list:"):
+        import pyarrow.compute as pc
+
+        # lengths + flat child lifted from the ListArray buffers (offsets,
+        # values child); record and element nulls from the two validity
+        # bitmaps (Dremel record shredding, reference
+        # src/record/reader.rs:159-240)
+        elem = kind[5:]
+        dense, valid, null_count = _shred(arr)
+        lengths = pc.list_value_length(dense).to_numpy(zero_copy_only=False)
+        child = dense.flatten()
+        stats = {}
+        if elem in ("bytes", "binary"):
+            child, elem_valid, _ = _shred(child)
+            values, elem = bytearrays.flat_from_arrow(child), "bytes"
+        else:
+            child, elem_valid, _ = _shred(_cast_input(child, elem, col))
+            values = _numpy(child, elem)
+            if elem != "bool":
+                stats = _num_stats(values, elem)
+        blob = chunk.encode_chunk_list(
+            lengths, values, elem, valid=valid, elem_valid=elem_valid
+        )
+        return "list", blob, null_count, stats, None
+    if kind in ("int32", "int64", "float32", "float64", "bool"):
+        dense, valid, null_count = _shred(_cast_input(arr, kind, col))
+        vals = _numpy(dense, kind)
+        if kind == "bool":
+            codec = selector.select_bool_codec(vals, override=override)
+        elif kind in ("float32", "float64"):
+            codec = selector.select_float_codec(vals, override=override)
+        else:
+            codec, _, _ = selector.select_codec(
+                vals,
+                override=override,
+                candidates=candidates or selector.INT_CANDIDATES,
+            )
+        blob = chunk.encode_chunk(vals, codec, kind, valid=valid)
+        return codec, blob, null_count, _num_stats(vals, kind), None
+    raise ValueError(f"unknown column kind {kind}")
 
 
 def _encode_group_arrow(
     tbl,
     columns: dict,
-    block_codec: str | None,
-    bloom_cols: frozenset | None,
-    arrow_schema,
+    block_codec: str | None = None,
+    bloom_cols: frozenset = frozenset(),
 ):
-    """Encode one bucket held as a (combined) Arrow table -> one RecordBatch
-    of chunk rows. Byte-identical to ``_encode_group_sorted``: the codec
-    kernels receive the same numpy arrays, only the pandas materialization
-    is gone."""
+    """Encode one bucket held as a (combined) Arrow table whose rows are
+    already sorted -> one RecordBatch of chunk rows. Every column is read
+    straight off its Arrow buffers and validity bitmaps (guide §4.2: hand
+    whole Arrow batches to vectorized kernels). ``block_codec``: optional
+    block compression stacked over every chunk payload
+    (WriterProperties.compression; the reference compresses encoded page
+    bytes the same way)."""
     import pyarrow as pa
 
-    if not _group_is_fast(tbl, columns):
-        out = _encode_group_sorted(tbl.to_pandas(), columns, block_codec, bloom_cols)
-        return pa.RecordBatch.from_pandas(
-            out, schema=arrow_schema, preserve_index=False
-        )
-    names = set(tbl.schema.names)
-    chunk_id = _one_chunk(tbl, "chunk_id")[0].as_py()
-    n_docs = tbl.num_rows
+    names = set(tbl.column_names)
+    chunk_id = tbl.column("chunk_id")[0].as_py()
     meta = {
-        c: (_one_chunk(tbl, c)[0].as_py() if c in names else None)
+        c: (tbl.column(c)[0].as_py() if c in names else None)
         for c in skew.BUCKET_META_COLS
     }
     rows = []
     for col, spec in columns.items():
-        kind, override = spec[0], spec[1]
-        candidates = spec[2] if len(spec) > 2 and spec[2] else None
-        vmin = vmax = vmin_d = vmax_d = vmin_s = vmax_s = None
-        null_count = 0
-        bloom_blob = None
-        if kind == "int32_list":
-            arr = _one_chunk(tbl, col)
-            flat = arr.flatten().to_numpy(zero_copy_only=False).astype(
-                np.int32, copy=False
-            )
-            if override is None and flat.size > chunk.DEFAULT_PAGE_VALUES:
-                codec = "paged"
-                blob = chunk.encode_chunk_paged(flat, "int32")
-            else:
-                codec, _, _ = selector.select_codec(
-                    flat,
-                    override=override,
-                    candidates=candidates or selector.INT_CANDIDATES,
-                )
-                blob = chunk.encode_chunk(flat, codec, "int32")
-            if flat.size:
-                vmin, vmax = int(flat.min()), int(flat.max())
-        elif kind in ("int32", "int64", "bool"):
-            vals = np.ascontiguousarray(
-                _one_chunk(tbl, col).to_numpy(zero_copy_only=False),
-                dtype=_FAST_SCALAR_NP[kind],
-            )
-            if kind == "bool":
-                codec = selector.select_bool_codec(vals, override=override)
-            else:
-                codec, _, _ = selector.select_codec(
-                    vals,
-                    override=override,
-                    candidates=candidates or selector.INT_CANDIDATES,
-                )
-            blob = chunk.encode_chunk(vals, codec, kind)
-            if vals.size:
-                vmin, vmax = int(vals.min()), int(vals.max())
-        elif kind in ("bytes", "binary"):
-            arr = _one_chunk(tbl, col)
-            null_count = int(arr.null_count)
-            if null_count:
-                valid = ~arr.is_null().to_numpy(zero_copy_only=False)
-                arr = arr.drop_null()
-            else:
-                valid = None
-            lengths, data = bytearrays.flat_from_arrow(arr)
-            if bloom_cols and col in bloom_cols:
-                from .. import bloom as bloom_mod
-
-                bloom_blob = bloom_mod.build(lengths, data)
-            codec = selector.select_ba_codec(lengths, data, override=override)
-            if candidates and codec not in candidates:
-                codec = "delta_length_ba"
-            blob = chunk.encode_chunk((lengths, data), codec, "bytes", valid=valid)
-            if len(arr) and kind == "bytes":
-                vmin_s, vmax_s = _ba_stats(arr)
-        else:  # unreachable behind _group_is_fast; mirror the pandas error
-            raise ValueError(f"unknown column kind {kind}")
+        codec, blob, null_count, stats, bloom_blob = _encode_column(
+            _one_chunk(tbl, col, spec[0]), col, spec, col in bloom_cols
+        )
         if block_codec:
             blob = chunk.compress_chunk(blob, block_codec)
         info = chunk.read_info(blob)
@@ -665,27 +326,20 @@ def _encode_group_arrow(
                 "column": col,
                 "codec": codec,
                 "n_values": info.n_values,
-                "n_docs": n_docs,
+                "n_docs": tbl.num_rows,
                 "raw_bytes": info.raw_bytes,
                 "enc_bytes": info.enc_bytes,
                 "checksum": info.checksum,
-                "vmin": vmin,
-                "vmax": vmax,
-                "vmin_d": vmin_d,
-                "vmax_d": vmax_d,
-                "vmin_s": vmin_s,
-                "vmax_s": vmax_s,
+                **stats,
                 "null_count": null_count,
                 "bloom": bloom_blob,
                 "payload": blob,
             }
         )
+    schema = _chunk_arrow_schema()
     return pa.RecordBatch.from_arrays(
-        [
-            pa.array([r[f.name] for r in rows], type=f.type)
-            for f in arrow_schema
-        ],
-        schema=arrow_schema,
+        [pa.array([r.get(f.name) for r in rows], type=f.type) for f in schema],
+        schema=schema,
     )
 
 
@@ -886,52 +540,6 @@ def encode_table(
             columns[col] = ColumnSpec(
                 kind, override, cands, spec[3] if len(spec) > 3 else None
             )
-    # Validity companions, recorded JVM-side BEFORE the pandas hop, fix two
-    # distinct Arrow->pandas lossy conversions:
-    # - nullable int64: a batch containing any NULL hands over as float64,
-    #   silently rounding values above 2^53 (bigint IDs, decimal unscaled
-    #   values) — int32 survives the detour exactly and needs no companion;
-    # - float32/float64: NULL becomes NaN in pandas, indistinguishable from
-    #   a genuine NaN value — the companion keeps NaN a value and NULL a
-    #   null (reference NaN statistics rules, src/basic.rs:331-336). Float
-    #   companions apply even to non-nullable fields: NaN can ride those
-    #   too, and without the mask it would decode as NULL.
-    _SCALAR_PHYS = {"int64": "long", "float32": "float", "float64": "double"}
-    companions: list[str] = []
-    check_companion_names(columns)
-    for name, spec in columns.items():
-        field = df.schema[name]
-        kind = spec[0]
-        needs_scalar = kind == "int64" and field.nullable or kind in (
-            "float32",
-            "float64",
-        )
-        needs_list = (
-            kind == "list:int64"
-            and isinstance(field.dataType, ArrayType)
-            and field.dataType.containsNull
-        ) or kind in ("list:float32", "list:float64")
-        if needs_scalar:
-            vcol = f"{name}{VALID_SUFFIX}"
-            if vcol in df.columns:
-                raise ValueError(f"column {vcol} collides with a validity companion")
-            phys = _SCALAR_PHYS[kind]
-            df = df.withColumn(vcol, F.col(f"`{name}`").isNotNull()).withColumn(
-                name, F.coalesce(F.col(f"`{name}`"), F.lit(0).cast(phys))
-            )
-            companions.append(vcol)
-        elif needs_list:
-            vcol = f"{name}{EVALID_SUFFIX}"
-            if vcol in df.columns:
-                raise ValueError(f"column {vcol} collides with a validity companion")
-            phys = _SCALAR_PHYS[kind[5:]]
-            # closure factory, NOT a default arg: F.transform treats a
-            # two-parameter lambda as (element, index)
-            fill = (lambda p: lambda x: F.coalesce(x, F.lit(0).cast(p)))(phys)
-            df = df.withColumn(
-                vcol, F.transform(F.col(f"`{name}`"), lambda x: x.isNotNull())
-            ).withColumn(name, F.transform(F.col(f"`{name}`"), fill))
-            companions.append(vcol)
     bucketed = skew.plan_buckets(
         df,
         key=bucket_key,
@@ -947,15 +555,9 @@ def encode_table(
         )
     # backtick-quote: flattened struct leaves carry literal '$'/'.' chars
     # (plan_buckets already rejected inputs named like the meta columns)
-    cols = (
-        [F.col(f"`{c}`") for c in ("chunk_id", *skew.BUCKET_META_COLS)]
-        + [F.col(f"`{c}`") for c in columns]
-        + [F.col(f"`{c}`") for c in companions]
-    )
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(CHUNK_SCHEMA)
+    cols = [
+        F.col(f"`{c}`") for c in ("chunk_id", *skew.BUCKET_META_COLS, *columns)
+    ]
 
     def encode_stream(batches):
         """Streaming bucket encoder over (chunk_id, doc_id)-sorted Arrow
@@ -966,9 +568,7 @@ def encode_table(
 
         for pending in _chunk_groups(batches):
             tbl = pa.Table.from_batches(pending).combine_chunks()
-            yield _encode_group_arrow(
-                tbl, columns, block_codec, bloom_cols, arrow_schema
-            )
+            yield _encode_group_arrow(tbl, columns, block_codec, bloom_cols)
 
     # one shuffle: co-locate buckets, sort (chunk_id, doc_id) in Tungsten,
     # then a pure partition-parallel mapInArrow encode pass

@@ -131,7 +131,7 @@ def test_list_lengths_disagree_with_elements():
     )
     decoded = chunk.decode_chunk(header + payload)  # frame-level OK
     with pytest.raises(ValueError, match="lengths sum"):
-        decode_job._list_series(decoded, "int32")
+        decode_job._column_array(decoded, "list:int32")
 
 
 def test_bad_block_codec_id():

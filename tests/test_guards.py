@@ -3,56 +3,44 @@ ValueErrors instead of silently corrupting data (ADVICE r2 items: int64
 float64-detour rounding, int32 Arrow-offset wraparound)."""
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from engine.jobs import decode as decode_job
 from engine.jobs import encode as encode_job
 
 
-def test_scalar_int64_float_detour_raises():
-    """Nullable int64 that bypassed encode_table's validity-companion split
-    arrives as float64; inexact values must fail loudly, not round."""
-    pdf = pd.DataFrame(
-        {
-            "chunk_id": ["c"] * 3,
-            "doc_id": ["a", "b", "c"],
-            "v": [1.0, 3.5, 2.0],  # 3.5 cannot be an int64
-        }
+def _encode_one(values, kind):
+    """Encode ``values`` as column ``v`` of one doc_id-sorted bucket, the
+    Arrow table the streaming encoder hands each bucket to; -> chunk row."""
+    n = len(values)
+    tbl = pa.table(
+        {"chunk_id": ["c"] * n, "doc_id": [f"d{i}" for i in range(n)], "v": values}
     )
+    return encode_job._encode_group_arrow(tbl, {"v": (kind, None)}).to_pylist()[0]
+
+
+def test_scalar_int64_float_detour_raises():
+    """A float64 column declared int64 goes through a safe cast; inexact
+    values must fail loudly, not round."""
     with pytest.raises(ValueError, match="lossy"):
-        encode_job._encode_group(pdf, {"v": ("int64", None)})
+        _encode_one(pa.array([1.0, 3.5, 2.0]), "int64")  # 3.5 cannot be an int64
 
 
 def test_scalar_int64_exact_floats_pass():
-    pdf = pd.DataFrame(
-        {
-            "chunk_id": ["c"] * 3,
-            "doc_id": ["a", "b", "c"],
-            "v": [1.0, np.nan, float(2**60)],  # all representable exactly
-        }
-    )
-    out = encode_job._encode_group(pdf, {"v": ("int64", None)})
-    assert out["null_count"].iloc[0] == 1
+    # all representable exactly
+    row = _encode_one(pa.array([1.0, None, float(2**60)]), "int64")
+    assert row["null_count"] == 1
 
 
 def test_list_int64_float_detour_raises():
-    pdf = pd.DataFrame(
-        {
-            "chunk_id": ["c"] * 2,
-            "doc_id": ["a", "b"],
-            "v": [np.array([1.0, 2.5]), np.array([3.0])],
-        }
-    )
     with pytest.raises(ValueError, match="lossy"):
-        encode_job._encode_group(pdf, {"v": ("list:int64", None)})
+        _encode_one(pa.array([[1.0, 2.5], [3.0]]), "list:int64")
 
 
 def test_nan_survives_null_free_chunk(spark):
     """A float chunk with NaN but ZERO nulls must still return NaN as a
-    VALUE: Spark's serializer masks plain numpy series with isnull() (NaN
-    included), so the decode path must hand back a masked extension array
-    even when nothing is null."""
+    VALUE, never as NULL."""
     from pyspark.sql import functions as F
 
     df = spark.range(0, 100).select(
@@ -94,23 +82,13 @@ def test_string_offsets_overflow_guard():
 
 
 def test_list_int64_object_nulls_stay_exact():
-    """Object lists mixing exact big ints with None keep int64 precision:
-    Arrow preserves the integers alongside element validity, and the encode
-    path must shred from those buffers instead of the float64+NaN hop that
-    would trip the 2^53 guard on values it used to encode exactly (r4
-    review finding)."""
+    """Lists mixing exact big ints with NULL elements keep int64 precision:
+    the encoder shreds the element validity bitmap and the int64 values
+    straight from the Arrow buffers, never through float64."""
     from engine import chunk
 
     big = 2**60 + 12345  # NOT float64-representable
-    pdf = pd.DataFrame(
-        {
-            "chunk_id": ["c"] * 2,
-            "doc_id": ["a", "b"],
-            "v": [[big, None, 7], [None, big + 1]],
-        }
-    )
-    out = encode_job._encode_group(pdf, {"v": ("list:int64", None)})
-    row = out[out["column"] == "v"].iloc[0]
+    row = _encode_one(pa.array([[big, None, 7], [None, big + 1]]), "list:int64")
     assert row["null_count"] == 0  # no null LISTS (element nulls are inner)
     lengths, (values, elem_valid) = chunk.decode_chunk(row["payload"])
     np.testing.assert_array_equal(lengths, [3, 2])
@@ -121,50 +99,55 @@ def test_list_int64_object_nulls_stay_exact():
 
 
 def test_list_int64_uint64_overflow_raises():
-    """Ints above int64 max must fail loudly, never wrap negative (r4
-    review #2). Two entry shapes: Python-int object lists die at Arrow
-    inference (converted to a contextual ValueError); numpy uint64-array
-    children infer list<uint64> and must be caught before the signed
-    astype would wrap them."""
-    pdf = pd.DataFrame(
-        {
-            "chunk_id": ["c"] * 2,
-            "doc_id": ["a", "b"],
-            "v": [[2**63 + 5, None], [1]],
-        }
-    )
+    """Ints above int64 max must fail loudly, never wrap negative: uint64
+    children (with or without NULL elements) do not survive the safe cast
+    to int64."""
     with pytest.raises(ValueError, match="int64"):
-        encode_job._encode_group(pdf, {"v": ("list:int64", None)})
-    pdf2 = pd.DataFrame(
-        {
-            "chunk_id": ["c"] * 2,
-            "doc_id": ["a", "b"],
-            "v": [
-                np.array([2**63 + 5], np.uint64),
-                np.array([1], np.uint64),
-            ],
-        }
-    )
+        _encode_one(
+            pa.array([[2**63 + 5, None], [1]], pa.list_(pa.uint64())), "list:int64"
+        )
     with pytest.raises(ValueError, match="out of range"):
-        encode_job._encode_group(pdf2, {"v": ("list:int64", None)})
+        _encode_one(
+            pa.array([np.array([2**63 + 5], np.uint64), np.array([1], np.uint64)]),
+            "list:int64",
+        )
 
 
 def test_list_int32_narrowing_overflow_raises():
     """int64 children narrowing to list:int32 must fail loudly, not wrap
-    (r4 third review: 2**40 silently became 0)."""
-    pdf = pd.DataFrame(
-        {
-            "chunk_id": ["c"] * 2,
-            "doc_id": ["a", "b"],
-            "v": [[2**40], [1]],
-        }
-    )
+    (2**40 must never silently become 0)."""
     with pytest.raises(ValueError, match="out of range"):
-        encode_job._encode_group(pdf, {"v": ("list:int32", None)})
+        _encode_one(pa.array([[2**40], [1]]), "list:int32")
     # negative out-of-range too
-    pdf2 = pdf.copy(); pdf2["v"] = [[-(2**40)], [1]]
     with pytest.raises(ValueError, match="out of range"):
-        encode_job._encode_group(pdf2, {"v": ("list:int32", None)})
+        _encode_one(pa.array([[-(2**40)], [1]]), "list:int32")
+
+
+def test_null_token_element_raises(spark):
+    """A NULL element inside an int32_list token array must be rejected,
+    never encoded as some int32 value."""
+    df = spark.createDataFrame(
+        [("d1", [1, None, 3], 3, "web"), ("d2", [4], 1, "web")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    with pytest.raises(Exception, match="NULL token elements.*list:int32"):
+        encode_job.encode_table(df).collect()
+
+
+@pytest.mark.parametrize(
+    "kind,values,what",
+    [
+        ("bytes", pa.chunked_array([["a"], ["b"]]), "bytes"),
+        ("int32_list", pa.chunked_array([[[1]], [[2]]]), "child values"),
+        ("list:bytes", pa.chunked_array([[["a"]], [["b"]]]), "child values or bytes"),
+    ],
+)
+def test_multi_chunk_column_error_names_column_and_kind(kind, values, what):
+    """A bucket column Arrow could not combine into one array (offsets past
+    2^31) is reported with its name, its kind and what overflowed."""
+    with pytest.raises(ValueError) as ei:
+        _encode_one(values, kind)
+    assert str(ei.value).startswith(f"column 'v' ({kind}): bucket exceeds 2^31 {what};")
 
 
 def test_decode_ppm_negative_dims_raise():

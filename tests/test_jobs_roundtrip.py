@@ -174,37 +174,6 @@ def test_decode_tokens_agg_matches_explode_aggregate(spark, corpus):
     assert "emptydoc" not in set(fused["doc_id"])
 
 
-def test_arrow_encode_fast_path_matches_pandas_path(spark, corpus):
-    """The Arrow-native bucket encoder (r8) must emit byte-identical chunk
-    rows to the pandas path it replaced — same codecs, payloads, checksums,
-    statistics."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    bucketed = skew.plan_buckets(corpus, rows_per_bucket=64)
-    pdf = (
-        bucketed.orderBy("chunk_id", "doc_id")
-        .toPandas()
-        .reset_index(drop=True)
-    )
-    one = pdf[pdf["chunk_id"] == pdf["chunk_id"].iloc[0]].reset_index(drop=True)
-    cols = dict(encode_job.DEFAULT_COLUMNS)
-    arrow_schema = to_arrow_schema(encode_job.CHUNK_SCHEMA)
-    via_pandas = encode_job._encode_group_sorted(one, cols)
-    tbl = pa.Table.from_pandas(one, preserve_index=False)
-    assert encode_job._group_is_fast(tbl, cols)
-    via_arrow = encode_job._encode_group_arrow(
-        tbl, cols, None, None, arrow_schema
-    ).to_pandas()
-    for c in ("column", "codec", "n_values", "checksum", "payload", "vmin",
-              "vmax", "vmin_s", "vmax_s", "null_count"):
-        pd.testing.assert_series_equal(
-            via_pandas[c].reset_index(drop=True),
-            via_arrow[c].rename(c).reset_index(drop=True),
-            check_dtype=False,
-        ), f"column {c} drifted"
-
-
 def test_decode_tokens_agg_colocated_matches_shuffled(spark, corpus):
     """colocated=True (no chunk-gathering exchange; valid on the direct
     output of encode_table) must return exactly the shuffled path's rows."""
@@ -218,3 +187,11 @@ def test_decode_tokens_agg_colocated_matches_shuffled(spark, corpus):
         .toPandas().sort_values("doc_id").reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(shuffled, colocated)
+
+
+def test_decode_tokens_agg_colocated_rejects_repartitioned(spark, corpus):
+    """colocated=True over chunk rows scattered across partitions fails
+    with an error naming the broken precondition, not a bare KeyError."""
+    chunks = encode_job.encode_table(corpus, rows_per_bucket=64).repartition(4)
+    with pytest.raises(Exception, match="not co-located; call with colocated=False"):
+        decode_job.decode_tokens_agg(chunks, colocated=True).collect()

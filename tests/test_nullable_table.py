@@ -134,19 +134,37 @@ def test_int64_above_2_53_exact_with_nulls(spark):
     )
 
 
-def test_companion_name_collision_rejected(spark):
-    """A data column named like another column's validity companion must be
-    rejected loudly, not consumed as a mask."""
-    df = spark.range(0, 10).select(
-        F.col("id").alias("x"),
-        (F.col("id") % 2 == 0).alias("x__valid"),
-        F.lit("g").alias("grp"),
+def test_every_list_kind_round_trips_null_lists_elements_and_nans(spark):
+    """Every list element kind comes back with its NULL lists, NULL
+    elements and NaN elements where they were (NaN never turns NULL)."""
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [
+            (0, "g", [1, None], [2**60 + 1, None], [0.5, nan, None],
+             [1.5, None, nan], [True, None], ["a", None, ""], [b"\x00", None]),
+            (1, "g", None, None, None, None, None, None, None),
+            (2, "g", [], [], [], [], [], [], []),
+            (3, "g", [None], [None], [nan], [None], [None], [None], [None]),
+            (4, "g", [-(2**31)], [-(2**63)], [-0.0], [1e300], [False], ["é"], [b""]),
+        ],
+        "id long, grp string, li32 array<int>, li64 array<bigint>, "
+        "lf32 array<float>, lf64 array<double>, lbool array<boolean>, "
+        "ls array<string>, lb array<binary>",
     )
     cols = encode_job.derive_columns(df)
-    with pytest.raises(ValueError, match="companion"):
-        encode_job.encode_table(
-            df, columns=cols, rows_per_bucket=8,
-            bucket_key="grp", salt_col="x", sort_col="x",
-        )
-    with pytest.raises(ValueError, match="companion"):
-        decode_job.decode_table(None, cols)
+    chunks = encode_job.encode_table(
+        df, columns=cols, rows_per_bucket=8,
+        bucket_key="grp", salt_col="id", sort_col="id",
+    )
+    out = decode_job.decode_table(chunks, cols).select(*df.columns)
+    assert out.schema == df.schema
+
+    def norm(v):
+        if isinstance(v, list):
+            return [norm(x) for x in v]
+        return "NaN" if isinstance(v, float) and v != v else v
+
+    def rows(d):
+        return [[norm(v) for v in r] for r in d.orderBy("id").collect()]
+
+    assert rows(out) == rows(df)

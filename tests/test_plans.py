@@ -178,3 +178,31 @@ def test_chunk_store_scan_pushes_filters(spark, tmp_path):
     plan = _plan(scan)
     m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
     assert m and "column" in m.group(1), plan
+
+
+def test_generic_table_paths_are_arrow_native(spark):
+    """NULLs and NaNs cross the Python boundary as Arrow validity, so the
+    generic encode projects no validity companions, the generic decode is
+    one grouped Arrow UDF with no JVM-side rebuild, and the token histogram
+    maps Arrow batches — no pandas UDF in any of them."""
+    df = spark.range(0, 200).select(
+        F.col("id").alias("event_id"),
+        F.lit("g").alias("grp"),
+        F.when(F.col("id") % 3 != 0, F.col("id") + 2**60).alias("big"),
+        F.when(F.col("id") % 4 == 0, F.lit(float("nan")))
+        .when(F.col("id") % 5 != 0, F.col("id").cast("double"))
+        .alias("x"),
+        F.array(F.col("id").cast("double"), F.lit(None).cast("double")).alias("xs"),
+    )
+    cols = encode_job.derive_columns(df)
+    chunks = encode_job.encode_table(
+        df, columns=cols, rows_per_bucket=64,
+        bucket_key="grp", salt_col="event_id", sort_col="event_id",
+    )
+    enc = _plan(chunks)
+    assert "__valid" not in enc and "__evalid" not in enc, enc
+    dec = _plan(decode_job.decode_table(chunks, cols))
+    assert "FlatMapGroupsInArrow" in dec, dec
+    assert "FlatMapGroupsInPandas" not in dec and "zip_with" not in dec, dec
+    hist = _plan(decode_job.token_histogram(chunks, column="event_id"))
+    assert "MapInArrow" in hist and "Pandas" not in hist, hist

@@ -228,25 +228,25 @@ def test_bloom_never_false_negative(members, probes):
     )
 )
 def test_encode_group_list_int64_arbitrary(rows):
-    """The GROUP-LEVEL list:int64 path (pandas -> Arrow ListArray lift ->
-    shred, r4) round-trips arbitrary null lists / null elements / empties /
-    ints beyond 2^53 exactly — the r4 review found the old to_numpy hop
-    destroyed big ints when element nulls were present."""
-    import pandas as pd
+    """The GROUP-LEVEL list:int64 path (Arrow ListArray offsets, record and
+    element validity bitmaps -> shred) round-trips arbitrary null lists /
+    null elements / empties / ints beyond 2^53 exactly — never through
+    float64."""
+    import pyarrow as pa
 
     from engine import chunk
     from engine.jobs import encode as encode_job
 
-    pdf = pd.DataFrame(
+    tbl = pa.table(
         {
             "chunk_id": ["c"] * len(rows),
-            # zero-padded: _encode_group sorts by doc_id, keep input order
             "doc_id": [f"d{i:04d}" for i in range(len(rows))],
-            "v": pd.Series(rows, dtype=object),
+            "v": pa.array(rows, pa.list_(pa.int64())),
         }
     )
-    out = encode_job._encode_group(pdf, {"v": ("list:int64", None)})
-    row = out[out["column"] == "v"].iloc[0]
+    row = encode_job._encode_group_arrow(
+        tbl, {"v": ("list:int64", None)}
+    ).to_pylist()[0]
     decoded = chunk.decode_chunk(row["payload"])
     # unwrap: (lengths, values[, record_valid]) with values possibly
     # (dense, elem_valid)
