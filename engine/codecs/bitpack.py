@@ -49,7 +49,16 @@ def pack(values: np.ndarray, bit_width: int) -> bytes:
 
 
 def unpack(buf: bytes | np.ndarray, bit_width: int, n: int) -> np.ndarray:
-    """Inverse of :func:`pack`; returns uint64 array of length ``n``."""
+    """Inverse of :func:`pack`; returns uint64 array of length ``n``.
+
+    Word gather, the batch form of the reference's ``unpack32``
+    (``src/util/bit_packing.rs:29-64``): value ``i`` starts at bit ``i*w``,
+    so one unaligned little-endian uint64 load at byte ``i*w >> 3`` (a
+    stride-1 uint64 view over the input padded by 9 bytes), a right shift by
+    ``(i*w) & 7`` and a mask recover it. A value of 58-64 bits can spill
+    into a ninth byte; its bits come in as ``byte[b+8] << (64 - shift)``
+    (zero where ``shift`` is 0 — numpy shifts by >= 64 yield 0).
+    """
     if n == 0:
         return np.empty(0, dtype=np.uint64)
     if bit_width == 0:
@@ -58,12 +67,19 @@ def unpack(buf: bytes | np.ndarray, bit_width: int, n: int) -> np.ndarray:
     nbits = n * bit_width
     if raw.size * 8 < nbits:
         raise ValueError(f"buffer too small: {raw.size} bytes for {nbits} bits")
-    dt = _store_dtype(bit_width)
-    bits = np.unpackbits(raw[: (nbits + 7) // 8], bitorder="little", count=nbits)
-    out_bits = np.zeros((n, 8 * dt.itemsize), dtype=np.uint8)
-    out_bits[:, :bit_width] = bits.reshape(n, bit_width)
-    le_bytes = np.packbits(out_bits, axis=1, bitorder="little")
-    return le_bytes.reshape(-1).view(dt).astype(np.uint64)
+    nbytes = (nbits + 7) // 8
+    padded = np.zeros(nbytes + 9, dtype=np.uint8)
+    padded[:nbytes] = raw[:nbytes]
+    words = np.ndarray((nbytes,), dtype="<u8", buffer=padded, strides=(1,))
+    bitpos = np.arange(n, dtype=np.int64) * bit_width
+    first = bitpos >> 3
+    shift = (bitpos & 7).view(np.uint64)
+    out = np.take(words, first)
+    out >>= shift
+    if bit_width > 57:
+        out |= np.take(padded, first + 8).astype(np.uint64) << (np.uint64(64) - shift)
+    out &= np.uint64((1 << bit_width) - 1)
+    return out
 
 
 def num_required_bits(x: int) -> int:
@@ -130,17 +146,29 @@ def uleb128_encode(value: int) -> bytes:
             return bytes(out)
 
 
-def uleb128_decode(buf: np.ndarray, pos: int) -> tuple[int, int]:
-    """Scalar decode; returns (value, new_pos)."""
+def uleb128_decode(buf: bytes | memoryview | np.ndarray, pos: int) -> tuple[int, int]:
+    """Scalar decode of the varint at ``pos``; returns (value, new_pos).
+
+    The one varint reader of hybrid run headers longer than one byte,
+    DELTA_BINARY_PACKED block headers and chunk headers. ``buf`` is a bytes-like buffer indexed as
+    Python ints; a uint8 array is read through a memoryview. A varint that
+    runs past the end of ``buf`` raises ``ValueError``.
+    """
+    if isinstance(buf, np.ndarray):
+        buf = memoryview(buf)
     result = 0
     shift = 0
-    while True:
-        b = int(buf[pos])
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
+    start = pos
+    try:
+        while True:
+            b = buf[pos]
+            pos += 1
+            result |= (b & 0x7F) << shift
+            if not b & 0x80:
+                return result, pos
+            shift += 7
+    except IndexError:
+        raise ValueError(f"truncated varint at byte {start}") from None
 
 
 def zigzag_encode(value: int) -> int:
@@ -157,7 +185,7 @@ def zigzag_decode(value: int) -> int:
 def orbit_positions(nxt: np.ndarray, n: int) -> np.ndarray:
     """Positions visited by the walk ``0 -> nxt[0] -> ...`` while < n, via
     pointer doubling — O(n log n) vectorized resolution of a sequential
-    jump chain (used by the RLE header parser and FSST's greedy matcher)."""
+    jump chain (used by FSST's greedy matcher)."""
     if n == 0:
         return np.empty(0, dtype=np.int64)
     visited = np.zeros(n + 1, dtype=bool)

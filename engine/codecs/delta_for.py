@@ -157,11 +157,12 @@ def _decode_impl(
     raw: np.ndarray, n: int | None, dtype: str
 ) -> tuple[np.ndarray, int]:
     utype, itype, nbits = _I32[dtype]
+    data = memoryview(raw)
     pos = 0
-    block_size, pos = bitpack.uleb128_decode(raw, pos)
-    num_mini, pos = bitpack.uleb128_decode(raw, pos)
-    total, pos = bitpack.uleb128_decode(raw, pos)
-    zz_first, pos = bitpack.uleb128_decode(raw, pos)
+    block_size, pos = bitpack.uleb128_decode(data, pos)
+    num_mini, pos = bitpack.uleb128_decode(data, pos)
+    total, pos = bitpack.uleb128_decode(data, pos)
+    zz_first, pos = bitpack.uleb128_decode(data, pos)
     first = bitpack.zigzag_decode(zz_first)
     if n is None:
         n = total
@@ -181,9 +182,9 @@ def _decode_impl(
     mb_off = np.empty((nblocks, num_mini), dtype=np.int64)
     got = 0
     for b in range(nblocks):
-        zz, pos = bitpack.uleb128_decode(raw, pos)
+        zz, pos = bitpack.uleb128_decode(data, pos)
         mins[b] = bitpack.zigzag_decode(zz)
-        widths[b] = raw[pos : pos + num_mini]
+        widths[b] = data[pos : pos + num_mini]
         pos += num_mini
         for m in range(num_mini):
             has = got < nd

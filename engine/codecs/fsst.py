@@ -46,10 +46,6 @@ def _window_keys(data: np.ndarray) -> np.ndarray:
     return (w.astype(np.uint64) * weights[None, :]).sum(axis=1, dtype=np.uint64)
 
 
-def _key_of(sym: bytes) -> int:
-    return int.from_bytes(sym.ljust(MAX_SYM_LEN, b"\0"), "little")
-
-
 def build_table(sample: bytes | np.ndarray, lengths: np.ndarray | None = None, refine_rounds: int = 2) -> list[bytes]:
     """Greedy symbol table from a byte sample; returns <=255 symbols (1-8 bytes)."""
     data = np.frombuffer(sample, np.uint8) if not isinstance(sample, np.ndarray) else sample

@@ -100,10 +100,3 @@ def shred_lists(offsets: np.ndarray) -> np.ndarray:
     starts = offsets[:-1][np.diff(offsets) > 0]
     rep[starts] = 0
     return rep
-
-
-def assemble_lists(rep_levels: np.ndarray, n_records: int) -> np.ndarray:
-    """Offsets from rep levels (empty lists are def-level territory; this
-    reverses shred_lists for non-empty lists)."""
-    starts = np.flatnonzero(rep_levels == 0)
-    return np.concatenate((starts, [len(rep_levels)]))

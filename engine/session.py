@@ -53,10 +53,3 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
-
-
-def get_spark_shipped(**kwargs) -> SparkSession:
-    """get_spark + package shipping in one call (the common entry)."""
-    spark = get_spark(**kwargs)
-    ship_package(spark)
-    return spark

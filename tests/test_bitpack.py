@@ -3,6 +3,8 @@ import pytest
 
 from engine.codecs import bitpack
 
+import _kernel_oracle
+
 
 @pytest.mark.parametrize("width", [1, 2, 3, 5, 7, 8, 12, 16, 20, 24, 31, 32])
 @pytest.mark.parametrize("n", [1, 7, 8, 9, 31, 32, 33, 1000])
@@ -68,3 +70,23 @@ def test_dict_bit_width():
     assert bitpack.dict_bit_width(3) == 2
     assert bitpack.dict_bit_width(1024) == 10
     assert bitpack.dict_bit_width(1025) == 11
+
+
+@pytest.mark.parametrize("width", range(57, 65))
+@pytest.mark.parametrize("n", [1, 7, 8, 9, 100])
+def test_unpack_wide_matches_oracle(width, n):
+    # widths 58-64 spill into a ninth byte at odd bit offsets
+    rng = np.random.default_rng(width * 1000 + n)
+    vals = rng.integers(0, 1 << 63, size=n, dtype=np.uint64) >> np.uint64(63 - (width - 1))
+    vals |= np.uint64(1 << (width - 1))  # top bit set
+    buf = bitpack.pack(vals, width) + b"\xff"  # a trailing byte must not leak in
+    out = bitpack.unpack(buf, width, n)
+    np.testing.assert_array_equal(out, vals)
+    np.testing.assert_array_equal(out, _kernel_oracle.unpack(buf, width, n))
+
+
+def test_uleb128_truncated_raises():
+    enc = bitpack.uleb128_encode(300)  # two bytes
+    assert bitpack.uleb128_decode(enc, 0) == (300, 2)
+    with pytest.raises(ValueError, match="truncated varint at byte 0"):
+        bitpack.uleb128_decode(enc[:1], 0)

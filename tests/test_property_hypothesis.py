@@ -1,13 +1,17 @@
 """Property-based round-trips (hypothesis): adversarial inputs the fixed
 regimes may miss — random run/alignment structures for the RLE state
 machine, arbitrary int32 (incl. boundary values) for delta wrapping,
-arbitrary byte strings for FSST/byte-array codecs."""
+arbitrary byte strings for FSST/byte-array codecs — plus differential tests
+of the hybrid RLE/bit-packed kernels and ``bitpack.unpack`` against the
+earlier implementations kept in ``_kernel_oracle``."""
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from engine import chunk
 from engine.codecs import bitpack, bytearrays, delta_for, dictionary, fsst, rle
+
+import _kernel_oracle
 
 settings.register_profile("engine", max_examples=60, deadline=None)
 settings.load_profile("engine")
@@ -31,6 +35,77 @@ def test_rle_roundtrip_arbitrary_runs(runs, width):
     )
     buf = rle.encode(vals, width)
     np.testing.assert_array_equal(rle.decode(buf, width, len(vals)), vals)
+
+
+# --- differential: the engine's hybrid kernels vs the pre-vectorization ones --
+
+hybrid_widths = st.sampled_from(list(range(33)) + [64])
+# (value, run length): lengths past 504 cross bit-packed run splits
+long_runs_strategy = st.lists(
+    st.tuples(st.integers(0, (1 << 64) - 1), st.integers(1, 600)), min_size=0, max_size=40
+)
+
+
+def _masked_runs(runs, width):
+    mask = (1 << width) - 1
+    vals = [v & mask for v, _ in runs]
+    return np.repeat(np.array(vals, np.uint64), [r for _, r in runs]).astype(np.uint64)
+
+
+@given(runs=long_runs_strategy, width=hybrid_widths)
+def test_rle_encode_matches_oracle(runs, width):
+    vals = _masked_runs(runs, width)
+    buf = rle.encode(vals, width)
+    assert buf == _kernel_oracle.encode(vals, width)
+    out = rle.decode(buf, width, len(vals))
+    np.testing.assert_array_equal(out, vals)
+    np.testing.assert_array_equal(out, _kernel_oracle.decode(buf, width, len(vals)))
+
+
+# a hand-built stream: RLE runs (count, value) and bit-packed runs (groups,
+# values) in any order, including shapes the encoder never emits
+stream_runs = st.lists(
+    st.one_of(
+        st.tuples(st.just("rle"), st.integers(0, 300), st.integers(0, (1 << 64) - 1)),
+        st.tuples(st.just("bp"), st.integers(0, 70), st.integers(0, 2**32)),
+    ),
+    min_size=1,
+    max_size=12,
+)
+
+
+@given(runs=stream_runs, width=hybrid_widths, data=st.data())
+def test_rle_decode_matches_oracle(runs, width, data):
+    mask = (1 << width) - 1
+    parts, total = [], 0
+    for kind, count, seed in runs:
+        if kind == "rle":
+            parts.append(bitpack.uleb128_encode(count << 1))
+            parts.append((seed & mask).to_bytes((width + 7) // 8, "little"))
+            total += count
+        else:
+            vals = np.random.default_rng(seed).integers(0, 1 << 63, 8 * count, dtype=np.uint64)
+            parts.append(bitpack.uleb128_encode(count << 1 | 1))
+            parts.append(bitpack.pack(vals & np.uint64(mask), width))
+            total += 8 * count
+    buf = b"".join(parts)
+    n = data.draw(st.integers(0, total))
+    np.testing.assert_array_equal(
+        rle.decode(buf, width, n), _kernel_oracle.decode(buf, width, n)
+    )
+
+
+@given(
+    vals=st.lists(st.integers(0, (1 << 64) - 1), min_size=0, max_size=200),
+    width=st.integers(1, 64),
+    extra=st.binary(max_size=9),
+)
+def test_unpack_matches_oracle(vals, width, extra):
+    arr = np.array([v & ((1 << width) - 1) for v in vals], np.uint64)
+    buf = bitpack.pack(arr, width) + extra
+    out = bitpack.unpack(buf, width, len(arr))
+    np.testing.assert_array_equal(out, arr)
+    np.testing.assert_array_equal(out, _kernel_oracle.unpack(buf, width, len(arr)))
 
 
 int32s = st.integers(-(2**31), 2**31 - 1)

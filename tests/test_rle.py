@@ -6,6 +6,8 @@ import pytest
 
 from engine.codecs import rle
 
+import _kernel_oracle
+
 
 # --- golden vectors (FIXTURES.md F3) ---------------------------------------
 
@@ -110,3 +112,84 @@ def test_len_prefixed_roundtrip():
     out, consumed = rle.decode_len_prefixed(buf, 2, len(vals))
     assert consumed == len(buf)
     np.testing.assert_array_equal(out, vals)
+
+
+# --- truncated streams fail loudly ------------------------------------------
+
+
+def test_truncated_rle_value_raises():
+    # header 0x28 = RLE run of 20 at width 3, but its value byte is missing
+    with pytest.raises(ValueError, match="truncated RLE/bit-packed stream at byte 1: RLE value"):
+        rle.decode(bytes([0x28]), 3, 20)
+
+
+@pytest.mark.parametrize("cut", [0, 1])
+def test_truncated_header_raises(cut):
+    # 200 x 5 -> one RLE run with a two-byte header (0x90 0x03) and value 0x05
+    buf = rle.encode(np.full(200, 5, np.uint64), 3)
+    assert buf == bytes([0x90, 0x03, 0x05])
+    with pytest.raises(ValueError, match="truncated RLE/bit-packed stream at byte 0: run header"):
+        rle.decode(buf[:cut], 3, 200)
+
+
+def test_truncated_bit_packed_run_raises():
+    # golden 0..7 at width 3 with the last packed byte cut off
+    with pytest.raises(
+        ValueError, match="truncated RLE/bit-packed stream at byte 1: bit-packed run needs 3 bytes, 2 left"
+    ):
+        rle.decode(bytes([0x03, 0x88, 0xC6]), 3, 8)
+
+
+def test_stream_shorter_than_n_raises():
+    # golden two RLE runs hold 100 values; asking for 101 runs off the end
+    buf = bytes([0x64, 0x00, 0x64, 0x01])
+    with pytest.raises(ValueError, match="at byte 4: run header missing after 100 of 101 values"):
+        rle.decode(buf, 1, 101)
+
+
+def test_len_prefixed_truncated_payload_raises():
+    buf = rle.encode_len_prefixed(np.arange(16, dtype=np.uint64) % 5, 3)
+    with pytest.raises(ValueError, match="truncated RLE/bit-packed stream"):
+        rle.decode_len_prefixed(buf[:-1], 3, 16)
+
+
+# --- pinned edges against the pre-vectorization kernels ---------------------
+
+
+def _same_as_oracle(vals, width):
+    buf = rle.encode(vals, width)
+    assert buf == _kernel_oracle.encode(vals, width)
+    np.testing.assert_array_equal(rle.decode(buf, width, len(vals)), vals)
+    np.testing.assert_array_equal(
+        rle.decode(buf, width, len(vals)), _kernel_oracle.decode(buf, width, len(vals))
+    )
+    return buf
+
+
+@pytest.mark.parametrize("run_len", [9, 12, 30])
+def test_oracle_run_crossing_504_split(run_len):
+    # 500 non-repeating values then an equal run over value 504, where the
+    # first bit-packed run closes at 63 groups
+    vals = np.concatenate([np.arange(500, dtype=np.uint64) % 7, np.full(run_len, 7, np.uint64)])
+    _same_as_oracle(vals, 3)
+
+
+@pytest.mark.parametrize("groups", [62, 63, 64, 126])
+@pytest.mark.parametrize("tail", [[3, 3, 3], [3, 4, 3]])
+def test_oracle_final_flush_open_groups(groups, tail):
+    # 63 (or 126) closed groups leave no open group, so an all-equal tail
+    # becomes a short RLE run; 62 or 64 leave one open and the tail is padded
+    vals = np.concatenate([np.arange(8 * groups, dtype=np.uint64) % 3, np.array(tail, np.uint64)])
+    buf = _same_as_oracle(vals, 3)
+    tail_is_rle = groups % 63 == 0 and len(set(tail)) == 1
+    assert (buf[-2:] == bytes([len(tail) << 1, 3])) == tail_is_rle
+
+
+def test_oracle_all_rle_with_short_tail_run():
+    vals = np.array([5] * 10 + [3] * 3, np.uint64)
+    assert _same_as_oracle(vals, 3) == bytes([0x14, 0x05, 0x06, 0x03])
+
+
+@pytest.mark.parametrize("n", [1, 5, 8, 20, 600])
+def test_oracle_width_zero(n):
+    _same_as_oracle(np.zeros(n, np.uint64), 0)
