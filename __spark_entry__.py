@@ -2003,52 +2003,31 @@ FROM read_parquet('{_GOLDEN_DIR}/10k-v2.parquet')
 """
 
 
-def _export_partitions(spark, df, out_prefix, sf_dir, cols_fn,
-                       return_paths=False, **write_kwargs):
-    """Shared export scaffold for the parquet_export* gates (one copy of
-    the retry-safety machinery — r5 review pass 5 #2): each partition
-    writes one engine-made parquet file via tmp + atomic rename (a task
-    killed mid-write never leaves a truncated file), and the read-back
-    uses ONLY the manifest-listed paths — one row per SUCCESSFUL task —
-    so a retried/speculative attempt's orphan file is excluded (the same
-    committed-files-only contract the engine's ChunkStore snapshots
-    enforce). ``cols_fn(pdf, parquet_out)`` builds the column spec."""
+def _gate_export(df, out_prefix, sf_dir, cols_fn, **export_kwargs):
+    """Export ``df`` through the resumable export job
+    (engine/jobs/export.py: deterministic bucket units, digest-named
+    files, tmp + atomic rename) into a cleared tmp dir -> the committed
+    file paths. The dir is cleared first: the gates grade a FULL export
+    (the resume contract itself is pinned by tests/test_export_resume.py).
+    ``cols_fn(tbl, parquet_out)`` builds the column spec from the unit's
+    rows as a pyarrow Table, already sorted by ``sort_col``."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
-    import pandas as pd
+    from engine.jobs.export import export_parquet
 
     out_dir = os.path.join(
         tempfile.gettempdir(),
         f"{out_prefix}_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-
-    def part(batches):
-        from engine import parquet_out
-
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs)
-        cols = cols_fn(pdf, parquet_out)
-        p = os.path.join(out_dir, f"part-{_uuid.uuid4().hex}.parquet")
-        info = parquet_out.write_table(p + ".tmp", cols, **write_kwargs)
-        os.replace(p + ".tmp", p)
-        yield pd.DataFrame({"path": [p], "rows": [info["rows"]]})
-
-    manifest = df.mapInPandas(part, "path string, rows long")
-    paths = [r["path"] for r in manifest.collect()]
-    if return_paths:
-        return paths
-    return spark.read.parquet(*paths)
+    manifest = export_parquet(df, out_dir, cols_fn=cols_fn, **export_kwargs)
+    return [r["path"] for r in manifest.collect()]  # bounded: 1/unit
 
 
 def _q_parquet_export(spark, sf_dir) -> DataFrame:
     """Writer-side parquet interop (the inverse of the golden_file_* read
-    gates): each partition of the documents table is written as a REAL
+    gates): each bucket unit of the documents table is written as a REAL
     parquet file by engine/parquet_out.py — engine codecs wrapped in
     thrift-compact page headers + footer (DELTA_BINARY_PACKED doc ids,
     DELTA_LENGTH_BYTE_ARRAY text, PLAIN_DICTIONARY lang/source) — then
@@ -2062,46 +2041,31 @@ def _q_parquet_export(spark, sf_dir) -> DataFrame:
         "doc_id", "text", "lang", "source", "n_chars"
     )
 
-    def cols_fn(pdf, parquet_out):
-        pdf = pdf.sort_values("doc_id")  # delta loves sorted ids
-        # AUTO = the engine's per-chunk codec selector resolving to parquet
-        # encodings (sorted ids -> DELTA_BINARY_PACKED, low-card lang/
-        # source -> PLAIN_DICTIONARY, high-card text -> delta-length)
+    def cols_fn(tbl, parquet_out):
+        from engine.codecs import bytearrays
+
+        def utf8(c):
+            return bytearrays.flat_from_arrow(tbl[c].combine_chunks())
+
+        # rows arrive sorted by doc_id (delta loves sorted ids); AUTO = the
+        # engine's per-chunk codec selector resolving to parquet encodings
+        # (sorted ids -> DELTA_BINARY_PACKED, low-card lang/source ->
+        # PLAIN_DICTIONARY, high-card text -> delta-length)
         return [
             ("doc_id", "int64", "AUTO",
-             pdf["doc_id"].to_numpy(np.int64), None),
-            ("text", "utf8", "AUTO",
-             parquet_out.flat_strings(pdf["text"]), None),
-            ("lang", "utf8", "AUTO",
-             parquet_out.flat_strings(pdf["lang"]), None),
-            ("source", "utf8", "AUTO",
-             parquet_out.flat_strings(pdf["source"]), None),
+             tbl["doc_id"].to_numpy().astype(np.int64), None),
+            ("text", "utf8", "AUTO", utf8("text"), None),
+            ("lang", "utf8", "AUTO", utf8("lang"), None),
+            ("source", "utf8", "AUTO", utf8("source"), None),
             ("n_chars", "int64", "AUTO",
-             pdf["n_chars"].to_numpy(np.int64), None),
+             tbl["n_chars"].to_numpy().astype(np.int64), None),
         ]
 
-    # r7: through the RESUMABLE export job (engine/jobs/export.py) —
-    # deterministic bucket units, digest-named files, atomic commits —
-    # so the kill/resume parquet sink runs under this graded gate. The
-    # dir is cleared first: the gate grades a FULL export (the resume
-    # contract itself is pinned by tests/test_export_resume.py)
-    import shutil
-    import tempfile
-
-    from engine.jobs.export import export_parquet
-
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"sg_pq_export_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    manifest = export_parquet(
-        docs, out_dir, cols_fn=cols_fn,
+    back = spark.read.parquet(*_gate_export(
+        docs, "sg_pq_export", sf_dir, cols_fn,
         bucket_key="source", salt_col="doc_id", rows_per_bucket=256,
         sort_col="doc_id",
-    )
-    paths = [r["path"] for r in manifest.collect()]  # bounded: 1/unit
-    back = spark.read.parquet(*paths)
+    ))
     return back.select(
         F.col("doc_id").cast("long"),
         "text",
@@ -2132,29 +2096,33 @@ def _q_parquet_export_events(spark, sf_dir) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value"
     )
 
-    def cols_fn(pdf, parquet_out):
-        pdf = pdf.sort_values("event_id")
-        micros = pdf["ts"].astype("datetime64[us]").astype(np.int64)
+    def cols_fn(tbl, parquet_out):
+        from engine.codecs import bytearrays
+
+        # rows arrive sorted by event_id; ts is int64 epoch micros cast
+        # straight from the Arrow timestamp
         return [
             ("event_id", "int64", "DELTA_BINARY_PACKED",
-             pdf["event_id"].to_numpy(np.int64), None),
+             tbl["event_id"].to_numpy().astype(np.int64), None),
             ("ts", "timestamp_us", "DELTA_BINARY_PACKED",
-             micros.to_numpy(np.int64), None),
+             tbl["ts"].cast("int64").to_numpy(), None),
             ("user_id", "int64", "AUTO",
-             pdf["user_id"].to_numpy(np.int64), None),
+             tbl["user_id"].to_numpy().astype(np.int64), None),
             ("event_type", "utf8", "PLAIN_DICTIONARY",
-             parquet_out.flat_strings(pdf["event_type"]), None),
+             bytearrays.flat_from_arrow(tbl["event_type"].combine_chunks()),
+             None),
             # NOT BYTE_STREAM_SPLIT: Spark 4.1's vectorized reader raises
             # "Unsupported encoding" on BSS pages (pyarrow/DuckDB read
             # them fine) — this gate reads back through Spark's JVM reader
             ("value", "float64", "PLAIN",
-             pdf["value"].to_numpy(np.float64), None),
+             tbl["value"].to_numpy().astype(np.float64), None),
         ]
 
-    back = _export_partitions(
-        spark, ev, "sg_pq_export_ev", sf_dir, cols_fn,
+    back = spark.read.parquet(*_gate_export(
+        ev, "sg_pq_export_ev", sf_dir, cols_fn,
+        bucket_key=None, salt_col="event_id", sort_col="event_id",
         codec="zstd", data_page_version=2,
-    )
+    ))
     return back.select(
         F.col("event_id").cast("long"),
         F.unix_micros(F.col("ts")).alias("ts_us"),
@@ -2193,24 +2161,29 @@ def _q_page_pruned_read(spark, sf_dir) -> DataFrame:
         "l_orderkey", "l_partkey", "l_linenumber", "l_returnflag"
     )
 
-    def cols_fn(pdf, parquet_out):
-        pdf = pdf.sort_values(["l_orderkey", "l_linenumber"])
+    def cols_fn(tbl, parquet_out):
+        from engine.codecs import bytearrays
+
+        # rows arrive sorted by l_orderkey
         return [
             ("l_orderkey", "int64", "DELTA_BINARY_PACKED",
-             pdf["l_orderkey"].to_numpy(np.int64), None),
+             tbl["l_orderkey"].to_numpy().astype(np.int64), None),
             ("l_partkey", "int64", "AUTO",
-             pdf["l_partkey"].to_numpy(np.int64), None),
+             tbl["l_partkey"].to_numpy().astype(np.int64), None),
             ("l_linenumber", "int64", "AUTO",
-             pdf["l_linenumber"].to_numpy(np.int64), None),
+             tbl["l_linenumber"].to_numpy().astype(np.int64), None),
             ("l_returnflag", "utf8", "PLAIN_DICTIONARY",
-             parquet_out.flat_strings(pdf["l_returnflag"]), None),
+             bytearrays.flat_from_arrow(
+                 tbl["l_returnflag"].combine_chunks()), None),
         ]
 
-    paths = _export_partitions(
-        spark, li, "sg_pq_pruned", sf_dir, cols_fn,
-        return_paths=True, page_size_rows=512,
-        # rows really are sorted (cols_fn sorts) — declare it so readers
-        # see RowGroup.sorting_columns alongside boundary_order=ASC
+    paths = _gate_export(
+        li, "sg_pq_pruned", sf_dir, cols_fn,
+        bucket_key=None, salt_col="l_orderkey", sort_col="l_orderkey",
+        page_size_rows=512,
+        # rows really are sorted (export sorts by sort_col) — declare it
+        # so readers see RowGroup.sorting_columns alongside
+        # boundary_order=ASC
         sorting_columns=[("l_orderkey", False, False)],
     )
     rep: dict = {}
@@ -2535,36 +2508,35 @@ def _q_parquet_export_nested(spark, sf_dir) -> DataFrame:
         F.split(F.col("text"), " ").alias("words"),
     )
 
-    def cols_fn(pdf, parquet_out):
-        pdf = pdf.sort_values("doc_id")
-        t_off = np.concatenate(
-            ([0], np.cumsum(pdf["tokens"].map(len).to_numpy(np.int64)))
-        )
-        t_dense = (
-            np.concatenate([np.asarray(x, np.int32) for x in pdf["tokens"]])
-            if t_off[-1]
-            else np.empty(0, np.int32)
-        )
-        w_off = np.concatenate(
-            ([0], np.cumsum(pdf["words"].map(len).to_numpy(np.int64)))
-        )
-        flat_words = [w for row in pdf["words"] for w in row]
+    def cols_fn(tbl, parquet_out):
+        import pyarrow.compute as pc
+
+        from engine.codecs import bytearrays
+
+        # rows arrive sorted by doc_id; no list is null
+        tokens = tbl["tokens"].combine_chunks()
+        words = tbl["words"].combine_chunks()
+        n_tok = pc.list_value_length(tokens).to_numpy()
+        n_words = pc.list_value_length(words).to_numpy().astype(np.int32)
+        t_off = np.concatenate(([0], np.cumsum(n_tok))).astype(np.int64)
+        w_off = np.concatenate(([0], np.cumsum(n_words))).astype(np.int64)
         # struct column with nulls at BOTH levels: the struct itself is
         # null on 7|doc_id rows, its width field additionally null on
         # 3|doc_id rows; 'first' is required within the struct
-        did = pdf["doc_id"].to_numpy(np.int64)
+        did = tbl["doc_id"].to_numpy().astype(np.int64)
         sv = (did % 7) != 0
-        n_words = pdf["words"].map(len).to_numpy(np.int32)
         wvalid = (did % 3) != 0
-        firsts = [row[0] for row, s in zip(pdf["words"], sv) if s]
+        firsts = pc.list_element(words.take(np.flatnonzero(sv)), 0)
         return [
-            ("doc_id", "int64", "AUTO", pdf["doc_id"].to_numpy(np.int64), None),
-            ("tokens", "list<int32>", "AUTO", (t_off, t_dense, None), None),
+            ("doc_id", "int64", "AUTO", did, None),
+            ("tokens", "list<int32>", "AUTO",
+             (t_off, tokens.flatten().to_numpy().astype(np.int32), None),
+             None),
             (
                 "words",
                 "list<utf8>",
                 "AUTO",
-                (w_off, parquet_out.flat_strings(flat_words), None),
+                (w_off, bytearrays.flat_from_arrow(words.flatten()), None),
                 None,
             ),
             (
@@ -2574,15 +2546,16 @@ def _q_parquet_export_nested(spark, sf_dir) -> DataFrame:
                 [
                     ("width", "int32", "AUTO", n_words, wvalid),
                     ("first", "utf8", "AUTO",
-                     parquet_out.flat_strings(firsts), None),
+                     bytearrays.flat_from_arrow(firsts), None),
                 ],
                 sv,
             ),
         ]
 
-    back = _export_partitions(
-        spark, seq, "sg_pq_export_nested", sf_dir, cols_fn
-    )
+    back = spark.read.parquet(*_gate_export(
+        seq, "sg_pq_export_nested", sf_dir, cols_fn,
+        bucket_key=None, salt_col="doc_id", sort_col="doc_id",
+    ))
     pos_wsum = F.aggregate(
         F.zip_with(
             F.col("tokens"),

@@ -153,6 +153,10 @@ def decode(buf: bytes | np.ndarray, n: int | None = None, dtype: str = "int32") 
     return _decode_impl(raw, n, dtype)[0]
 
 
+def _truncated(pos: int, what: str) -> ValueError:
+    return ValueError(f"truncated DELTA_BINARY_PACKED stream at byte {pos}: {what}")
+
+
 def _decode_impl(
     raw: np.ndarray, n: int | None, dtype: str
 ) -> tuple[np.ndarray, int]:
@@ -180,18 +184,24 @@ def _decode_impl(
     mins = np.empty(nblocks, dtype=np.int64)
     widths = np.empty((nblocks, num_mini), dtype=np.uint8)
     mb_off = np.empty((nblocks, num_mini), dtype=np.int64)
+    size = len(raw)
     got = 0
     for b in range(nblocks):
         zz, pos = bitpack.uleb128_decode(data, pos)
         mins[b] = bitpack.zigzag_decode(zz)
+        if pos + num_mini > size:
+            raise _truncated(pos, f"block {b} needs {num_mini} miniblock widths, {size - pos} left")
         widths[b] = data[pos : pos + num_mini]
         pos += num_mini
+        start = pos
         for m in range(num_mini):
             has = got < nd
             mb_off[b, m] = pos if has else -1
             if has:
                 pos += int(widths[b, m]) * mini_size // 8
                 got += mini_size
+        if pos > size:
+            raise _truncated(start, f"block {b} miniblocks need {pos - start} bytes, {size - start} left")
     got = min(got, nd)
 
     # pass 2: unpack miniblocks grouped by width

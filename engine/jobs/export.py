@@ -13,17 +13,9 @@ rename), and a re-run anti-joins the already-committed file list BEFORE
 the shuffle — finished units are never re-encoded, re-shuffled, or even
 re-read past the scan.
 
-NULL faithfulness across the pandas hop: Arrow's arrow->pandas
-conversion (the one ``applyInPandas`` uses) turns a NULL in a numeric
-column into NaN — int64 silently widens to float64, and a double NULL
-becomes indistinguishable from a NaN VALUE. The default column spec
-therefore ships Spark-side validity companions (``F.isnotnull`` columns
-computed BEFORE the hop, the same pattern the encode job uses), so
-scalar NULLs of every type round-trip as real parquet nulls, and list
-columns get per-ELEMENT companions (``F.transform`` isNotNull arrays),
-so element NULLs round-trip too — including float lists, where a
-post-hop NaN would otherwise be ambiguous between element NULL and a
-genuine NaN value.
+Validity comes straight off the Arrow bitmaps of the ``applyInArrow``
+batches, so scalar NULLs, null lists and null list elements round-trip
+as real parquet nulls, distinct from NaN values, with int64 exact.
 
 Reference: the FileSink/write_table half of ``src/file/writer.rs``;
 resumability is this engine's north-rule addition (the reference has no
@@ -37,150 +29,107 @@ import re
 import uuid
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import skew
+from ..codecs import bytearrays
 
 _MANIFEST_SCHEMA = "chunk_id string, path string, rows long, resumed boolean"
 
+# Spark scalar type -> writer alias (the numpy dtype name for fixed types)
 _KINDS = {
-    "int": ("int32", np.int32),
-    "bigint": ("int64", np.int64),
-    "float": ("float32", np.float32),
-    "double": ("float64", np.float64),
-    "boolean": ("bool", np.bool_),
-    "string": ("utf8", None),
+    "int": "int32",
+    "bigint": "int64",
+    "float": "float32",
+    "double": "float64",
+    "boolean": "bool",
+    "string": "utf8",
 }
 
 
-def _auto_cols_fn(expected: dict, with_evalid: frozenset = frozenset()):
-    """Default column-spec builder from the DataFrame's OWN schema:
-    int/bigint/float/double/boolean/string plus array<numeric> map to
-    the writer's aliases with the AUTO selector. Scalar NULLs restore
-    from the ``__valid_*`` companions export_parquet computes Spark-side
-    (values at null slots may hold anything — the writer's contract);
-    string NULLs survive the hop as None directly; list-element NULLs
-    restore from the ``__evalid_*`` per-element companions."""
+def _valid(arr):
+    """Validity off the Arrow bitmap, or None when nothing is null."""
+    if not arr.null_count:
+        return None
+    return arr.is_valid().to_numpy(zero_copy_only=False)
 
-    def cols_fn(pdf, parquet_out):
+
+def _auto_cols_fn(expected: dict):
+    """Default column-spec builder from the DataFrame's OWN schema:
+    int/bigint/float/double/boolean/string plus array<non-string scalar>
+    map to the writer's aliases with the AUTO selector, every value and
+    validity read straight off the Arrow buffers (NaN is a value, never a
+    null)."""
+
+    def cols_fn(tbl, parquet_out):
+        import pyarrow.compute as pc
+
         cols = []
         for name, spark_t in expected.items():
-            s = pdf[name]
-            if spark_t.startswith("array<") and spark_t[6:-1] in _KINDS:
-                elem_alias, elem_t = _KINDS[spark_t[6:-1]]
-                if elem_alias == "utf8":
-                    raise ValueError(
-                        f"export_parquet default spec cannot write "
-                        f"{name}: {spark_t} — pass cols_fn"
-                    )
-                valid = s.notna().to_numpy()
-                if name in with_evalid:
-                    # element validity rides the Spark-side __evalid_
-                    # companion (F.transform isNotNull arrays, computed
-                    # BEFORE the hop) — a null int element otherwise
-                    # arrives as NaN in a float64 array and astype would
-                    # stamp garbage, while a null float element would
-                    # conflate with a genuine NaN value
-                    ev = pdf[f"__evalid_{name}"]
-                    masks = [
-                        np.asarray(m, bool) for m in ev if m is not None
-                    ]
-                    elem_valid = (
-                        np.concatenate(masks) if masks
-                        else np.empty(0, bool)
-                    )
-                    parts = [
-                        np.asarray(x)[m]
-                        for x, m in zip(
-                            (x for x in s if x is not None), masks
-                        )
-                    ]
-                else:
-                    # schema declared containsNull=false: no companion
-                    # was shipped, every entry is valid
-                    elem_valid = np.empty(0, bool)  # .all() -> None below
-                    parts = [np.asarray(x) for x in s if x is not None]
-                dense = (
-                    np.concatenate(parts) if parts
-                    else np.empty(0, elem_t)
-                )
-                if (
-                    elem_t == np.int64
-                    and np.issubdtype(dense.dtype, np.floating)
-                    and (np.abs(dense) >= float(2**53)).any()
-                ):
-                    raise ValueError(
-                        f"export_parquet: list column {name} mixes "
-                        "null elements with values at or beyond 2^53 — "
-                        "the pandas hop widened it to float64 and lost "
-                        "exactness; pass cols_fn"
-                    )
-                # offsets span EVERY row (null rows = zero entries — the
-                # writer's null-list contract)
+            arr = tbl.column(name).combine_chunks()
+            elem_t = spark_t[6:-1] if spark_t.startswith("array<") else None
+            if elem_t in _KINDS and elem_t != "string":
+                # offsets span EVERY row (a null row = zero entries — the
+                # writer's null-list contract); dense non-null elements
+                lengths = pc.list_value_length(arr).fill_null(0)
                 offsets = np.concatenate(
-                    ([0],
-                     np.cumsum([0 if x is None else len(x) for x in s]))
+                    ([0], np.cumsum(lengths.to_numpy(zero_copy_only=False)))
                 ).astype(np.int64)
+                child = arr.flatten()
+                dense = child.drop_null().to_numpy(zero_copy_only=False)
                 cols.append(
-                    (name, f"list<{elem_alias}>", "AUTO",
-                     (offsets, dense.astype(elem_t),
-                      None if elem_valid.all() else elem_valid),
-                     None if valid.all() else valid)
+                    (name, f"list<{_KINDS[elem_t]}>", "AUTO",
+                     (offsets, dense, _valid(child)), _valid(arr))
                 )
-                continue
-            if spark_t not in _KINDS:
+            elif spark_t == "string":
+                cols.append(
+                    (name, "utf8", "AUTO",
+                     bytearrays.flat_from_arrow(arr.drop_null()), _valid(arr))
+                )
+            elif spark_t in _KINDS:
+                # fixed types span every row: null slots hold zeros
+                valid = _valid(arr)
+                if valid is not None:
+                    arr = arr.fill_null(False if spark_t == "boolean" else 0)
+                cols.append(
+                    (name, _KINDS[spark_t], "AUTO",
+                     arr.to_numpy(zero_copy_only=False), valid)
+                )
+            else:
                 raise ValueError(
                     f"export_parquet default spec cannot write {name}: "
                     f"{spark_t} — pass cols_fn for this table"
                 )
-            alias, np_t = _KINDS[spark_t]
-            if alias == "utf8":
-                valid = s.notna().to_numpy()
-                dense = parquet_out.flat_strings(
-                    [x for x in s if x is not None]
-                )
-                cols.append(
-                    (name, "utf8", "AUTO", dense,
-                     None if valid.all() else valid)
-                )
-                continue
-            # scalar numerics/bools: the Spark-side companion is the
-            # truth about NULLs — the value column may have widened to
-            # float64 (int NULLs) or hide NULL inside NaN (doubles)
-            valid = pdf[f"__valid_{name}"].to_numpy(bool)
-            if (
-                np_t == np.int64
-                and np.issubdtype(s.dtype, np.floating)
-            ):
-                # widened bigint: float64 holds ints exactly only below
-                # 2^53 — beyond that the value was ALREADY corrupted by
-                # the hop and no cast can recover it (r7 review pass 7
-                # #1; int32 always fits exactly). >= because corrupted
-                # values ROUND ONTO the 2^53 boundary (2^53+1 -> 2^53),
-                # so the boundary itself is unprovable-exact
-                big = np.abs(s.to_numpy()[valid]) >= float(2**53)
-                if big.any():
-                    raise ValueError(
-                        f"export_parquet: bigint column {name} mixes "
-                        "NULLs with values beyond 2^53 — the pandas hop "
-                        "widened it to float64 and lost exactness; pass "
-                        "cols_fn (e.g. split validity Spark-side and "
-                        "keep the values column non-null)"
-                    )
-            if valid.all():
-                if s.dtype != np_t:
-                    vals = s.to_numpy().astype(np_t)
-                else:
-                    vals = s.to_numpy(np_t)
-                cols.append((name, alias, "AUTO", vals, None))
-                continue
-            full = np.zeros(len(s), np_t)
-            full[valid] = s.to_numpy()[valid].astype(np_t)
-            cols.append((name, alias, "AUTO", full, valid))
         return cols
 
     return cols_fn
+
+
+def _list_key(arr, dt):
+    """Byte sort key for a numeric list column (Arrow cannot sort
+    ``list<...>``): each entry is its validity byte then its value as
+    native ``dt`` bytes (null elements hold 0), so equal lists get equal
+    keys and an element NULL differs from a NaN value; a null row stays a
+    null key."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    child = arr.flatten()
+    entries = np.empty(len(child), [("valid", "u1"), ("value", dt)])
+    entries["valid"] = child.is_valid().to_numpy(zero_copy_only=False)
+    entries["value"] = (
+        child.cast(pa.from_numpy_dtype(dt)).fill_null(0)
+        .to_numpy(zero_copy_only=False)
+    )
+    lengths = pc.list_value_length(arr).fill_null(0)
+    offsets = np.concatenate(
+        ([0], np.cumsum(lengths.to_numpy(zero_copy_only=False)))
+    ).astype(np.int64) * entries.itemsize
+    key = pa.LargeBinaryArray.from_buffers(
+        pa.large_binary(), len(arr),
+        [None, pa.py_buffer(offsets), pa.py_buffer(entries.tobytes())],
+    )
+    return pc.if_else(arr.is_valid(), key, None)
 
 
 def export_parquet(
@@ -198,17 +147,20 @@ def export_parquet(
     """Write ``df`` as a directory of engine-made parquet files, one per
     deterministic bucket, resumable after a kill.
 
-    ``cols_fn(pdf, parquet_out) -> columns spec`` customizes the writer
+    ``cols_fn(tbl, parquet_out) -> columns spec`` customizes the writer
     input (same contract as :func:`engine.parquet_out.write_table`);
-    default derives the spec from the DataFrame schema, NULL-faithfully
-    for every scalar type (see module docstring). ``sort_col`` leads the
-    in-file row order (defaults to ``salt_col``); remaining scalar
-    columns, validity companions, and byte-serialized numeric-list keys
-    tie-break so retried attempts commit byte-identical files even
-    under duplicate sort keys (rows distinguishable only by a
-    non-numeric list under a custom cols_fn are the remaining
-    caveat — give such tables a unique ``sort_col``). Extra ``write_kwargs`` flow to
-    ``write_table`` (codec, page_size_rows, data_page_version, ...).
+    ``tbl`` is the unit's rows as a ``pyarrow.Table`` of ``df``'s
+    columns, already in file order. The default derives the spec from
+    the DataFrame schema, NULL-faithfully for every accepted type (see
+    module docstring). ``sort_col`` leads the in-file row order (defaults
+    to ``salt_col``); every remaining scalar column tie-breaks in one
+    Arrow sort (NaN before NULL), then numeric list columns through byte
+    keys of their values and element validity, so retried attempts commit
+    byte-identical files even under duplicate sort keys (rows
+    distinguishable only by a non-numeric list, map or struct are the
+    remaining caveat — give such tables a unique ``sort_col``). Extra
+    ``write_kwargs`` flow to ``write_table`` (codec, page_size_rows,
+    data_page_version, ...).
 
     Returns the manifest as an INERT (pre-materialized) DataFrame
     ``(chunk_id, path, rows, resumed)`` — one row per unit, safe to act
@@ -227,9 +179,7 @@ def export_parquet(
     are NOT supported — the tmp sweep assumes it owns the directory)."""
     spark = df.sparkSession
     os.makedirs(out_dir, exist_ok=True)
-    clash = {c for c in df.columns
-             if c in ("_fname", "__all")
-             or c.startswith(("__valid_", "__evalid_"))}
+    clash = {c for c in df.columns if c in ("_fname", "__all")}
     if clash:
         raise ValueError(
             f"input columns {sorted(clash)} collide with export metadata"
@@ -253,38 +203,7 @@ def export_parquet(
             "— coalesce the key first (e.g. F.coalesce(col, lit('?'))) "
             "or use bucket_key=None for uniform buckets"
         )
-    companions = []
-    list_companions = []
-    if cols_fn is None:
-        # Spark-side validity companions: computed BEFORE the pandas hop,
-        # where NULL is still distinguishable from NaN / dtype widening —
-        # scalar isnotnull flags plus per-ELEMENT isnotnull arrays for
-        # numeric/bool list columns
-        companions = [
-            n for n, t in expected.items()
-            if t in _KINDS and _KINDS[t][0] != "utf8"
-        ]
-        for n in companions:
-            df = df.withColumn(f"__valid_{n}", F.col(n).isNotNull())
-        # only arrays whose schema ADMITS null elements ship a companion
-        # (containsNull=false lists — e.g. the flagship tokens column —
-        # would pay a same-shape boolean array per row for nothing)
-        nullable_elems = {
-            f.name for f in df.schema.fields
-            if f.dataType.simpleString().startswith("array<")
-            and getattr(f.dataType, "containsNull", True)
-        }
-        list_companions = [
-            n for n, t in expected.items()
-            if t.startswith("array<") and t[6:-1] in _KINDS
-            and _KINDS[t[6:-1]][0] != "utf8" and n in nullable_elems
-        ]
-        for n in list_companions:
-            df = df.withColumn(
-                f"__evalid_{n}",
-                F.transform(F.col(n), lambda x: x.isNotNull()),
-            )
-    fn = cols_fn or _auto_cols_fn(expected, frozenset(list_companions))
+    fn = cols_fn or _auto_cols_fn(expected)
     prefix = f"part-{chunk_suffix}-" if chunk_suffix else "part-"
 
     def _fname_expr():
@@ -322,80 +241,55 @@ def export_parquet(
         # re-shuffles, or carries finished units past the scan
         todo = planned.join(F.broadcast(ex_df), "_fname", "left_anti")
     order = sort_col or salt_col
-    # byte determinism: tie-break by EVERY remaining sortable column,
-    # including the validity companions (a NULL and a NaN double arrive
-    # as identical NaN values — only the companion separates them; r7
-    # review pass 7 #4) and non-_KINDS scalars under a custom cols_fn;
-    # numeric list columns tie-break through derived byte keys built in
-    # write_one (values + element companions — r7 review pass 8 #1)
+    # byte determinism: tie-break by EVERY remaining sortable column, then
+    # by byte keys of the numeric list columns
     scalar_cols = [
         c for c in out_cols
         if c != order
         and not expected[c].startswith(("array<", "map<", "struct<"))
-    ] + [f"__valid_{n}" for n in companions]
-    # tie-break serialization dtype per numeric list column: integer lists
-    # keep their NATIVE int64 width — routing them through float64 would
-    # collapse distinct array<bigint> values at/above 2^53 under duplicate
-    # leading keys, letting retried attempts commit non-byte-identical
-    # files (r7 ADVICE #4); floats keep float64 (NaN payloads normalize)
-    list_sort_dt = {
-        n: (np.int64 if _KINDS[t[6:-1]][1] in (np.int32, np.int64)
-            else np.float64)
+    ]
+    # integer and boolean lists key on exact int64, float lists on float64
+    list_key_dt = {
+        n: np.float64 if t[6:-1] in ("float", "double") else np.int64
         for n, t in expected.items()
         if t.startswith("array<") and t[6:-1] in _KINDS
-        and _KINDS[t[6:-1]][0] != "utf8"
+        and t[6:-1] != "string"
     }
-    list_cols = list(list_sort_dt)
 
-    def write_one(pdf: pd.DataFrame) -> pd.DataFrame:
+    def write_one(tbl):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
         from engine import parquet_out
 
-        chunk_id = pdf["chunk_id"].iloc[0]
-        name = pdf["_fname"].iloc[0]
+        chunk_id = tbl.column("chunk_id")[0].as_py()
+        name = tbl.column("_fname")[0].as_py()
         # deterministic bytes: a speculative/retried attempt must commit
-        # IDENTICAL content under the same final name — sort by the
-        # leading key, tie-broken by every remaining scalar column and
-        # byte-serialized numeric-list keys (each list normalizes to ONE
-        # dtype per column — int64 for integer elements, float64 for float
-        # elements — so per-cell dtype widening cannot split equal lists
-        # and bigint values at/above 2^53 stay distinct)
-        extra = {}
-        for n in list_cols:
-            dt = list_sort_dt[n]
-            extra[f"__lsort_{n}"] = [
-                None if x is None else np.asarray(x, dt).tobytes()
-                for x in pdf[n]
-            ]
-        for n in list_companions:
-            extra[f"__evsort_{n}"] = [
-                None if m is None
-                else np.packbits(np.asarray(m, bool)).tobytes()
-                for m in pdf[f"__evalid_{n}"]
-            ]
-        if extra:
-            pdf = pdf.assign(**extra)
-        pdf = pdf.sort_values(
-            [order, *scalar_cols, *extra], kind="mergesort"
+        # IDENTICAL content under the same final name
+        keys = [tbl.column(c).combine_chunks() for c in (order, *scalar_cols)]
+        keys += [
+            _list_key(tbl.column(n).combine_chunks(), dt)
+            for n, dt in list_key_dt.items()
+        ]
+        names = [str(i) for i in range(len(keys))]
+        idx = pc.sort_indices(
+            pa.Table.from_arrays(keys, names=names),
+            sort_keys=[(k, "ascending") for k in names],
         )
-        data = pdf[[*out_cols,
-                    *(f"__valid_{n}" for n in companions),
-                    *(f"__evalid_{n}" for n in list_companions)]]
+        data = tbl.select(out_cols).take(idx)
         path = os.path.join(out_dir, name)
         tmp = os.path.join(out_dir, f"_tmp-{uuid.uuid4().hex}-{name}")
         info = parquet_out.write_table(tmp, fn(data, parquet_out),
                                        **write_kwargs)
         os.replace(tmp, path)
-        return pd.DataFrame(
+        return pa.table(
             {"chunk_id": [chunk_id], "path": [path],
              "rows": [info["rows"]], "resumed": [False]}
         )
 
-    written = todo.groupBy("chunk_id").applyInPandas(
-        lambda _key, pdf: write_one(pdf), _MANIFEST_SCHEMA
+    manifest = todo.groupBy("chunk_id").applyInArrow(
+        write_one, _MANIFEST_SCHEMA
     )
-    # materialize NOW: the export must run exactly once, not once per
-    # caller action on a lazy plan
-    rows = [tuple(r) for r in written.collect()]
     if resume and existing:
         # resumed-unit manifest WITHOUT re-scanning data rows: per-key
         # counts -> bucket_n -> every (key, salt) chunk_id, joined with
@@ -405,7 +299,7 @@ def export_parquet(
             F.lit(chunk_suffix) if chunk_suffix
             else F.lit(None).cast("string")
         )
-        units = (
+        resumed = (
             skew.bucket_counts(df, bucket_key, rows_per_bucket)
             .select(
                 F.col(bucket_key),
@@ -424,8 +318,11 @@ def export_parquet(
                 "chunk_id",
                 F.concat(F.lit(out_dir.rstrip("/") + "/"),
                          F.col("_fname")).alias("path"),
+                F.lit(None).cast("long").alias("rows"),
+                F.lit(True).alias("resumed"),
             )
         )
-        rows += [(r["chunk_id"], r["path"], None, True)
-                 for r in units.collect()]
-    return spark.createDataFrame(rows, _MANIFEST_SCHEMA)
+        manifest = manifest.unionByName(resumed)
+    # materialize NOW, in one action: the export must run exactly once,
+    # not once per caller action on a lazy plan
+    return spark.createDataFrame(manifest.collect(), _MANIFEST_SCHEMA)

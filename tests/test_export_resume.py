@@ -120,9 +120,9 @@ def test_leftover_tmp_is_ignored(spark, table, tmp_path):
 
 
 def test_scalar_nulls_roundtrip_as_real_nulls(spark, tmp_path):
-    """Spark-side validity companions carry NULL across the pandas hop:
-    int NULLs neither crash nor become INT_MIN, and double NULLs stay
-    distinguishable from genuine NaN VALUES (r7 review pass 6 #1/#2)."""
+    """Scalar validity comes off the Arrow bitmap: int NULLs neither
+    crash nor become INT_MIN, and double NULLs stay distinguishable from
+    genuine NaN VALUES (r7 review pass 6 #1/#2)."""
     import math
 
     import pyarrow.parquet as pq
@@ -149,8 +149,8 @@ def test_scalar_nulls_roundtrip_as_real_nulls(spark, tmp_path):
 
 
 def test_null_list_elements_roundtrip(spark, tmp_path):
-    """Element NULLs ride per-element companions: int-list NULLs neither
-    crash nor become INT_MIN (r7 review pass 6 #1), and float-list
+    """Element NULLs come off the child validity bitmap: int-list NULLs
+    neither crash nor become INT_MIN (r7 review pass 6 #1), and float-list
     element NULLs stay distinguishable from genuine NaN values."""
     import math
 
@@ -201,16 +201,20 @@ def test_duplicate_sort_keys_still_byte_deterministic(spark, tmp_path):
 
 def test_list_rows_tiebreak_deterministically(spark, tmp_path):
     """Rows tying on every scalar but differing in list content — or
-    ONLY in element-NULL vs NaN — still commit byte-identical files
-    across independent exports (r7 review pass 8 #1)."""
+    ONLY in element-NULL vs NaN, or in a scalar double's NULL vs NaN —
+    still commit byte-identical files across independent exports (r7
+    review pass 8 #1)."""
     rows = [
-        ("k", "s", [3, 1], [float("nan")]),
-        ("k", "s", [1, 2], [None]),
-        ("k", "s", None, [2.5]),
-        ("k", "s", [1, 2], [None, 1.0]),
+        ("k", "s", [3, 1], [float("nan")], 0.5),
+        ("k", "s", [1, 2], [None], 0.5),
+        ("k", "s", None, [2.5], 0.5),
+        ("k", "s", [1, 2], [None, 1.0], 0.5),
+        # tie on everything but a scalar NULL vs a NaN value
+        ("k", "s", [4], [4.0], None),
+        ("k", "s", [4], [4.0], float("nan")),
     ]
     schema = ("doc_id string, source string, xs array<int>, "
-              "fs array<double>")
+              "fs array<double>, d double")
     o1, o2 = str(tmp_path / "l1"), str(tmp_path / "l2")
     for o, order in ((o1, rows), (o2, rows[::-1])):
         df = spark.createDataFrame(order, schema).repartition(4)
@@ -311,30 +315,32 @@ def test_streaming_parquet_sink_exactly_once(spark, tmp_path):
     assert spark.read.parquet(out).count() == 200
 
 
-def test_bigint_beyond_2p53_with_nulls_fails_clean(spark, tmp_path):
-    """A widened bigint column whose values exceed 2^53 was ALREADY
-    corrupted by the pandas hop — the export must refuse, not commit
-    rounded values (r7 review pass 7 #1)."""
-    df = spark.createDataFrame(
-        [("a", "s", 2**53 + 1), ("b", "s", None)],
-        "doc_id string, source string, v bigint",
-    )
-    with pytest.raises(Exception, match="2\\^53"):
+def test_bigint_beyond_2p53_with_nulls_roundtrips(spark, tmp_path):
+    """int64 values beyond 2^53 next to NULLs come back exact, both in a
+    bigint column and as array<bigint> elements next to a NULL element:
+    values and validity come off the Arrow buffers, nothing widens to
+    float64."""
+    import pyarrow.parquet as pq
+
+    big = 2**53 + 1
+    cases = [
+        ("v bigint", [("a", "s", big), ("b", "s", None), ("c", "s", 7)]),
+        ("xs array<bigint>",
+         [("a", "s", [None, big]), ("b", "s", [-big, None, 7]),
+          ("c", "s", None)]),
+    ]
+    for i, (col, rows) in enumerate(cases):
+        df = spark.createDataFrame(rows, f"doc_id string, source string, {col}")
+        out = str(tmp_path / f"big{i}")
         export_job.export_parquet(
-            df, str(tmp_path / "big"), bucket_key="source",
-            salt_col="doc_id",
+            df, out, bucket_key="source", salt_col="doc_id",
         )
-    # small nullable bigints stay exact
-    df2 = spark.createDataFrame(
-        [("a", "s", 7), ("b", "s", None)],
-        "doc_id string, source string, v bigint",
-    )
-    out = str(tmp_path / "small")
-    export_job.export_parquet(
-        df2, out, bucket_key="source", salt_col="doc_id",
-    )
-    back = {r.doc_id: r.v for r in spark.read.parquet(out).collect()}
-    assert back == {"a": 7, "b": None}
+        name = col.split()[0]
+        want = {r[0]: r[2] for r in rows}
+        assert {r["doc_id"]: r[name]
+                for r in pq.read_table(out).to_pylist()} == want
+        back = spark.read.parquet(out).collect()
+        assert {r.doc_id: r[name] for r in back} == want
 
 
 def test_null_bucket_key_rejected(spark, tmp_path):

@@ -133,3 +133,43 @@ def test_delta_monotone_is_tiny():
     vals = np.cumsum(np.ones(4096, np.int64)).astype(np.int32)  # step == 1
     buf = delta_for.encode(vals, "int32")
     assert len(buf) < 200  # 32 blocks x ~6 bytes + header
+
+
+# --- truncated DELTA_BINARY_PACKED streams fail loudly ----------------------
+
+
+def _delta_300(dtype="int32"):
+    # 299 deltas -> blocks of 128, 128 and 43 deltas; every miniblock is
+    # 11 bits wide, so block 2 carries 2 x 44 payload bytes
+    vals = np.random.default_rng(0).integers(0, 1000, 300).astype(dtype)
+    return vals, delta_for.encode(vals, dtype)
+
+
+@pytest.mark.parametrize(
+    "cut, msg",
+    [
+        # 7 header bytes + block 0's 2-byte min_delta, then 1 of 4 widths
+        (10, "at byte 9: block 0 needs 4 miniblock widths, 1 left"),
+        # the 465-byte stream loses 3 bytes of block 2's payload
+        (462, "at byte 377: block 2 miniblocks need 88 bytes, 85 left"),
+    ],
+)
+def test_delta_truncated_raises(cut, msg):
+    _, buf = _delta_300()
+    assert len(buf) == 465
+    with pytest.raises(ValueError, match=f"truncated DELTA_BINARY_PACKED stream {msg}"):
+        delta_for.decode(buf[:cut], 300)
+
+
+@pytest.mark.parametrize("dtype", ["int32", "int64"])
+def test_delta_every_cut_raises(dtype):
+    vals, buf = _delta_300(dtype)
+    np.testing.assert_array_equal(delta_for.decode(buf, 300, dtype), vals)
+    out, consumed = delta_for.decode_stream(buf + b"\x00", dtype)
+    np.testing.assert_array_equal(out, vals)
+    assert consumed == len(buf)
+    for cut in range(len(buf)):
+        with pytest.raises(ValueError, match="truncated"):
+            delta_for.decode(buf[:cut], 300, dtype)
+        with pytest.raises(ValueError, match="truncated"):
+            delta_for.decode_stream(buf[:cut], dtype)
