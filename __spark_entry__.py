@@ -1923,7 +1923,7 @@ def _q_golden_alltypes(spark, sf_dir) -> DataFrame:
     alltypes golden file — which the reference itself tests against
     (src/file/reader.rs:545-703) — decoded by the ENGINE's thrift footer
     parser + PLAIN/PLAIN_DICTIONARY/RLE codecs through the distributed
-    mapInPandas read path, vs DuckDB's independent parquet reader on the
+    mapInArrow read path, vs DuckDB's independent parquet reader on the
     same file. All 11 columns incl. INT96 timestamps (surfaced as epoch
     nanoseconds)."""
     from engine import parquet_compat
@@ -2613,7 +2613,7 @@ def _q_golden_nested_lists(spark, sf_dir) -> DataFrame:
     """REPEATED-column reader interop (VERDICT r5 #3): the reference's
     3-deep nested-list golden file assembled to ROWS by the engine's
     Dremel assembler (parquet_compat.assemble_repeated, reference
-    src/record/reader.rs:334-376) through the distributed mapInPandas
+    src/record/reader.rs:334-376) through the distributed mapInArrow
     path, rendered as JSON, vs DuckDB's independent reader on the same
     file — null inner lists included."""
     from engine import parquet_compat

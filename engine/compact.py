@@ -292,7 +292,7 @@ def compact_parquet_files(spark, paths: list, out_dir: str,
     paths_df = spark.createDataFrame(
         [(p,) for p in paths], "path string"
     ).repartition(len(paths))
-    ledger = paths_df.mapInPandas(pc._ledger_plan(), pc.LEDGER_SCHEMA)
+    ledger = paths_df.mapInArrow(pc._ledger_plan(), pc.LEDGER_SCHEMA)
     bins = pc.pack_row_group_bins(ledger.collect(), paths, target_file_bytes)
 
     def write_bin(batches):

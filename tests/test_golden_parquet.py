@@ -157,7 +157,7 @@ def test_malformed_footer_fails_clean(tmp_path):
 
 
 def test_spark_distributed_golden_read(spark):
-    """read_parquet_with_engine: the mapInPandas path returns the same
+    """read_parquet_with_engine: the mapInArrow path returns the same
     rows as the driver-side decode, with the footer-derived schema."""
     path = f"{DATA}/alltypes_plain.parquet"
     df = pc.read_parquet_with_engine(

@@ -12,6 +12,8 @@ import pytest
 from engine import parquet_compat as pc
 from engine import parquet_out as po
 
+from _assembly_oracle import _assemble_walk
+
 GOLDEN = "/root/reference/data"
 
 # rows: [1,2,3], [], None, [4,None,6], [7]
@@ -302,7 +304,8 @@ def test_repeated_primitive_leaf_assembles():
     defs = np.array([1, 1, 1, 0, 1, 1], np.uint64)
     reps = np.array([0, 1, 1, 0, 0, 1], np.uint64)
     records = pc.assemble_repeated(col, vals, defs, reps)
-    assert records == [[1, 2, 3], [], [4, 5]]
+    assert records.to_pylist() == [[1, 2, 3], [], [4, 5]]
+    assert _assemble_walk(col, vals, defs, reps) == records.to_pylist()
 
 
 def test_empty_list_table_writes(tmp_path):

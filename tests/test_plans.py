@@ -206,3 +206,48 @@ def test_generic_table_paths_are_arrow_native(spark):
     assert "FlatMapGroupsInPandas" not in dec and "zip_with" not in dec, dec
     hist = _plan(decode_job.token_histogram(chunks, column="event_id"))
     assert "MapInArrow" in hist and "Pandas" not in hist, hist
+
+
+def test_foreign_parquet_read_is_arrow_native(spark, tmp_path):
+    """The distributed foreign-parquet read (plain and predicate-pruned
+    with prune_stats) maps Arrow batches, and every batch a unit yields
+    — multi-row-group, with flat, string and nested list columns — has
+    exactly the Arrow schema Spark declares for the DataFrame."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from engine import parquet_compat as pc
+
+    n = 400
+    rows = [None if i % 7 == 0 else [[i, None], []][: i % 3] for i in range(n)]
+    path = str(tmp_path / "lists.parquet")
+    pq.write_table(
+        pa.table({
+            "id": pa.array(range(n), pa.int64()),
+            "f": pa.array([i / 4 if i % 5 else None for i in range(n)],
+                          pa.float32()),
+            "s": pa.array([f"v{i % 9}" for i in range(n)]),
+            "xss": pa.array(rows, pa.list_(pa.list_(pa.int32()))),
+        }),
+        path, row_group_size=100, write_page_index=True,
+    )
+    n_rg = pq.ParquetFile(path).num_row_groups
+    assert n_rg == 4
+    for predicate, prune_stats in ((None, False), (("id", ">=", 150), True)):
+        df = pc.read_parquet_with_engine(
+            spark, path, predicate=predicate, prune_stats=prune_stats,
+            target_split_bytes=1,
+        )
+        plan = _plan(df)
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+        want = to_arrow_schema(df.schema)
+        names = ["id", "f", "s", "xss.list.element.list.element"]
+        for rg in range(n_rg):
+            batch = pc._unit_batch(path, rg, names, predicate, prune_stats)
+            assert batch.schema == want, (batch.schema, want)
+        got = sorted(
+            (r["id"], r["xss.list.element.list.element"]) for r in df.collect()
+        )
+        lo = 0 if predicate is None else 150
+        assert got == [(i, rows[i]) for i in range(lo, n)]

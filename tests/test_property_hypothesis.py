@@ -386,79 +386,142 @@ def test_decode_wav_never_crashes_unclean(data):
     assert samples.ndim == 2 and sr > 0
 
 
-# --- vectorized rep-1 Dremel assembly vs the Python-walk oracle (round 7) ---
+# --- any-depth Dremel assembly vs the Python-walk oracle and pyarrow ---
+
+_LEAVES = {
+    "int32": (st.integers(-(2**31), 2**31 - 1), "int32"),
+    "double": (st.floats(allow_nan=False), "float64"),
+    "string": (st.text(max_size=4), "string"),
+    "binary": (st.binary(max_size=4), "binary"),
+}
 
 
 @st.composite
-def _rep1_lists(draw):
-    """Rows for a nullable list<nullable int64> column: None, [], or a
-    list mixing values and None elements."""
-    return draw(
-        st.lists(
-            st.one_of(
-                st.none(),
-                st.lists(
-                    st.one_of(
-                        st.none(),
-                        st.integers(-(2**40), 2**40),
-                    ),
-                    max_size=6,
-                ),
-            ),
-            min_size=1,
-            max_size=40,
+def _nested_case(draw):
+    """A depth-1..3 list column with null and empty lists at every level
+    and null elements, optionally under a nullable struct wrapper."""
+    import pyarrow as pa
+
+    depth = draw(st.integers(1, 3))
+    kind = draw(st.sampled_from(sorted(_LEAVES)))
+    values, arrow_name = _LEAVES[kind]
+    elem = st.one_of(st.none(), values)
+    typ = getattr(pa, arrow_name)()
+    for _ in range(depth):
+        elem = st.one_of(st.none(), st.lists(elem, max_size=4))
+        typ = pa.list_(typ)
+    rows = draw(st.lists(elem, min_size=1, max_size=30))
+    if draw(st.booleans()):
+        nulls = draw(
+            st.lists(st.booleans(), min_size=len(rows), max_size=len(rows))
         )
-    )
+        rows = [None if n else {"xs": r} for r, n in zip(rows, nulls)]
+        typ = pa.struct([("xs", typ)])
+    page_version = draw(st.sampled_from(["1.0", "2.0"]))
+    return rows, typ, draw(st.booleans()), page_version
 
 
-@settings(max_examples=40, deadline=None)
-@given(rows=_rep1_lists())
-def test_assemble_rep1_matches_python_walk(tmp_path_factory, rows):
-    """_assemble_rep1 (numpy + one ListArray constructor) must reproduce
-    the per-entry Python walk exactly on every list/null/empty shape —
-    the walk is the semantics oracle (reference
-    src/record/reader.rs:334-376)."""
+@settings(max_examples=60, deadline=None)
+@given(case=_nested_case())
+def test_assemble_repeated_matches_walk_and_pyarrow(tmp_path_factory, case):
+    """assemble_repeated (one list level per repeated node, numpy masks
+    and one ListArray constructor each) must equal the per-entry Python
+    walk — the semantics oracle (reference src/record/reader.rs:334-376)
+    — and pyarrow's own read, on every list/null/empty shape of depth
+    1-3, and read_table's nested lists must equal both."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from _assembly_oracle import _assemble_walk
     from engine import parquet_compat as pc
-    from engine import parquet_out as po
 
-    tmp = tmp_path_factory.mktemp("rep1")
-    path = str(tmp / "lists.parquet")
-    offsets = np.zeros(len(rows) + 1, np.int64)
-    dense = []
-    elem_valid = []
-    row_valid = np.ones(len(rows), bool)
-    for i, r in enumerate(rows):
-        if r is None:
-            row_valid[i] = False
-            offsets[i + 1] = offsets[i]
-            continue
-        offsets[i + 1] = offsets[i] + len(r)
-        for e in r:
-            elem_valid.append(e is not None)
-            if e is not None:
-                dense.append(e)
-    po.write_table(
-        path,
-        [
-            (
-                "xs",
-                "list<int64>",
-                "PLAIN",
-                (
-                    offsets,
-                    np.array(dense, np.int64),
-                    np.array(elem_valid, bool),
-                ),
-                row_valid,
-            )
-        ],
+    rows, typ, use_dict, page_version = case
+    path = str(tmp_path_factory.mktemp("nested") / "nested.parquet")
+    pq.write_table(
+        pa.table({"c": pa.array(rows, typ)}), path,
+        use_dictionary=use_dict, data_page_version=page_version,
     )
-    info = pc.read_file_info(path)
-    col = next(c for c in info.columns if c.max_rep == 1)
+    want = pq.read_table(path).column("c").to_pylist()
+    if pa.types.is_struct(typ):
+        want = [None if r is None else r["xs"] for r in want]
+    (col,) = pc.read_file_info(path).columns
     vals, defs, reps = pc.read_column_with_levels(path, col)
-    fast = pc._assemble_rep1(col, vals, defs, reps)
-    slow = pc._assemble_walk(col, vals, defs, reps)
-    assert fast == slow == rows
+    got = pc.assemble_repeated(col, vals, defs, reps)
+    assert got.type == pc._arrow_type(col)
+    assert got.to_pylist() == _assemble_walk(col, vals, defs, reps) == want
+    records, valid = pc.read_table(path)[col.path]
+    assert records == want
+    assert valid.tolist() == [r is not None for r in want]
+
+
+def _dremel_streams(nodes, n_records, rnd):
+    """Level streams of ``n_records`` random records along one schema
+    path (req/opt/rep nodes): every optional node may be undefined and
+    every repeated node may hold zero to three entries."""
+    vals, defs, reps = [], [], []
+
+    def gen(i, d, r):
+        if i == len(nodes):
+            vals.append(rnd.randint(-9, 9))
+            defs.append(d)
+            reps.append(r)
+            return
+        nd = nodes[i]
+        if nd["kind"] == "req":
+            gen(i + 1, d, r)
+        elif nd["kind"] == "opt" and rnd.random() < 0.25:
+            defs.append(d)
+            reps.append(r)
+        elif nd["kind"] == "opt":
+            gen(i + 1, d + 1, r)
+        else:
+            k = rnd.choice([0, 0, 1, 2, 3])
+            if k == 0:
+                defs.append(d)
+                reps.append(r)
+            for j in range(k):
+                gen(i + 1, d + 1, r if j == 0 else nd["rep"])
+
+    for _ in range(n_records):
+        gen(0, 0, 0)
+    return (np.array(vals, np.int64), np.array(defs, np.uint64),
+            np.array(reps, np.uint64))
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    kinds=st.tuples(
+        st.lists(st.sampled_from(["req", "opt", "rep"]), max_size=6),
+        st.integers(0, 6),
+    ).map(lambda t: t[0][: t[1]] + ["rep"] + t[0][t[1]:]),
+    n_records=st.integers(0, 12),
+    rnd=st.randoms(use_true_random=False),
+)
+def test_assemble_repeated_matches_walk_on_any_schema_path(kinds, n_records,
+                                                           rnd):
+    """Every schema path a writer can produce — required lists, optional
+    groups between repeated levels, legacy repeated groups without LIST
+    annotation, a repeated primitive leaf — assembles exactly as the
+    per-entry walk does, through the public adapter too."""
+    from _assembly_oracle import _assemble_walk
+    from engine import parquet_compat as pc
+
+    nodes, d, r = [], 0, 0
+    for i, k in enumerate(kinds):
+        d += k != "req"
+        r += k == "rep"
+        nodes.append({"name": f"n{i}", "kind": k, "def": d, "rep": r})
+    col = pc.ColumnInfo(
+        path="p", phys="int64", type_length=0, max_def=d, max_rep=r,
+        encodings=[], codec=None, num_values=0, start_offset=0,
+        total_compressed=0, nodes=nodes,
+    )
+    vals, defs, reps = _dremel_streams(nodes, n_records, rnd)
+    got = pc.assemble_repeated(col, vals, defs, reps)
+    want = _assemble_walk(col, vals, defs, reps)
+    assert got.type == pc._arrow_type(col)
+    assert got.to_pylist() == want
+    assert pc._public({"p": got})["p"][0] == want
 
 
 # --- pruned read == full read + filter (round 7 differential oracle) ---

@@ -8,6 +8,8 @@ import pytest
 from engine import parquet_compat as pc
 from engine.ops import flac
 
+from _assembly_oracle import _assemble_walk
+
 
 # --- PARQUET-251: legacy min/max (fields 1/2) trust rules -------------------
 
@@ -70,12 +72,12 @@ def test_uint32_repeated_elements_widen_to_positive_longs():
     vals = np.array([1, -1, -2], np.int32)  # 1, 2^32-1, 2^32-2 unsigned
     defs = np.array([1, 1, 1], np.uint64)
     reps = np.array([0, 1, 0], np.uint64)
-    assert pc.assemble_repeated(col, vals, defs, reps) == [
+    assert pc.assemble_repeated(col, vals, defs, reps).to_pylist() == [
         [1, 2**32 - 1],
         [2**32 - 2],
     ]
     # the differential-oracle walk agrees
-    assert pc._assemble_walk(col, vals, defs, reps) == [
+    assert _assemble_walk(col, vals, defs, reps) == [
         [1, 2**32 - 1],
         [2**32 - 2],
     ]
