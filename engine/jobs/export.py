@@ -13,9 +13,12 @@ rename), and a re-run anti-joins the already-committed file list BEFORE
 the shuffle — finished units are never re-encoded, re-shuffled, or even
 re-read past the scan.
 
-Validity comes straight off the Arrow bitmaps of the ``applyInArrow``
-batches, so scalar NULLs, null lists and null list elements round-trip
-as real parquet nulls, distinct from NaN values, with int64 exact.
+Each unit's ``applyInArrow`` table goes straight to
+``parquet_out.write_table``, whose one Dremel shredder writes any
+nesting of struct, array and map; validity comes off the Arrow bitmaps,
+so NULLs at every level round-trip as real parquet nulls, distinct from
+NaN values, with int64 exact. Nullability follows the DataFrame schema,
+so every unit file of one export has the same parquet schema.
 
 Reference: the FileSink/write_table half of ``src/file/writer.rs``;
 resumability is this engine's north-rule addition (the reference has no
@@ -30,79 +33,14 @@ import uuid
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import skew
-from ..codecs import bytearrays
 
 _MANIFEST_SCHEMA = "chunk_id string, path string, rows long, resumed boolean"
 
-# Spark scalar type -> writer alias (the numpy dtype name for fixed types)
-_KINDS = {
-    "int": "int32",
-    "bigint": "int64",
-    "float": "float32",
-    "double": "float64",
-    "boolean": "bool",
-    "string": "utf8",
-}
-
-
-def _valid(arr):
-    """Validity off the Arrow bitmap, or None when nothing is null."""
-    if not arr.null_count:
-        return None
-    return arr.is_valid().to_numpy(zero_copy_only=False)
-
-
-def _auto_cols_fn(expected: dict):
-    """Default column-spec builder from the DataFrame's OWN schema:
-    int/bigint/float/double/boolean/string plus array<non-string scalar>
-    map to the writer's aliases with the AUTO selector, every value and
-    validity read straight off the Arrow buffers (NaN is a value, never a
-    null)."""
-
-    def cols_fn(tbl, parquet_out):
-        import pyarrow.compute as pc
-
-        cols = []
-        for name, spark_t in expected.items():
-            arr = tbl.column(name).combine_chunks()
-            elem_t = spark_t[6:-1] if spark_t.startswith("array<") else None
-            if elem_t in _KINDS and elem_t != "string":
-                # offsets span EVERY row (a null row = zero entries — the
-                # writer's null-list contract); dense non-null elements
-                lengths = pc.list_value_length(arr).fill_null(0)
-                offsets = np.concatenate(
-                    ([0], np.cumsum(lengths.to_numpy(zero_copy_only=False)))
-                ).astype(np.int64)
-                child = arr.flatten()
-                dense = child.drop_null().to_numpy(zero_copy_only=False)
-                cols.append(
-                    (name, f"list<{_KINDS[elem_t]}>", "AUTO",
-                     (offsets, dense, _valid(child)), _valid(arr))
-                )
-            elif spark_t == "string":
-                cols.append(
-                    (name, "utf8", "AUTO",
-                     bytearrays.flat_from_arrow(arr.drop_null()), _valid(arr))
-                )
-            elif spark_t in _KINDS:
-                # fixed types span every row: null slots hold zeros
-                valid = _valid(arr)
-                if valid is not None:
-                    arr = arr.fill_null(False if spark_t == "boolean" else 0)
-                cols.append(
-                    (name, _KINDS[spark_t], "AUTO",
-                     arr.to_numpy(zero_copy_only=False), valid)
-                )
-            else:
-                raise ValueError(
-                    f"export_parquet default spec cannot write {name}: "
-                    f"{spark_t} — pass cols_fn for this table"
-                )
-        return cols
-
-    return cols_fn
+# Spark element types whose lists sort by numeric byte keys
+_NUMERIC = ("int", "bigint", "float", "double", "boolean")
 
 
 def _list_key(arr, dt):
@@ -147,12 +85,14 @@ def export_parquet(
     """Write ``df`` as a directory of engine-made parquet files, one per
     deterministic bucket, resumable after a kill.
 
-    ``cols_fn(tbl, parquet_out) -> columns spec`` customizes the writer
-    input (same contract as :func:`engine.parquet_out.write_table`);
-    ``tbl`` is the unit's rows as a ``pyarrow.Table`` of ``df``'s
-    columns, already in file order. The default derives the spec from
-    the DataFrame schema, NULL-faithfully for every accepted type (see
-    module docstring). ``sort_col`` leads the in-file row order (defaults
+    Each unit's rows go to :func:`engine.parquet_out.write_table` as a
+    ``pyarrow.Table`` of ``df``'s columns, already in file order, with
+    the DataFrame's nullability: every column type the writer takes
+    (scalars, strings, dates, timestamps and any nesting of struct,
+    array and map over them) lands NULL-faithfully. ``cols_fn(tbl,
+    parquet_out)`` is only for callers that reshape the unit first; it
+    returns what ``write_table`` takes (a table or the tuple spec).
+    ``sort_col`` leads the in-file row order (defaults
     to ``salt_col``); every remaining scalar column tie-breaks in one
     Arrow sort (NaN before NULL), then numeric list columns through byte
     keys of their values and element validity, so retried attempts commit
@@ -189,6 +129,7 @@ def export_parquet(
         for f in df.schema.fields
     }
     out_cols = list(df.columns)
+    schema = to_arrow_schema(df.schema)
     if bucket_key is None:
         # no natural key: uniform salted buckets over ONE logical key —
         # unit count = ceil(rows / rows_per_bucket), skew-free by salt
@@ -203,7 +144,6 @@ def export_parquet(
             "— coalesce the key first (e.g. F.coalesce(col, lit('?'))) "
             "or use bucket_key=None for uniform buckets"
         )
-    fn = cols_fn or _auto_cols_fn(expected)
     prefix = f"part-{chunk_suffix}-" if chunk_suffix else "part-"
 
     def _fname_expr():
@@ -252,8 +192,7 @@ def export_parquet(
     list_key_dt = {
         n: np.float64 if t[6:-1] in ("float", "double") else np.int64
         for n, t in expected.items()
-        if t.startswith("array<") and t[6:-1] in _KINDS
-        and t[6:-1] != "string"
+        if t.startswith("array<") and t[6:-1] in _NUMERIC
     }
 
     def write_one(tbl):
@@ -276,11 +215,13 @@ def export_parquet(
             pa.Table.from_arrays(keys, names=names),
             sort_keys=[(k, "ascending") for k in names],
         )
-        data = tbl.select(out_cols).take(idx)
+        data = tbl.select(out_cols).take(idx).cast(schema)
         path = os.path.join(out_dir, name)
         tmp = os.path.join(out_dir, f"_tmp-{uuid.uuid4().hex}-{name}")
-        info = parquet_out.write_table(tmp, fn(data, parquet_out),
-                                       **write_kwargs)
+        info = parquet_out.write_table(
+            tmp, cols_fn(data, parquet_out) if cols_fn else data,
+            **write_kwargs,
+        )
         os.replace(tmp, path)
         return pa.table(
             {"chunk_id": [chunk_id], "path": [path],

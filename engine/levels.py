@@ -39,46 +39,7 @@ def decode_v1(buf: bytes | np.ndarray, max_level: int, n: int) -> tuple[np.ndarr
     return rle.decode_len_prefixed(buf, width, n)
 
 
-def encode_bit_packed(levels: np.ndarray, max_level: int) -> bytes:
-    """Legacy BIT_PACKED level encoding (parquet v1 back-compat,
-    reference ``src/encodings/levels.rs:57,76-80``): plain fixed-width
-    packing, no run headers, final byte zero-padded. The writer default is
-    the RLE hybrid; this variant exists so the engine can read (and, for
-    parity tests, write) the deprecated layout."""
-    width = level_bit_width(max_level)
-    if width == 0:
-        return b""
-    return bitpack.pack(np.ascontiguousarray(levels, np.uint64), width)
-
-
-def decode_bit_packed(buf: bytes | np.ndarray, max_level: int, n: int) -> np.ndarray:
-    width = level_bit_width(max_level)
-    if width == 0:
-        return np.zeros(n, dtype=np.uint64)
-    return bitpack.unpack(buf, width, n)
-
-
-def encode_v2(levels: np.ndarray, max_level: int) -> bytes:
-    """Raw RLE hybrid, no length prefix (data page v2 keeps levels
-    uncompressed and tracks byte lengths in the page header,
-    reference src/column/page.rs:39-49)."""
-    width = level_bit_width(max_level)
-    return rle.encode(np.ascontiguousarray(levels, np.uint64), width)
-
-
-def decode_v2(buf: bytes | np.ndarray, max_level: int, n: int) -> np.ndarray:
-    width = level_bit_width(max_level)
-    return rle.decode(buf, width, n)
-
-
 # --- shredding helpers (values <-> levels + dense values) -------------------
-
-
-def shred_nullable(values: np.ndarray, valid: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(def_levels, non-null values): nulls are never written to the value
-    stream (reference src/column/writer.rs:304-322)."""
-    valid = np.ascontiguousarray(valid, dtype=bool)
-    return valid.astype(np.uint64), np.ascontiguousarray(values)[valid]
 
 
 def assemble_nullable(def_levels: np.ndarray, dense: np.ndarray, fill=0) -> tuple[np.ndarray, np.ndarray]:

@@ -481,7 +481,7 @@ def _unpack_msb(buf: np.ndarray, width: int, n: int) -> np.ndarray:
 
 
 def _decode_values(enc: str, payload: np.ndarray, nvals: int, col: ColumnInfo,
-                   dictionary):
+                   dictionary, page_at: str):
     """Decode ``nvals`` leaf values from one data page's value section using
     the ENGINE's codecs. Returns a numpy array (fixed types) or a
     (lengths, data-bytes) pair (byte arrays / FLBA / INT96)."""
@@ -492,6 +492,13 @@ def _decode_values(enc: str, payload: np.ndarray, nvals: int, col: ColumnInfo,
                              "any dictionary page")
         width = int(payload[0])
         idx = rle.decode(payload[1:], width, nvals).astype(np.int64)
+        n_dict = len(dictionary[0] if isinstance(dictionary, tuple)
+                     else dictionary)
+        if nvals and int(idx.max()) >= n_dict:
+            raise ValueError(
+                f"{col.path}: dictionary index {int(idx.max())} at or past "
+                f"the {n_dict}-entry dictionary (page at {page_at})"
+            )
         if isinstance(dictionary, tuple):  # byte-array dict: (lengths, data)
             lens, data = dictionary
             lens64 = lens.astype(np.int64)
@@ -589,22 +596,21 @@ def read_column(path: str, col: ColumnInfo):
 
 
 def read_column_with_levels(path: str, col: ColumnInfo,
-                            chunk: bytes | None = None,
-                            num_values: int | None = None):
+                            chunk: bytes | None = None):
     """Decode one column chunk of ANY nesting -> (values, def_levels,
     rep_levels): the raw Dremel leaf streams. ``values`` holds exactly the
     stored (non-null, def == max_def) leaf values in record order — the
     stream the engine's TreeBuilder analog assembles from — so foreign
     repeated columns validate the level grammar + value grammar without a
     second row-assembly implementation. rep_levels is all-zero for
-    non-repeated columns. ``chunk``/``num_values`` override the source
-    bytes and level-entry target — the page-pruned read path feeds a
-    synthetic buffer of (dict page + selected data pages only)."""
+    non-repeated columns. ``chunk`` overrides the source bytes — the
+    page-pruned read path feeds a synthetic buffer of (dict page +
+    selected data pages only), decoded to its end."""
+    base = col.start_offset if chunk is None else None
     if chunk is None:
         with open(path, "rb") as f:
             f.seek(col.start_offset)
             chunk = f.read(col.total_compressed)
-    target = col.num_values if num_values is None else num_values
     raw = np.frombuffer(chunk, np.uint8)
     pos = 0
     dictionary = None
@@ -612,7 +618,7 @@ def read_column_with_levels(path: str, col: ColumnInfo,
     defs_parts = []
     reps_parts = []
     n_done = 0
-    while n_done < target:
+    while (n_done < col.num_values) if base is not None else (pos < len(raw)):
         # fail-clean contract (same as the engine's chunk decoders): a
         # corrupt/misaligned page header parses into garbage field ids or
         # runs off the buffer — surface all of it as ValueError
@@ -627,17 +633,38 @@ def read_column_with_levels(path: str, col: ColumnInfo,
             raise ValueError(
                 f"{col.path}: malformed page header at offset {pos} ({e!r})"
             ) from e
+        # where the page sits, for errors: its file offset, or its offset
+        # in the page-pruned read's buffer of selected pages
+        page_at = (
+            f"offset {pos} of the selected pages" if base is None
+            else f"offset {base + pos}"
+        )
         body = raw[body_start : body_start + comp_len]
         pos = body_start + comp_len
+        # DictionaryPageHeader (1 num_values) / DataPageHeader (1
+        # num_values, 2 encoding) / DataPageHeaderV2 (1 num_values,
+        # 2 num_nulls, 4 encoding, 5-6 level byte lengths)
+        sub, need = {
+            _PAGE_DICT: (7, (1,)),
+            _PAGE_DATA: (5, (1, 2)),
+            _PAGE_DATA_V2: (8, (1, 2, 4, 5, 6)),
+        }.get(ptype, (None, ()))
+        if sub is None:
+            raise ValueError(f"{col.path}: unsupported page type {ptype}")
+        dh = header.get(sub)
+        missing = [f for f in need if not isinstance(dh, dict) or f not in dh]
+        if missing:
+            raise ValueError(
+                f"{col.path}: page header at {page_at} lacks "
+                f"field(s) {missing} of its type-{ptype} sub-header"
+            )
         if ptype == _PAGE_DICT:
-            dh = header[7]  # DictionaryPageHeader: 1 num_values
             payload = np.frombuffer(
                 _decompress(body.tobytes(), col.codec, raw_len), np.uint8
             )
             dictionary = _decode_dict_page(payload, dh[1], col)
             continue
         if ptype == _PAGE_DATA:
-            dh = header[5]  # DataPageHeader
             nlevels = dh[1]
             enc = _ENC.get(dh[2], str(dh[2]))
             payload = np.frombuffer(
@@ -676,15 +703,14 @@ def read_column_with_levels(path: str, col: ColumnInfo,
             else:
                 defs = np.full(nlevels, col.max_def, np.uint64)
             nvals = int((defs == col.max_def).sum())
-            vals_parts.append(
-                _decode_values(enc, payload[off:], nvals, col, dictionary)
-            )
+            vals_parts.append(_decode_values(
+                enc, payload[off:], nvals, col, dictionary, page_at
+            ))
             defs_parts.append(defs)
             reps_parts.append(reps)
             n_done += nlevels
             continue
         if ptype == _PAGE_DATA_V2:
-            dh = header[8]  # DataPageHeaderV2
             nlevels = dh[1]
             nnulls = dh[2]
             enc = _ENC.get(dh[4], str(dh[4]))
@@ -713,16 +739,19 @@ def read_column_with_levels(path: str, col: ColumnInfo,
             payload = np.frombuffer(vsec, np.uint8)
             nvals = nlevels - nnulls
             vals_parts.append(
-                _decode_values(enc, payload, nvals, col, dictionary)
+                _decode_values(enc, payload, nvals, col, dictionary, page_at)
             )
             defs_parts.append(defs)
             reps_parts.append(reps)
             n_done += nlevels
             continue
-        raise ValueError(f"{col.path}: unsupported page type {ptype}")
 
     defs = np.concatenate(defs_parts) if defs_parts else np.empty(0, np.uint64)
     reps = np.concatenate(reps_parts) if reps_parts else np.empty(0, np.uint64)
+    if not vals_parts and col.phys in ("byte_array", "flba", "int96"):
+        # a chunk without pages (zero rows) still yields the
+        # (lengths, data) form its leaf type takes
+        vals_parts = [(np.empty(0, np.int64), b"")]
     if vals_parts and isinstance(vals_parts[0], tuple):
         lens = np.concatenate([p[0] for p in vals_parts]).astype(np.int64)
         data = b"".join(p[1] for p in vals_parts)
@@ -995,21 +1024,7 @@ def _read_pages_subset(path: str, col: ColumnInfo, keep, locs):
             if k:
                 f.seek(p["offset"])
                 parts.append(f.read(p["comp_size"]))
-    synthetic = b"".join(parts)
-    # count the level entries the selected pages hold (headers only)
-    n_lev = 0
-    pos = 0
-    while pos < len(synthetic):
-        rd = _Reader(synthetic, pos)
-        h = rd.struct()
-        if h[1] == _PAGE_DATA:
-            n_lev += h[5][1]
-        elif h[1] == _PAGE_DATA_V2:
-            n_lev += h[8][1]
-        pos = rd.pos + h[3]
-    return read_column_with_levels(
-        path, col, chunk=synthetic, num_values=n_lev
-    )
+    return read_column_with_levels(path, col, chunk=b"".join(parts))
 
 
 def read_column_pruned_pages(path: str, col: ColumnInfo, lo, hi):
@@ -1760,8 +1775,9 @@ def read_table(path: str, columns: list | None = None,
 
 def _read_arrays(path: str, columns: list | None,
                  row_group: int | None) -> dict:
-    """``read_table`` before the adapter: {column: pa.Array}."""
-    parts: dict = {}
+    """``read_table`` before the adapter: {column: pa.Array}, in the
+    requested column order (file order without ``columns``)."""
+    parts: dict = {c: [] for c in columns or ()}
     for col in read_file_info(path).columns:
         if columns is not None and col.path not in columns:
             continue
@@ -1770,7 +1786,7 @@ def _read_arrays(path: str, columns: list | None,
         parts.setdefault(col.path, []).append(
             _column_array(col, *read_column_with_levels(path, col))
         )
-    return _concat(parts)
+    return _concat({k: v for k, v in parts.items() if v})
 
 
 def _spans_intersect(sel_rows: np.ndarray, a: int, b: int) -> bool:

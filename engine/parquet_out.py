@@ -1,38 +1,44 @@
 """Write REAL parquet files with the engine's own codecs — the inverse of
-``engine/parquet_compat.py``'s golden-file read path. Together they close
-the interop loop the reference lives in (``src/file/writer.rs`` emits
-files Impala/Spark can read): chunk payloads produced by
+``engine/parquet_compat.py``'s read path. Together they close the
+interop loop the reference lives in (``src/file/writer.rs`` emits files
+Impala/Spark can read): chunk payloads produced by
 ``engine/codecs/{plain,rle,delta_for,bytearrays,dictionary-grammar}`` are
 wrapped in thrift-compact page headers + a FileMetaData footer that
 pyarrow, DuckDB and Spark's built-in reader all consume.
 
-Scope (deliberately the engine's core value shapes, not a second general
-writer): flat required/optional columns of bool / int32 / int64 / float32
-/ float64 / byte_array (UTF8 or raw), plus REPEATED list columns
-(``list<elem>``) via the 3-level LIST convention — rep/def level shredding
-exactly as the reference's ``src/column/writer.rs:304-345`` (rows counted
-where rep == 0, ``:325-345``), so ``tokens array<int32>`` — this engine's
-flagship column — hands off to any plain parquet consumer; multiple row
-groups (``row_group_size``) with per-group min/max/null_count statistics +
-``column_orders`` so readers actually prune; data pages v1 AND v2
-(``data_page_version``); encodings PLAIN, PLAIN_DICTIONARY (v2:
-RLE_DICTIONARY), DELTA_BINARY_PACKED, DELTA_LENGTH_BYTE_ARRAY,
-DELTA_BYTE_ARRAY, RLE (boolean), BYTE_STREAM_SPLIT, plus
-``encoding='AUTO'`` through the engine's chunk selector; optional
-SNAPPY/GZIP/ZSTD/BROTLI/LZ4_RAW page compression. The engine's production
-container remains its own chunk format (frames + lineage + snapshots);
-this module is the interchange exit ramp — "a user of the reference could
-switch" includes handing files back to plain parquet readers.
+Input is an Arrow table at any nesting depth — struct, list and map in
+any combination over bool / int32 / int64 / float32 / float64 / binary /
+string / date32 / timestamp[ms|us] leaves — or the engine's scalar-leaf
+tuple spec, which one adapter turns into Arrow. One Dremel shredder
+(:func:`shred`, the exact inverse of ``parquet_compat.assemble_repeated``
+and the rule of the reference's ``src/column/writer.rs:304-345``) turns
+every column into leaf streams of def/rep levels plus dense values, and
+one schema walk emits the matching groups (struct -> group, list ->
+3-level LIST, map -> MAP / key_value). Every leaf then takes the same
+page loop: multiple row groups (``row_group_size``) with per-group
+min/max/null_count statistics + ``column_orders`` so readers actually
+prune; data pages v1 AND v2 (``data_page_version``); encodings PLAIN,
+PLAIN_DICTIONARY (v2: RLE_DICTIONARY) with a mid-chunk dictionary
+fallback, DELTA_BINARY_PACKED, DELTA_LENGTH_BYTE_ARRAY,
+DELTA_BYTE_ARRAY, RLE (boolean), BYTE_STREAM_SPLIT, plus ``'AUTO'``
+through the engine's chunk selector; optional SNAPPY/GZIP/ZSTD/BROTLI/
+LZ4_RAW page compression; a PageIndex on every chunk. The engine's
+production container remains its own chunk format (frames + lineage +
+snapshots); this module is the interchange exit ramp — "a user of the
+reference could switch" includes handing files back to plain parquet
+readers.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
+from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 
-from .codecs import bitpack, delta_for, plain, rle
+from .codecs import delta_for, plain, rle
 
 MAGIC = b"PAR1"
 
@@ -55,6 +61,12 @@ _PHYS_IDS = {
     "float64": 5,
     "byte_array": 6,
 }
+_FIXED_DTYPES = {
+    "int32": np.int32,
+    "int64": np.int64,
+    "float32": np.float32,
+    "float64": np.float64,
+}
 _ENC_IDS = {
     "PLAIN": 0,
     "PLAIN_DICTIONARY": 2,
@@ -70,92 +82,40 @@ _ENC_IDS = {
 # format — labeling frame bytes as id 5 would produce unreadable files
 # (r5 review #2). Modern readers (arrow, DuckDB, Spark) all take LZ4_RAW.
 _CODEC_IDS = {None: 0, "snappy": 1, "gzip": 2, "brotli": 4, "lz4": 7, "zstd": 6}
-# logical column aliases -> (physical type, ConvertedType id). UTF8=0,
-# DATE=6 (int32 days since epoch), TIMESTAMP_MILLIS=9, TIMESTAMP_MICROS=10
-# — the annotations that make readers surface str/date/timestamp columns.
-_LOGICAL = {
-    "utf8": ("byte_array", 0),
-    "date": ("int32", 6),
-    "timestamp_ms": ("int64", 9),
-    "timestamp_us": ("int64", 10),
+# tuple-spec aliases -> Arrow leaf types
+_SPEC_TYPES = {
+    "bool": pa.bool_(),
+    "int32": pa.int32(),
+    "int64": pa.int64(),
+    "float32": pa.float32(),
+    "float64": pa.float64(),
+    "byte_array": pa.large_binary(),
+    "utf8": pa.large_string(),
+    "date": pa.date32(),
+    "timestamp_ms": pa.timestamp("ms"),
+    "timestamp_us": pa.timestamp("us"),
 }
 
 
-def _list_struct_levels(counts, row_valid, sv_slice, fv_slice,
-                        elem_opt: bool, field_opt: bool):
-    """Rep/def streams for one leaf of a repeated GROUP element (LIST of
-    struct, or MAP): def counts the defined optional ancestors along
-    ``optional group (+1) / repeated (+1 when the row has entries) /
-    [optional] element struct (+1 when non-null) / [optional] field (+1
-    when non-null)``. ``sv_slice`` = element-struct validity over entries
-    (None when the element is required — MAP key_value), ``fv_slice`` =
-    this field's validity over entries (ignored where the struct is
-    null). Same slot rule as _list_level_arrays: empty/null rows emit
-    one pad slot."""
-    counts = np.asarray(counts, np.int64)
-    if len(counts) == 0:
-        return np.empty(0, np.uint64), np.empty(0, np.uint64)
-    slots = np.maximum(counts, 1)
-    n_lev = int(slots.sum())
-    starts = np.concatenate(([0], np.cumsum(slots)[:-1])).astype(np.int64)
-    rep = np.ones(n_lev, np.uint64)
-    rep[starts] = 0
-    zero = counts == 0
-    n_entries = int(counts.sum())
-    d = np.full(n_entries, 2, np.uint64)
-    sv = None
-    if elem_opt:
-        sv = np.asarray(sv_slice, bool)
-        d += sv
-    if field_opt:
-        fv = np.asarray(fv_slice, bool)
-        d += (fv & sv) if sv is not None else fv
-    defs = np.empty(n_lev, np.uint64)
-    is_entry = np.ones(n_lev, bool)
-    if zero.any():
-        pad = starts[zero]
-        is_entry[pad] = False
-        defs[pad] = (
-            1
-            if row_valid is None
-            else np.where(np.asarray(row_valid, bool)[zero], 1, 0)
-        )
-    defs[is_entry] = d
-    return rep, defs
-
-
-def _list_level_arrays(counts: np.ndarray, row_valid, ev_slice):
-    """Rep/def level streams for one row group of a LIST column (3-level
-    convention, always ``optional group (LIST) / repeated group list /
-    optional element``): def 0 = null row, 1 = empty list, 2 = null
-    element, 3 = present element; rep 0 starts a record (reference
-    src/column/writer.rs:304-345). Rows with no entries still emit ONE
-    level slot — that is where null-vs-empty lives."""
-    counts = np.asarray(counts, np.int64)
-    if len(counts) == 0:
-        # empty row group (zero-row table): no level slots at all
-        return np.empty(0, np.uint64), np.empty(0, np.uint64)
-    slots = np.maximum(counts, 1)
-    n_lev = int(slots.sum())
-    starts = np.concatenate(([0], np.cumsum(slots)[:-1])).astype(np.int64)
-    rep = np.ones(n_lev, np.uint64)
-    rep[starts] = 0
-    defs = np.full(n_lev, 3, np.uint64)
-    zero = counts == 0
-    if zero.any():
-        pad = starts[zero]
-        if row_valid is None:
-            defs[pad] = 1
-        else:
-            defs[pad] = np.where(np.asarray(row_valid, bool)[zero], 1, 0)
-    if ev_slice is not None:
-        ev = np.asarray(ev_slice, bool)
-        if not ev.all():
-            is_entry = np.ones(n_lev, bool)
-            is_entry[starts[zero]] = False
-            entry_pos = np.flatnonzero(is_entry)
-            defs[entry_pos[~ev]] = 2
-    return rep, defs
+def _leaf_type(t: pa.DataType, where: str) -> tuple[str, int | None]:
+    """Arrow leaf type -> (physical type, ConvertedType id). UTF8=0,
+    DATE=6 (int32 days since epoch), TIMESTAMP_MILLIS=9,
+    TIMESTAMP_MICROS=10 — the annotations that make readers surface
+    str/date/timestamp columns."""
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return "byte_array", 0
+    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+        return "byte_array", None
+    if pa.types.is_date32(t):
+        return "int32", 6
+    if pa.types.is_timestamp(t) and t.unit in ("ms", "us"):
+        return "int64", 9 if t.unit == "ms" else 10
+    if pa.types.is_boolean(t):
+        return "bool", None
+    for phys in _FIXED_DTYPES:
+        if t == _SPEC_TYPES[phys]:
+            return phys, None
+    raise ValueError(f"{where}: cannot write Arrow type {t}")
 
 
 class _Writer:
@@ -250,8 +210,6 @@ def _compress(buf: bytes, codec: str | None) -> bytes:
     if codec == "gzip":
         co = zlib.compressobj(6, zlib.DEFLATED, 31)
         return co.compress(buf) + co.flush()
-    import pyarrow as pa
-
     return pa.Codec("lz4_raw" if codec == "lz4" else codec).compress(
         buf
     ).to_pybytes()
@@ -383,18 +341,18 @@ def _utf8_trunc_max(hi: bytes) -> bytes | None:
     return None
 
 
-def _column_stats(phys: str, values, validity, n: int, utf8: bool = False):
-    """Per-row-group Statistics (min_value/max_value/null_count) — the
-    metadata that lets ANY parquet reader prune row groups on engine-
-    written files, the interchange analog of the engine's own typed chunk
-    statistics (jobs/encode.py). min/max serialize as single PLAIN values
-    (spec fields 5/6); NaN-containing float groups skip min/max the way
-    parquet-mr does (NaN ordering is undefined in the spec)."""
-    null_count = 0 if validity is None else int(n - validity.sum())
-    if (n - null_count) == 0:
+def _column_stats(phys: str, values, null_count: int = 0,
+                  utf8: bool = False):
+    """Statistics (min_value/max_value/null_count) of one page or chunk's
+    dense ``values`` — the metadata that lets ANY parquet reader prune
+    row groups on engine-written files, the interchange analog of the
+    engine's own typed chunk statistics (jobs/encode.py). min/max
+    serialize as single PLAIN values (spec fields 5/6); NaN-containing
+    float groups skip min/max the way parquet-mr does (NaN ordering is
+    undefined in the spec)."""
+    if _n_values(values) == 0:
         return {"null_count": null_count, "min": None, "max": None}
     if phys == "byte_array":
-        import pyarrow as pa
         import pyarrow.compute as pac
 
         lens, data = values
@@ -522,8 +480,6 @@ def _dict_build(phys: str, values):
         # arrow dictionary_encode over zero-copy buffers — first-appearance
         # order, no per-value Python (r5 review #6; same idiom the engine's
         # own DICT_BA encode uses in jobs/encode.py)
-        import pyarrow as pa
-
         lens, data = values
         lens64 = np.asarray(lens, np.int64)
         offs32 = np.concatenate(([0], np.cumsum(lens64))).astype(np.int32)
@@ -571,380 +527,530 @@ def _page_header(ptype: int, raw_len: int, comp_len: int, inner) -> bytes:
     return _tstruct(fields)
 
 
-def _norm_struct_fields(name: str, fields, struct_valid):
-    """Normalize a STRUCT column into per-leaf norm entries.
 
-    Each leaf carries a ``grp`` descriptor: parent name + optionality,
-    the leaf's own optionality, the combined max definition level
-    (optional ancestors count toward it — Dremel shredding, the same
-    rule engine/levels.py applies to the engine's own nested chunks)
-    and the per-row definition-level array when two levels are needed.
-    """
-    if not isinstance(fields, (list, tuple)) or not fields:
-        raise ValueError(f"{name}: struct values must be a non-empty field list")
-    parent_opt = struct_valid is not None
-    if parent_opt:
-        struct_valid = np.asarray(struct_valid, bool)
-    n = None if struct_valid is None else len(struct_valid)
-    entries = []
-    for fname, alias, fenc, fvalues, fvalid in fields:
-        if alias == "struct" or alias.startswith("list<"):
-            raise ValueError(
-                f"{name}.{fname}: nested {alias} inside struct not supported "
-                "(scalar leaves only — same scope as the compat reader)"
-            )
-        phys, conv = _LOGICAL.get(alias, (alias, None))
-        if phys not in _PHYS_IDS:
-            raise ValueError(f"{name}.{fname}: unsupported field type {alias}")
-        field_opt = fvalid is not None
-        if field_opt:
-            fvalid = np.asarray(fvalid, bool)
-            fn = len(fvalid)
-        elif phys != "byte_array":
-            fvalues = np.asarray(fvalues)
-            fn = len(fvalues)
-        elif struct_valid is not None:
-            fn = n  # dense byte arrays: row count comes from the struct mask
-        else:
-            fn = len(fvalues[0])  # required field in required struct
-        if n is None:
-            n = fn
-        elif fn != n:
-            raise ValueError(f"{name}.{fname}: {fn} rows vs {n} in struct")
-        # present = slots holding an actual leaf value (def == max_def)
-        if parent_opt and field_opt:
-            present = struct_valid & fvalid
-        elif parent_opt:
-            present = struct_valid
-        elif field_opt:
-            present = fvalid
-        else:
-            present = None
-        max_def = int(parent_opt) + int(field_opt)
-        # two optional levels need the real 0/1/2 def array; one collapses
-        # to the binary validity path the flat writer already has
-        def_rows = (
-            struct_valid.astype(np.uint8) + present.astype(np.uint8)
-            if max_def == 2
-            else None
+@dataclass
+class Leaf:
+    """One shredded primitive leaf. ``values`` holds only the defined
+    (def == max_def) values, in level order: numpy, or (lengths, data)
+    for byte arrays with ``byte_offsets`` their prefix sums. ``defs`` /
+    ``reps`` are the level streams, None when ``max_def`` / ``max_rep`` is
+    0. ``row_starts[i]`` is the level where row i starts (None: level i is
+    row i) and ``dense_prefix[j]`` counts the values before level j (None:
+    every level holds a value); both carry one extra end entry."""
+
+    path: list
+    phys: str
+    conv: int | None
+    values: object
+    defs: np.ndarray | None
+    reps: np.ndarray | None
+    max_def: int
+    max_rep: int
+    row_starts: np.ndarray | None
+    dense_prefix: np.ndarray | None
+    byte_offsets: np.ndarray | None
+
+    def level_at(self, row: int) -> int:
+        return row if self.row_starts is None else int(self.row_starts[row])
+
+    def dense_at(self, level: int) -> int:
+        return (
+            level if self.dense_prefix is None
+            else int(self.dense_prefix[level])
         )
-        if phys != "byte_array":
-            fvalues = np.asarray(fvalues)
-            if len(fvalues) != n:
-                raise ValueError(f"{name}.{fname}: {len(fvalues)} values vs {n} rows")
-            if present is not None:
-                fvalues = fvalues[present]
-        elif present is not None and len(fvalues[0]) != int(present.sum()):
-            raise ValueError(
-                f"{name}.{fname}: byte-array values must be dense over "
-                "present entries"
-            )
-        aux = {
-            "offs": (
-                np.concatenate(([0], np.cumsum(np.asarray(fvalues[0], np.int64))))
-                if phys == "byte_array"
-                else None
-            ),
-            "vpre": (
-                np.concatenate(([0], np.cumsum(present, dtype=np.int64)))
-                if present is not None
-                else None
-            ),
-        }
-        grp = {
-            "kind": "struct",
-            "parent": name,
-            "parent_opt": parent_opt,
-            "field_opt": field_opt,
-            "max_def": max_def,
-            "def_rows": def_rows,
-        }
-        entries.append((fname, phys, conv, fenc, fvalues, present, aux, None, grp))
-    if n is None:
-        raise ValueError(f"{name}: cannot infer row count from required fields")
-    return n, entries
+
+    def dense(self, a: int, b: int):
+        """The values of levels [a, b)."""
+        a, b = self.dense_at(a), self.dense_at(b)
+        if self.byte_offsets is None:
+            return self.values[a:b]
+        lens, data = self.values
+        return lens[a:b], data[self.byte_offsets[a] : self.byte_offsets[b]]
 
 
-def _norm_repeated_group(name: str, kind: str, spec, values, validity):
-    """Normalize a repeated-GROUP column — ``list<struct>`` (array of
-    structs) or ``map<key,value>`` — into per-leaf norm entries that ride
-    the existing LIST slicing machinery: every leaf shares the row
-    offsets, carries its own dense values + combined entry-validity
-    prefix sums, and a ``grp`` descriptor with the element/field
-    optionality the level builder needs. MAP is the same shape with a
-    required key_value element and key leaf (parquet MAP convention)."""
-    if kind == "map":
-        kalias, valias = (a.strip() for a in spec.split(",", 1))
-        offsets, kvals, vvals, vvalid = values
-        fields = [("key", kalias, "AUTO", kvals, None),
-                  ("value", valias, "AUTO", vvals, vvalid)]
-        elem_valid = None
+def _n_values(values) -> int:
+    return len(values[0]) if isinstance(values, tuple) else len(values)
+
+
+def _bitmap_bits(buf, offset: int, n: int) -> np.ndarray:
+    """An Arrow bit buffer (validity or boolean values) -> n bools."""
+    if n == 0:
+        return np.empty(0, bool)
+    bits = np.unpackbits(
+        np.frombuffer(buf, np.uint8), count=offset + n, bitorder="little"
+    )
+    return bits[offset:].view(bool)
+
+
+def _offsets(arr: pa.Array, wide: bool) -> np.ndarray:
+    """The n + 1 offsets of a list or byte array, honouring its offset."""
+    if len(arr) == 0:
+        return np.zeros(1, np.int64)
+    offs = np.frombuffer(arr.buffers()[1], np.int64 if wide else np.int32)
+    return offs[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
+
+
+def _leaf_values(arr: pa.Array, phys: str, sel):
+    """The values at ``sel`` (None: all; else a bool mask or a sorted
+    position array) of a primitive Arrow array, off its buffers."""
+    n, off = len(arr), arr.offset
+    if phys == "byte_array":
+        t = arr.type
+        offs = _offsets(arr, pa.types.is_large_string(t)
+                        or pa.types.is_large_binary(t))
+        buf = arr.buffers()[2]
+        data = np.frombuffer(buf or b"", np.uint8)[offs[0] : offs[-1]]
+        lens = np.diff(offs)
+        if sel is None:
+            return lens, data
+        keep = sel
+        if sel.dtype != bool:
+            keep = np.zeros(n, bool)
+            keep[sel] = True
+        if lens[~keep].any():  # skipped slots hold bytes: gather
+            data = data[np.repeat(keep, lens)]
+        return lens[sel], data
+    if n == 0:
+        vals = np.empty(0, bool if phys == "bool" else _FIXED_DTYPES[phys])
+    elif phys == "bool":
+        vals = _bitmap_bits(arr.buffers()[1], off, n)
     else:
-        offsets, fields, elem_valid = values
-        if not isinstance(fields, (list, tuple)) or not fields:
-            raise ValueError(f"{name}: struct element needs a non-empty field list")
-    elem_opt = elem_valid is not None
-    offsets = np.ascontiguousarray(offsets, np.int64)
+        vals = np.frombuffer(
+            arr.buffers()[1], _FIXED_DTYPES[phys], count=off + n
+        )[off:]
+    return vals if sel is None else vals[sel]
+
+
+def _live(pos, defs, d: int):
+    """Mask of the slots every ancestor so far defines (None: all)."""
+    if pos is not None:
+        return pos >= 0
+    return None if defs is None else defs == d
+
+
+def shred(arr: pa.Array, field: pa.Field) -> list:
+    """Dremel shredding of one Arrow column at any depth (Melnik et al.,
+    VLDB'10; reference ``src/column/writer.rs:304-345``), the exact
+    inverse of ``parquet_compat.assemble_repeated`` -> one :class:`Leaf`
+    per primitive leaf, in schema order, with the paths
+    :func:`_schema_elements` names.
+
+    Levels are built top-down over slots, one per level entry. Before
+    the first list a slot is a position of the column; after it, ``pos``
+    maps each slot to a position of the current child array (-1: dead).
+    A slot dies where an optional node is null or a list is empty, and
+    its def level stops there. Each optional node adds 1 to the def level
+    of the live slots it defines; each repeated node (list, map) replaces
+    a live slot by one slot per entry (def + 1, rep = its depth after the
+    first) and keeps an empty or dead slot as ONE slot, which is where
+    null-vs-empty lives."""
+    leaves: list = []
+    _shred(arr, field, [field.name], None, None, None, 0, 0, leaves)
+    return leaves
+
+
+def _shred(arr, field, path, pos, defs, reps, d, r, leaves) -> None:
+    t = arr.type
+    if field.nullable:
+        ok = _live(pos, defs, d)
+        if arr.null_count:
+            valid = _bitmap_bits(arr.buffers()[0], arr.offset, len(arr))
+            if pos is None:
+                ok = valid if ok is None else ok & valid
+            else:
+                got = np.zeros(len(pos), bool)
+                got[ok] = valid[pos[ok]]
+                ok = got
+                pos = np.where(ok, pos, -1)
+        if ok is not None:
+            base = np.full(len(ok), d, np.uint8) if defs is None else defs
+            defs = base + ok
+        d += 1
+    if pa.types.is_struct(t):
+        for i, f in enumerate(t):
+            _shred(arr.field(i), f, path + [f.name], pos, defs, reps, d, r,
+                   leaves)
+        return
+    if pa.types.is_map(t) or pa.types.is_list(t) or pa.types.is_large_list(t):
+        offs = _offsets(arr, pa.types.is_large_list(t))
+        n = len(arr) if pos is None else len(pos)
+        live = _live(pos, defs, d)
+        where = np.arange(n) if live is None else np.flatnonzero(live)
+        at = where if pos is None else pos[where]
+        start = np.zeros(n, np.int64)
+        count = np.zeros(n, np.int64)
+        start[where] = offs[at]
+        count[where] = offs[at + 1] - offs[at]
+        has = count > 0
+        slots = np.where(has, count, 1)
+        first = np.cumsum(slots) - slots
+        within = np.arange(int(slots.sum())) - np.repeat(first, slots)
+        entry = np.repeat(has, slots)
+        pos = np.where(entry, np.repeat(start, slots) + within, -1)
+        base = np.full(n, d, np.uint8) if defs is None else defs
+        defs = np.repeat(base, slots) + entry
+        reps = np.repeat(
+            np.zeros(n, np.uint8) if reps is None else reps, slots
+        )
+        reps[within > 0] = r + 1
+        if pa.types.is_map(t):
+            child = pa.field("key_value", arr.values.type, nullable=False)
+            sub = ["key_value"]
+        else:
+            child = t.value_field.with_name("element")
+            sub = ["list", "element"]
+        _shred(arr.values, child, path + sub, pos, defs, reps, d + 1, r + 1,
+               leaves)
+        return
+    where = ".".join(path)
+    phys, conv = _leaf_type(t, where)
+    live = _live(pos, defs, d)
+    n_levels = len(arr) if pos is None else len(pos)
+    values = _leaf_values(
+        arr, phys, live if pos is None else pos[live]
+    )
+    n_dense = _n_values(values)
+    if d and defs is None:
+        defs = np.full(n_levels, d, np.uint8)
+    leaves.append(Leaf(
+        path=path,
+        phys=phys,
+        conv=conv,
+        values=values,
+        defs=defs,
+        reps=reps,
+        max_def=d,
+        max_rep=r,
+        row_starts=(
+            None if reps is None
+            else np.append(np.flatnonzero(reps == 0), n_levels)
+        ),
+        dense_prefix=(
+            None if n_dense == n_levels
+            else np.concatenate(([0], np.cumsum(live, dtype=np.int64)))
+        ),
+        byte_offsets=(
+            np.concatenate(([0], np.cumsum(values[0], dtype=np.int64)))
+            if phys == "byte_array" else None
+        ),
+    ))
+
+
+def _schema_elements(schema: pa.Schema) -> list:
+    """One walk over the Arrow schema -> every SchemaElement of the
+    footer, root first, depth-first: struct -> group; list -> LIST group
+    / repeated ``list`` / ``element``; map -> MAP group / repeated
+    ``key_value`` (MAP_KEY_VALUE) / required ``key`` + ``value``; a leaf
+    carries its physical and converted type. REQUIRED or OPTIONAL comes
+    from ``field.nullable``. Names follow the paths :func:`shred` gives
+    the leaves."""
+    elems = [[(4, _CT_BINARY, "schema"), (5, _CT_I32, len(schema))]]
+
+    def walk(name: str, field: pa.Field) -> None:
+        t = field.type
+        head = [(3, _CT_I32, int(field.nullable)), (4, _CT_BINARY, name)]
+        if pa.types.is_struct(t):
+            elems.append(head + [(5, _CT_I32, t.num_fields)])
+            for f in t:
+                walk(f.name, f)
+        elif pa.types.is_map(t):
+            elems.append(head + [(5, _CT_I32, 1), (6, _CT_I32, 1)])  # MAP
+            elems.append([
+                (3, _CT_I32, 2), (4, _CT_BINARY, "key_value"),
+                (5, _CT_I32, 2), (6, _CT_I32, 2),  # MAP_KEY_VALUE
+            ])
+            walk(t.key_field.name, t.key_field)
+            walk(t.item_field.name, t.item_field)
+        elif pa.types.is_list(t) or pa.types.is_large_list(t):
+            elems.append(head + [(5, _CT_I32, 1), (6, _CT_I32, 3)])  # LIST
+            elems.append(
+                [(3, _CT_I32, 2), (4, _CT_BINARY, "list"), (5, _CT_I32, 1)]
+            )
+            walk("element", t.value_field)
+        else:
+            phys, conv = _leaf_type(t, name)
+            elems.append(
+                [(1, _CT_I32, _PHYS_IDS[phys])] + head
+                + ([] if conv is None else [(6, _CT_I32, conv)])
+            )
+
+    for f in schema:
+        walk(f.name, f)
+    return elems
+
+
+def _spec_type(where: str, alias: str) -> pa.DataType:
+    if alias not in _SPEC_TYPES:
+        raise ValueError(
+            f"{where}: unsupported type {alias} — tuple-spec columns, "
+            "fields and elements are scalar; pass a pyarrow Table for "
+            "nested ones"
+        )
+    return _SPEC_TYPES[alias]
+
+
+def _spec_count(typ: pa.DataType, values) -> int:
+    byte_array = _leaf_type(typ, "")[0] == "byte_array"
+    return len(values[0] if byte_array else values)
+
+
+def _bitmap(mask) -> pa.Buffer | None:
+    return (
+        None if mask is None
+        else pa.py_buffer(np.packbits(mask, bitorder="little"))
+    )
+
+
+def _spec_array(where: str, typ: pa.DataType, values, present, n: int,
+                spans_all: bool, nullable: bool) -> pa.Array:
+    """One scalar tuple-spec leaf -> an n-slot Arrow array. ``present``
+    marks the slots that hold a value (None: all). Byte-array values are
+    dense over them, fixed-type values too unless ``spans_all`` (one per
+    slot, null slots ignored). A required leaf gets no bitmap: only a
+    null parent can hide its slots."""
+    want = n if present is None else int(np.count_nonzero(present))
+    phys = _leaf_type(typ, where)[0]
+    if phys == "byte_array":
+        lens, data = values
+        lens = np.asarray(lens, np.int64)
+        vals = lens
+    else:
+        vals = np.asarray(values)
+        if spans_all:
+            if len(vals) != n:
+                raise ValueError(f"{where}: {len(vals)} values vs {n} rows")
+            want = n
+    if len(vals) != want:
+        raise ValueError(
+            f"{where}: {len(vals)} dense values vs {want} present "
+            "(values must be dense over present entries)"
+        )
+    if present is not None and len(vals) != n:
+        full = np.zeros(n, vals.dtype)
+        full[present] = vals
+        vals = full
+    bufs = [_bitmap(present) if nullable else None]
+    if phys == "byte_array":
+        offs = np.concatenate(([0], np.cumsum(vals)))
+        bufs += [pa.py_buffer(offs), pa.py_buffer(data)]
+    elif phys == "bool":
+        bufs.append(_bitmap(vals.astype(bool)))
+    else:
+        bufs.append(pa.py_buffer(np.ascontiguousarray(vals, _FIXED_DTYPES[phys])))
+    return pa.Array.from_buffers(typ, n, bufs)
+
+
+def _spec_struct(where: str, key: str, fields, valid, n, spans_all: bool,
+                 encodings: dict) -> pa.Array:
+    """A tuple-spec struct -> StructArray; ``n`` None takes the row count
+    from the first field. Field encodings land in ``encodings`` under
+    ``key.field``."""
+    if not isinstance(fields, (list, tuple)) or not fields:
+        raise ValueError(f"{where}: struct values must be a non-empty field list")
+    children, cfields = [], []
+    for fname, alias, fenc, fvalues, fvalid in fields:
+        fwhere = f"{where}.{fname}"
+        typ = _spec_type(fwhere, alias)
+        if fvalid is not None:
+            fvalid = np.asarray(fvalid, bool)
+        if n is None:
+            n = len(fvalid) if fvalid is not None else _spec_count(typ, fvalues)
+        elif fvalid is not None and len(fvalid) != n:
+            raise ValueError(f"{fwhere}: {len(fvalid)} rows vs {n} in struct")
+        present = (
+            fvalid if valid is None
+            else valid if fvalid is None
+            else valid & fvalid
+        )
+        children.append(_spec_array(fwhere, typ, fvalues, present, n,
+                                    spans_all, fvalid is not None))
+        cfields.append(pa.field(fname, typ, fvalid is not None))
+        encodings[f"{key}.{fname}"] = fenc
+    return pa.Array.from_buffers(
+        pa.struct(cfields), n, [_bitmap(valid)], children=children
+    )
+
+
+def _spec_repeated(name: str, alias: str, values, valid,
+                   encodings: dict) -> pa.Array:
+    """list<elem>, list<struct> and map<k,v> tuple specs -> a List or Map
+    array; a null row holds no entries."""
+    offsets = np.ascontiguousarray(values[0], np.int64)
     if len(offsets) == 0 or (np.diff(offsets) < 0).any():
         raise ValueError(f"{name}: offsets must be non-decreasing")
-    n = len(offsets) - 1
-    n_entries = int(offsets[-1])
-    if validity is not None:
-        validity = np.asarray(validity, bool)
-        if len(validity) != n:
+    n, n_entries = len(offsets) - 1, int(offsets[-1])
+    if n_entries > np.iinfo(np.int32).max:
+        raise ValueError(f"{name}: {n_entries} entries overflow list offsets")
+    if valid is not None:
+        if len(valid) != n:
             raise ValueError(f"{name}: validity length != rows")
-        if (np.diff(offsets)[~validity] != 0).any():
+        if (np.diff(offsets)[~valid] != 0).any():
             raise ValueError(f"{name}: null rows must be empty")
-    if elem_opt:
-        elem_valid = np.asarray(elem_valid, bool)
-        if len(elem_valid) != n_entries:
-            raise ValueError(f"{name}: elem_validity length != entries")
-    entries = []
-    for fname, alias, fenc, fvalues, fvalid in fields:
-        if alias == "struct" or alias.startswith(("list<", "map<")):
-            raise ValueError(
-                f"{name}.{fname}: nested {alias} inside a repeated group "
-                "not supported (scalar leaves only)"
+    if alias.startswith("map<"):
+        _, keys, vals, vvalid = values
+        kalias, valias = (a.strip() for a in alias[4:-1].split(",", 1))
+        entries = _spec_struct(
+            name, f"{name}.key_value",
+            [("key", kalias, "AUTO", keys, None),
+             ("value", valias, "AUTO", vals, vvalid)],
+            None, n_entries, False, encodings,
+        )
+        typ = pa.map_(entries.type.field(0), entries.type.field(1))
+    else:
+        _, elems, elem_valid = values
+        if elem_valid is not None:
+            elem_valid = np.asarray(elem_valid, bool)
+            if len(elem_valid) != n_entries:
+                raise ValueError(f"{name}: elem_validity length != entries")
+        if alias == "list<struct>":
+            entries = _spec_struct(
+                name, f"{name}.list.element", elems, elem_valid, n_entries,
+                False, encodings,
             )
-        phys, conv = _LOGICAL.get(alias, (alias, None))
-        if phys not in _PHYS_IDS:
-            raise ValueError(f"{name}.{fname}: unsupported field type {alias}")
-        field_opt = fvalid is not None
-        if field_opt:
-            fvalid = np.asarray(fvalid, bool)
-            if len(fvalid) != n_entries:
-                raise ValueError(f"{name}.{fname}: field validity != entries")
-        if elem_opt and field_opt:
-            combined = elem_valid & fvalid
-        elif elem_opt:
-            combined = elem_valid
-        elif field_opt:
-            combined = fvalid
+            elem_nullable = elem_valid is not None
         else:
-            combined = None
-        n_present = n_entries if combined is None else int(combined.sum())
-        if phys != "byte_array":
-            fvalues = np.asarray(fvalues)
-            n_dense = len(fvalues)
-        else:
-            n_dense = len(fvalues[0])
-        if n_dense != n_present:
-            raise ValueError(
-                f"{name}.{fname}: {n_dense} dense values vs {n_present} present"
+            entries = _spec_array(
+                name, _spec_type(name, alias[5:-1]), elems, elem_valid,
+                n_entries, False, True,
             )
-        aux = {
-            "offs": (
-                np.concatenate(([0], np.cumsum(np.asarray(fvalues[0], np.int64))))
-                if phys == "byte_array"
-                else None
-            ),
-            "vpre": None,
-        }
-        lst = {
-            "offsets": offsets,
-            "elem_valid": combined,
-            "evpre": (
-                np.concatenate(([0], np.cumsum(combined, dtype=np.int64)))
-                if combined is not None
-                else None
-            ),
-            "sv": elem_valid if elem_opt else None,
-            "fv": fvalid if field_opt else None,
-        }
-        grp = {
-            "kind": kind,
-            "parent": name,
-            "elem_opt": elem_opt,
-            "field_opt": field_opt,
-            "max_def": 2 + int(elem_opt) + int(field_opt),
-            "def_rows": None,
-        }
-        entries.append((fname, phys, conv, fenc, fvalues, validity, aux, lst, grp))
-    return n, entries
+            elem_nullable = True
+        typ = pa.list_(pa.field("element", entries.type, elem_nullable))
+    return pa.Array.from_buffers(
+        typ, n, [_bitmap(valid), pa.py_buffer(offsets.astype(np.int32))],
+        children=[entries],
+    )
 
 
-def write_table(path: str, columns: list, codec: str | None = None,
+def _spec_to_arrow(columns: list) -> tuple[pa.Table, dict]:
+    """The tuple spec -> (Arrow table, {column or leaf path: encoding}).
+    A scalar column or struct field with validity None is REQUIRED; a
+    list or map column and a list element are always OPTIONAL."""
+    arrays, fields, encodings = [], [], {}
+    for name, alias, enc, values, validity in columns:
+        valid = None if validity is None else np.asarray(validity, bool)
+        nullable = valid is not None
+        if alias == "struct":
+            arr = _spec_struct(
+                name, name, values, valid, None if valid is None else len(valid),
+                True, encodings,
+            )
+        elif alias.startswith(("list<", "map<")) and alias.endswith(">"):
+            arr = _spec_repeated(name, alias, values, valid, encodings)
+            nullable = True
+        else:
+            typ = _spec_type(name, alias)
+            n = len(valid) if nullable else _spec_count(typ, values)
+            arr = _spec_array(name, typ, values, valid, n, True, nullable)
+        # a group's leaves carry their own, longer keys
+        encodings[name] = enc
+        if arrays and len(arr) != len(arrays[0]):
+            raise ValueError(
+                f"{name}: {len(arr)} rows vs {len(arrays[0])} in prior columns"
+            )
+        arrays.append(arr)
+        fields.append(pa.field(name, arr.type, nullable))
+    return pa.Table.from_arrays(arrays, schema=pa.schema(fields)), encodings
+
+
+def write_table(path: str, table, codec: str | None = None,
                 created_by: str = "spark-graft encoder",
                 row_group_size: int | None = None,
                 data_page_version: int = 1,
                 page_size_rows: int | None = None,
                 dict_page_size_limit: int = 1024 * 1024,
-                sorting_columns: list | None = None) -> dict:
-    """Write flat columns as a real parquet file.
+                sorting_columns: list | None = None,
+                encodings: dict | None = None) -> dict:
+    """Write ``table`` as a real parquet file.
 
-    ``columns``: list of (name, phys, encoding, values, validity) where
-    phys is an engine dtype name ('bool'/'int32'/'int64'/'float32'/
-    'float64'/'byte_array'/'utf8'), values is a numpy array (fixed types,
-    null slots may hold anything) or (lengths, data) for byte arrays
-    (dense: non-null values only), and validity is a bool array or None
-    for required. Logical aliases annotate the physical type so readers
-    surface typed columns: 'utf8' = byte_array + UTF8 (str), 'date' =
-    int32 days + DATE, 'timestamp_us' / 'timestamp_ms' = int64 epoch
-    micros/millis + TIMESTAMP_MICROS/_MILLIS.
+    ``table`` is a ``pyarrow.Table`` at any depth: struct, list,
+    large_list and map nest freely over bool / int32 / int64 / float32 /
+    float64 / binary / string / date32 / timestamp[ms|us] leaves. Each
+    field's ``nullable`` makes its parquet node OPTIONAL or REQUIRED;
+    lists are the 3-level LIST convention, maps MAP / key_value — the
+    shapes Spark, pyarrow and DuckDB surface as ``array``, ``struct`` and
+    ``map``. ``encodings`` maps a column name or a dotted leaf path
+    (``'tokens.list.element'``, ``'meta.width'``) to a value encoding
+    for the leaves under it; the longest match wins, the default is
+    ``'AUTO'``, the engine's codec selector.
 
-    LIST columns: phys ``'list<elem>'`` (elem = any alias above), values =
-    ``(offsets, elem_values, elem_validity)`` — offsets is an int64 array
-    of length rows+1 over element ENTRIES (null elements included),
-    elem_values holds the dense non-null elements (numpy or (lengths,
-    data)), elem_validity is a bool array over entries or None. The row
-    ``validity`` argument distinguishes null lists from empty ones (a
-    null row must have zero entries). Written as the standard 3-level
-    LIST group, readable by Spark/pyarrow/DuckDB as ``array<elem>``.
+    ``table`` may also be the tuple spec, a list of ``(name, alias,
+    encoding, values, validity)``; its encoding fields seed
+    ``encodings``. Aliases: 'bool' / 'int32' / 'int64' / 'float32' /
+    'float64' / 'byte_array' / 'utf8' / 'date' (int32 days) /
+    'timestamp_us' / 'timestamp_ms' (int64 epoch micros/millis). Values
+    are a numpy array spanning every row (null slots may hold anything)
+    or (lengths, data) for byte arrays, dense over the non-null rows;
+    validity is a bool array, or None for a REQUIRED column.
 
-    STRUCT columns: phys ``'struct'``, values = a list of
-    ``(field_name, field_alias, field_enc, field_values, field_validity)``
-    (alias = any scalar alias above; no nested list/struct yet — the same
-    one-group-deep scope the compat reader documents). Fixed-type field
-    values span ALL rows (null slots may hold anything); byte-array field
-    values are dense over PRESENT entries (struct non-null AND field
-    non-null). ``field_validity`` spans all rows; its value at struct-null
-    rows is ignored. The column-level ``validity`` makes the struct itself
-    optional (a null struct row masks every field). Written as a real
-    parquet group — ``optional group name {{ fields }}`` with two-level
-    definition levels, surfaced by Spark/pyarrow/DuckDB as
-    ``struct<...>``; the reference writes the same shape via its
-    SchemaDescriptor + per-leaf writers (src/schema/types.rs,
-    src/column/writer.rs:304-345).
+    * ``'list<alias>'``: values = ``(offsets, elem_values,
+      elem_validity)``, offsets int64 of length rows+1 over entries (a
+      null row has zero entries), elem_values dense over the non-null
+      entries, elem_validity over entries or None.
+    * ``'struct'``: values = a list of ``(field_name, alias, encoding,
+      values, validity)``; fixed-type field values span all rows,
+      byte-array ones are dense over the rows where struct AND field are
+      non-null. The column validity makes the struct optional.
+    * ``'list<struct>'``: values = ``(offsets, fields, elem_validity)``,
+      fields as for a struct but over entries, all values dense over the
+      present entries.
+    * ``'map<kalias,valias>'``: values = ``(offsets, keys, values,
+      value_validity)``; keys required, values dense over non-null ones.
 
-    LIST-of-STRUCT columns: phys ``'list<struct>'``, values =
-    ``(offsets, fields, elem_validity)`` — fields as for STRUCT but with
-    per-ENTRY validity arrays and dense values over present entries
-    (entry struct non-null AND field non-null); ``elem_validity`` over
-    entries makes the element struct itself optional. Surfaced as
-    ``array<struct<...>>``. MAP columns: phys ``'map<key,value>'``
-    (scalar aliases), values = ``(offsets, key_values, value_values,
-    value_validity)`` — keys required per the parquet MAP convention,
-    value_values dense over non-null entries. Surfaced as
-    ``map<key,value>``. Row ``validity`` distinguishes null from empty
-    lists/maps in both shapes.
+    Lists and maps in the spec are always optional, and so are list
+    elements; deeper nesting takes an Arrow table.
 
-    ``row_group_size`` splits
-    rows into multiple row
-    groups (each with its own dictionary pages) — at fleet scale bounded
-    groups are what keep a reader's memory bounded; default is a single
-    group. ``data_page_version=2`` emits DataPageV2 (levels sectioned
-    outside the compressed area, lengths in the header — the modern page
-    form parquet-mr/arrow default to). ``page_size_rows`` splits each
-    column chunk into multiple data pages (one shared dictionary page per
+    ``row_group_size`` splits rows into multiple row groups (each with
+    its own dictionary pages) — at fleet scale bounded groups are what
+    keep a reader's memory bounded; default is a single group.
+    ``data_page_version=2`` emits DataPageV2 (levels sectioned outside
+    the compressed area, lengths in the header — the modern page form
+    parquet-mr/arrow default to). ``page_size_rows`` splits each column
+    chunk into multiple data pages (one shared dictionary page per
     chunk); every file also carries the PageIndex (ColumnIndex with
     per-page min/max/null_count + OffsetIndex) so external readers can
     page-prune — the reference leaves page stats as a TODO
-    (src/column/writer.rs:356,480-481); the engine's own PAGED container
-    already had per-page selection, and this exports it to the
-    interchange format. Returns {'rows': n, 'bytes': file size}.
+    (src/column/writer.rs:356,480-481). Returns {'rows': n, 'bytes':
+    file size}.
     """
+    if not isinstance(table, pa.Table):
+        table, spec_encodings = _spec_to_arrow(table)
+        encodings = {**spec_encodings, **(encodings or {})}
+    encodings = encodings or {}
+    if data_page_version not in (1, 2):
+        raise ValueError("data_page_version must be 1 or 2")
+    # combine_chunks copies even a lone chunk
+    columns = [
+        col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+        for col in table.columns
+    ]
+    leaves = [
+        leaf
+        for arr, field in zip(columns, table.schema)
+        for leaf in shred(arr, field)
+    ]
+    prefixes = {
+        ".".join(leaf.path[:k])
+        for leaf in leaves
+        for k in range(1, len(leaf.path) + 1)
+    }
+    unknown = sorted(set(encodings) - prefixes)
+    if unknown:
+        raise ValueError(f"encodings name unknown columns {unknown}")
     if sorting_columns:
-        declared = {c[0] for c in columns}
+        declared = {".".join(leaf.path) for leaf in leaves}
         for nm, _, _ in sorting_columns:
             if nm not in declared:
                 raise ValueError(
                     f"sorting_columns names unknown column {nm!r}; "
                     f"columns are {sorted(declared)}"
                 )
-    # -- normalize once: 9-tuples of (name, phys, conv, enc, dense values,
-    # validity, aux prefix-sums, list-shape, struct-group) --
-    norm = []
-    num_rows = None
-    for name, phys, enc, values, validity in columns:
-        lst = None
-        if (
-            phys == "struct"
-            or phys == "list<struct>"
-            or (phys.startswith("map<") and phys.endswith(">"))
-        ):
-            if phys == "struct":
-                n, entries = _norm_struct_fields(name, values, validity)
-            elif phys == "list<struct>":
-                n, entries = _norm_repeated_group(
-                    name, "list_struct", None, values, validity
-                )
-            else:
-                n, entries = _norm_repeated_group(
-                    name, "map", phys[4:-1], values, validity
-                )
-            if num_rows is None:
-                num_rows = n
-            elif num_rows != n:
-                raise ValueError(f"{name}: {n} rows vs {num_rows} in prior columns")
-            norm.extend(entries)
-            continue
-        if phys.startswith("list<") and phys.endswith(">"):
-            elem_alias = phys[5:-1]
-            phys, conv = _LOGICAL.get(elem_alias, (elem_alias, None))
-            if phys not in _PHYS_IDS:
-                raise ValueError(f"{name}: unsupported list element {elem_alias}")
-            offsets, values, elem_valid = values
-            offsets = np.ascontiguousarray(offsets, np.int64)
-            if len(offsets) == 0 or (np.diff(offsets) < 0).any():
-                raise ValueError(f"{name}: list offsets must be non-decreasing")
-            n = len(offsets) - 1
-            if validity is not None:
-                validity = np.asarray(validity, bool)
-                if len(validity) != n:
-                    raise ValueError(f"{name}: validity length != rows")
-                if (np.diff(offsets)[~validity] != 0).any():
-                    raise ValueError(f"{name}: null list rows must be empty")
-            if elem_valid is not None:
-                elem_valid = np.asarray(elem_valid, bool)
-                if len(elem_valid) != int(offsets[-1]):
-                    raise ValueError(f"{name}: elem_validity length != entries")
-            n_dense = len(values[0]) if phys == "byte_array" else len(values)
-            n_present = (
-                int(offsets[-1]) if elem_valid is None else int(elem_valid.sum())
-            )
-            if n_dense != n_present:
-                raise ValueError(
-                    f"{name}: {n_dense} dense elements vs {n_present} present"
-                )
-            if phys != "byte_array":
-                values = np.asarray(values)
-            lst = {
-                "offsets": offsets,
-                "elem_valid": elem_valid,
-                "evpre": (
-                    np.concatenate(([0], np.cumsum(elem_valid, dtype=np.int64)))
-                    if elem_valid is not None
-                    else None
-                ),
-            }
-        else:
-            phys, conv = _LOGICAL.get(phys, (phys, None))
-            if phys == "byte_array":
-                n_dense = len(values[0])
-            else:
-                values = np.asarray(values)
-                n_dense = len(values)
-            n = n_dense if validity is None else len(validity)
-        if num_rows is None:
-            num_rows = n
-        elif num_rows != n:
-            raise ValueError(f"{name}: {n} rows vs {num_rows} in prior columns")
-        if lst is None and validity is not None:
-            validity = np.asarray(validity, bool)
-            if phys != "byte_array":
-                values = values[validity]
-            elif len(values[0]) != int(validity.sum()):
-                raise ValueError(
-                    f"{name}: byte-array values must be dense (non-null only)"
-                )
-        # prefix sums ONCE per column, not per row group (the per-group
-        # recompute made write_table O(rows x groups); r5 review pass 2 #4)
-        aux = {
-            "offs": (
-                np.concatenate(
-                    ([0], np.cumsum(np.asarray(values[0], np.int64)))
-                )
-                if phys == "byte_array"
-                else None
-            ),
-            "vpre": (
-                np.concatenate(([0], np.cumsum(validity, dtype=np.int64)))
-                if validity is not None and lst is None
-                else None
-            ),
-        }
-        norm.append((name, phys, conv, enc, values, validity, aux, lst, None))
-    num_rows = num_rows or 0
+    leaf_encs = []
+    for leaf in leaves:
+        keys = (".".join(leaf.path[:k]) for k in range(len(leaf.path), 0, -1))
+        leaf_encs.append(
+            (leaf, next((encodings[k] for k in keys if k in encodings), "AUTO"))
+        )
+    num_rows = table.num_rows
 
     out = bytearray(MAGIC)
     rowgroups = []
@@ -952,95 +1058,39 @@ def write_table(path: str, columns: list, codec: str | None = None,
     for lo in range(0, max(num_rows, 1), step):
         hi = min(lo + step, num_rows)
         col_meta = _write_group(
-            out, norm, lo, hi, codec, data_page_version, page_size_rows,
+            out, leaf_encs, lo, hi, codec, data_page_version, page_size_rows,
             dict_page_size_limit,
         )
         rowgroups.append((col_meta, hi - lo))
         if num_rows == 0:
             break
-    col_meta0 = rowgroups[0][0]
     return _finish_file(
-        path, out, rowgroups, col_meta0, num_rows, codec, created_by,
-        sorting_columns,
+        path, out, rowgroups, _schema_elements(table.schema), num_rows,
+        codec, created_by, sorting_columns,
     )
 
 
-def _slice_col(phys, values, validity, aux, lo, hi):
-    """Row-range slice of one normalized column -> (dense values, validity
-    slice); O(group size) via the precomputed prefix sums."""
-    if validity is None:
-        if phys == "byte_array":
-            lens, data = values
-            offs = aux["offs"]
-            return (lens[lo:hi], data[offs[lo] : offs[hi]]), None
-        return values[lo:hi], None
-    vslice = validity[lo:hi]
-    dlo = int(aux["vpre"][lo])
-    dhi = int(aux["vpre"][hi])
-    if phys == "byte_array":
-        lens, data = values
-        offs = aux["offs"]
-        return (lens[dlo:dhi], data[offs[dlo] : offs[dhi]]), vslice
-    return values[dlo:dhi], vslice
-
-
-def _slice_list_dense(phys, values, aux, lst, lo, hi):
-    """Row-range slice of a LIST column's DENSE element values -> (dense,
-    ev_slice); dense ranges come off the entry offsets + element-validity
-    prefix sums, all O(group size)."""
-    offsets = lst["offsets"]
-    elo, ehi = int(offsets[lo]), int(offsets[hi])
-    if lst["elem_valid"] is None:
-        dlo, dhi = elo, ehi
-        ev_slice = None
-    else:
-        dlo = int(lst["evpre"][elo])
-        dhi = int(lst["evpre"][ehi])
-        ev_slice = lst["elem_valid"][elo:ehi]
-    if phys == "byte_array":
-        lens, data = values
-        boffs = aux["offs"]
-        dense = (lens[dlo:dhi], data[boffs[dlo] : boffs[dhi]])
-    else:
-        dense = values[dlo:dhi]
-    return dense, ev_slice
-
-
-def _write_group(out: bytearray, norm: list, lo: int, hi: int,
-                 codec: str | None, data_page_version: int = 1,
-                 page_rows: int | None = None,
-                 dict_page_size_limit: int = 1024 * 1024) -> list:
-    if data_page_version not in (1, 2):
-        raise ValueError(f"data_page_version must be 1 or 2")
+def _write_group(out: bytearray, leaf_encs: list, lo: int, hi: int,
+                 codec: str | None, data_page_version: int,
+                 page_rows: int | None, dict_page_size_limit: int) -> list:
+    """Rows [lo, hi) of every leaf as one row group's column chunks:
+    dictionary page (optional), data pages, and each page's location +
+    stats (the ColumnIndex/OffsetIndex inputs)."""
+    # page row ranges, shared by every leaf: a page holds whole rows
+    step = page_rows if page_rows and page_rows > 0 else max(hi - lo, 1)
+    ranges = [
+        (plo, min(plo + step, hi)) for plo in range(lo, hi, step)
+    ] or [(lo, hi)]
+    single = len(ranges) == 1
     col_meta = []
-    for name, phys, conv, enc, all_values, all_validity, aux, lst, grp in norm:
-        n = hi - lo
+    for leaf, enc in leaf_encs:
+        phys, conv = leaf.phys, leaf.conv
         # -- group-level pass: resolve AUTO + build the dictionary over
         # the WHOLE group so every page shares one encoding and one dict
-        # page; levels are NOT materialized here (the page pass builds
-        # them, and the default single-page case reuses these slices
-        # outright — r6 review #6 removed the doubled work) --
-        if lst is not None:
-            g_values, g_ev = _slice_list_dense(
-                phys, all_values, aux, lst, lo, hi
-            )
-            g_validity = None
-            max_def = grp["max_def"] if grp is not None else 3
-            max_rep = 1
-            counts = np.diff(lst["offsets"][lo : hi + 1])
-            g_nlev = int(np.maximum(counts, 1).sum()) if n else 0
-        else:
-            g_values, g_validity = _slice_col(
-                phys, all_values, all_validity, aux, lo, hi
-            )
-            max_def = (
-                grp["max_def"]
-                if grp is not None
-                else (0 if g_validity is None else 1)
-            )
-            max_rep = 0
-            g_nlev = n
-        g_dense = len(g_values[0]) if phys == "byte_array" else len(g_values)
+        # page; the single-page default reuses these values outright --
+        g_lo, g_hi = leaf.level_at(lo), leaf.level_at(hi)
+        g_values = leaf.dense(g_lo, g_hi)
+        g_dense = _n_values(g_values)
         if g_dense == 0 and enc in ("AUTO", "PLAIN_DICTIONARY"):
             # an all-null group has nothing to dictionary-encode (and
             # nothing for the selector to sample) — PLAIN of zero values
@@ -1050,19 +1100,12 @@ def _write_group(out: bytearray, norm: list, lo: int, hi: int,
             # per-row-group adaptivity, same granularity as the engine's
             # per-chunk selection
             enc = _auto_encoding(phys, g_values)
-        def_width = max(int(max_def).bit_length(), 1)
+        def_width = max(leaf.max_def.bit_length(), 1)
+        rep_width = max(leaf.max_rep.bit_length(), 1)
 
         start = len(out)
         encodings = set()
         raw_total = 0  # uncompressed bytes of all pages INCL headers (spec)
-        # page row ranges (hoisted above the dict build: the mid-chunk
-        # fallback needs per-page dense boundaries before the dict page
-        # is emitted)
-        step = page_rows if page_rows and page_rows > 0 else max(n, 1)
-        ranges = [
-            (plo, min(plo + step, hi)) for plo in range(lo, hi, step)
-        ] or [(lo, hi)]
-        single = ranges == [(lo, hi)]
         dict_idx = None
         dict_cut = None  # dense position where dict-encoded pages stop
         if enc == "PLAIN_DICTIONARY":
@@ -1083,26 +1126,19 @@ def _write_group(out: bytearray, norm: list, lo: int, hi: int,
                 # fits, truncate the dict page to exactly those uniques,
                 # and encode the remaining pages PLAIN.
                 cut = None
-                if not single and lst is None and grp is None:
-                    dcum = (
-                        np.concatenate(
-                            ([0], np.cumsum(g_validity.astype(np.int64)))
-                        )
-                        if g_validity is not None
-                        else np.arange(n + 1, dtype=np.int64)
-                    )
-                    bounds = [dcum[phi - lo] for _, phi in ranges]
+                if not single:
+                    g_d0 = leaf.dense_at(g_lo)
                     runmax = np.maximum.accumulate(dict_idx)
                     cum = np.cumsum(u_sizes)
-                    for b in bounds[:-1]:  # full-dict case already failed
+                    for _, phi in ranges[:-1]:  # full dict already failed
+                        b = leaf.dense_at(leaf.level_at(phi)) - g_d0
                         if b == 0 or cum[int(runmax[b - 1])] > \
                                 dict_page_size_limit:
                             break
-                        cut = int(b)
+                        cut = b
                 if cut is None:
-                    # dictionary overflows inside the first page (or a
-                    # shape the split doesn't cover): the whole group
-                    # falls back before any bytes are emitted
+                    # dictionary overflows inside the first page: the
+                    # whole group falls back before any bytes are emitted
                     enc = "PLAIN"
                     dict_idx = None
                 else:
@@ -1138,83 +1174,33 @@ def _write_group(out: bytearray, norm: list, lo: int, hi: int,
             dict_page_enc = None
             encodings.add(enc)
 
-        # -- per-page pass: slice rows, shred levels, encode, record the
-        # page's location + stats (the ColumnIndex/OffsetIndex inputs) --
+        # -- per-page pass: level range from the row starts, dense range
+        # from the dense prefix; encode, record location + stats --
         data_off = None
         pages = []
         dcur = 0  # dense-value cursor into the group's dictionary indices
         for plo, phi in ranges:
-            if lst is not None:
-                if single:
-                    values = g_values
-                    ev_slice = g_ev
-                    pcounts = counts  # same [lo, hi) range — no re-diff
-                else:
-                    values, ev_slice = _slice_list_dense(
-                        phys, all_values, aux, lst, plo, phi
-                    )
-                    pcounts = np.diff(lst["offsets"][plo : phi + 1])
-                prow_valid = (
-                    None
-                    if all_validity is None
-                    else all_validity[plo:phi]
-                )
-                if grp is not None:
-                    # repeated GROUP element (list<struct> / map): levels
-                    # carry the element-struct and field validity
-                    # separately so struct-null vs field-null stay
-                    # distinct def values
-                    elo = int(lst["offsets"][plo])
-                    ehi = int(lst["offsets"][phi])
-                    rep_lev, def_lev = _list_struct_levels(
-                        pcounts,
-                        prow_valid,
-                        None if lst["sv"] is None else lst["sv"][elo:ehi],
-                        None if lst["fv"] is None else lst["fv"][elo:ehi],
-                        grp["elem_opt"],
-                        grp["field_opt"],
-                    )
-                else:
-                    rep_lev, def_lev = _list_level_arrays(
-                        pcounts, prow_valid, ev_slice
-                    )
-                validity = None
-                n_lev = len(def_lev)
-            else:
-                if single:
-                    values, validity = g_values, g_validity
-                else:
-                    values, validity = _slice_col(
-                        phys, all_values, all_validity, aux, plo, phi
-                    )
-                rep_lev = None
-                if grp is not None and grp["def_rows"] is not None:
-                    # two optional levels (optional struct + optional
-                    # field): the 0/1/2 def array computed at normalize
-                    def_lev = grp["def_rows"][plo:phi].astype(np.uint64)
-                elif validity is not None:
-                    def_lev = validity.astype(np.uint64)
-                else:
-                    def_lev = None
-                n_lev = phi - plo
-            n_dense = len(values[0]) if phys == "byte_array" else len(values)
-            if lst is not None:
-                pstats = _column_stats(phys, values, None, n_dense, conv == 0)
-                pstats["null_count"] = n_lev - n_dense
-            else:
-                pstats = _column_stats(phys, values, validity, phi - plo, conv == 0)
+            la, lb = leaf.level_at(plo), leaf.level_at(phi)
+            values = g_values if single else leaf.dense(la, lb)
+            n_lev = lb - la
+            n_dense = _n_values(values)
+            pstats = _column_stats(phys, values, n_lev - n_dense, conv == 0)
+            rep_lev = None if leaf.reps is None else leaf.reps[la:lb]
+            def_lev = None if leaf.defs is None else leaf.defs[la:lb]
             if data_page_version == 2:
                 # v2: raw hybrid, no length prefix (lengths in the header);
                 # repetition levels FIRST, then definition levels
-                rep_bytes = b"" if max_rep == 0 else rle.encode(rep_lev, 1)
+                rep_bytes = (
+                    b"" if rep_lev is None else rle.encode(rep_lev, rep_width)
+                )
                 dl_bytes = (
                     b"" if def_lev is None else rle.encode(def_lev, def_width)
                 )
             else:
                 rep_bytes = (
                     b""
-                    if max_rep == 0
-                    else rle.encode_len_prefixed(rep_lev, 1)
+                    if rep_lev is None
+                    else rle.encode_len_prefixed(rep_lev, rep_width)
                 )
                 dl_bytes = (
                     b""
@@ -1292,35 +1278,28 @@ def _write_group(out: bytearray, norm: list, lo: int, hi: int,
         # chunk-level Statistics: the single-page default reuses the
         # page's stats verbatim; multi-page chunks pay one group pass
         # (byte-order folding of serialized page bounds would be wrong
-        # for numeric types)
+        # for numeric types). null_count counts every def < max_def slot
+        # (missing-by-ancestor + null leaves), the parquet-mr/arrow
+        # convention.
         if single:
             stats = dict(pages[0]["stats"])
-        elif lst is not None:
-            # leaf stats over the present elements; null_count counts
-            # every def < max_def slot (missing-by-ancestor + null
-            # elements), the parquet-mr/arrow convention
-            stats = _column_stats(phys, g_values, None, g_dense, conv == 0)
-            stats["null_count"] = g_nlev - g_dense
         else:
-            stats = _column_stats(phys, g_values, g_validity, n, conv == 0)
-        total_comp = len(out) - start
+            stats = _column_stats(
+                phys, g_values, (g_hi - g_lo) - g_dense, conv == 0
+            )
         encodings.add("RLE")
         col_meta.append(
             {
-                "name": name,
+                "path": leaf.path,
                 "phys": phys,
-                "conv": conv,
-                "max_def": max_def,
-                "is_list": lst is not None,
-                "grp": grp,
                 "encodings": sorted(_ENC_IDS[e] for e in encodings),
-                "n": g_nlev,
+                "n": g_hi - g_lo,
                 "start": start,
                 "data_off": data_off,
                 "dict_off": dict_off,
                 "dict_page_enc": dict_page_enc,
                 "page_type": 3 if data_page_version == 2 else 0,
-                "total_comp": total_comp,
+                "total_comp": len(out) - start,
                 "total_raw": raw_total,
                 "stats": stats,
                 "pages": pages,
@@ -1329,132 +1308,11 @@ def _write_group(out: bytearray, norm: list, lo: int, hi: int,
     return col_meta
 
 
-def _finish_file(path, out: bytearray, rowgroups: list, col_meta0: list,
+def _finish_file(path, out: bytearray, rowgroups: list, schema: list,
                  num_rows: int, codec, created_by: str,
                  sorting_columns: list | None = None) -> dict:
-    """Footer: schema elements (root + one per column, from the first
-    group's metadata) then one RowGroup struct per group."""
-    # root num_children counts TOP-LEVEL fields: each run of consecutive
-    # struct leaves shares one parent group element
-    n_top = 0
-    prev_parent = object()
-    for c in col_meta0:
-        g = c["grp"]
-        parent = g["parent"] if g is not None else None
-        if g is None or parent != prev_parent:
-            n_top += 1
-        prev_parent = parent
-    schema = [
-        (
-            [(4, _CT_BINARY, "schema"), (5, _CT_I32, n_top)]
-        )
-    ]
-    idx = 0
-    while idx < len(col_meta0):
-        c = col_meta0[idx]
-        g = c["grp"]
-        if g is not None:
-            # grouped run (struct / list<struct> / map): one set of group
-            # elements, then the run's scalar leaves
-            end = idx
-            while (
-                end < len(col_meta0)
-                and col_meta0[end]["grp"] is not None
-                and col_meta0[end]["grp"]["parent"] == g["parent"]
-            ):
-                end += 1
-            if g["kind"] == "struct":
-                schema.append(
-                    [
-                        (3, _CT_I32, 1 if g["parent_opt"] else 0),
-                        (4, _CT_BINARY, g["parent"]),
-                        (5, _CT_I32, end - idx),
-                    ]
-                )
-            elif g["kind"] == "list_struct":
-                # optional group (LIST) / repeated group list /
-                # optional-or-required group element { leaves }
-                schema.append(
-                    [
-                        (3, _CT_I32, 1),
-                        (4, _CT_BINARY, g["parent"]),
-                        (5, _CT_I32, 1),
-                        (6, _CT_I32, 3),  # ConvertedType LIST
-                    ]
-                )
-                schema.append(
-                    [(3, _CT_I32, 2), (4, _CT_BINARY, "list"), (5, _CT_I32, 1)]
-                )
-                schema.append(
-                    [
-                        (3, _CT_I32, 1 if g["elem_opt"] else 0),
-                        (4, _CT_BINARY, "element"),
-                        (5, _CT_I32, end - idx),
-                    ]
-                )
-            else:  # map
-                # optional group (MAP) / repeated group key_value
-                # { required key, value }
-                schema.append(
-                    [
-                        (3, _CT_I32, 1),
-                        (4, _CT_BINARY, g["parent"]),
-                        (5, _CT_I32, 1),
-                        (6, _CT_I32, 1),  # ConvertedType MAP
-                    ]
-                )
-                schema.append(
-                    [
-                        (3, _CT_I32, 2),
-                        (4, _CT_BINARY, "key_value"),
-                        (5, _CT_I32, end - idx),
-                        (6, _CT_I32, 2),  # ConvertedType MAP_KEY_VALUE
-                    ]
-                )
-            for ck in col_meta0[idx:end]:
-                el = [
-                    (1, _CT_I32, _PHYS_IDS[ck["phys"]]),
-                    (3, _CT_I32, 1 if ck["grp"]["field_opt"] else 0),
-                    (4, _CT_BINARY, ck["name"]),
-                ]
-                if ck["conv"] is not None:
-                    el.append((6, _CT_I32, ck["conv"]))
-                schema.append(el)
-            idx = end
-            continue
-        idx += 1
-        if c["is_list"]:
-            # 3-level LIST convention: optional group (LIST, ConvertedType
-            # 3) / repeated group "list" / optional "element" — the shape
-            # Spark, pyarrow and DuckDB all surface as array<elem>
-            schema.append(
-                [
-                    (3, _CT_I32, 1),  # optional
-                    (4, _CT_BINARY, c["name"]),
-                    (5, _CT_I32, 1),
-                    (6, _CT_I32, 3),  # ConvertedType LIST
-                ]
-            )
-            schema.append(
-                [(3, _CT_I32, 2), (4, _CT_BINARY, "list"), (5, _CT_I32, 1)]
-            )
-            el = [
-                (1, _CT_I32, _PHYS_IDS[c["phys"]]),
-                (3, _CT_I32, 1),  # optional element
-                (4, _CT_BINARY, "element"),
-            ]
-            if c["conv"] is not None:
-                el.append((6, _CT_I32, c["conv"]))
-            schema.append(el)
-            continue
-        el = [
-            (1, _CT_I32, _PHYS_IDS[c["phys"]]),
-            (3, _CT_I32, 1 if c["max_def"] else 0),  # optional / required
-            (4, _CT_BINARY, c["name"]),
-        ]
-        if c["conv"] is not None:
-            el.append((6, _CT_I32, c["conv"]))  # ConvertedType
-        schema.append(el)
+    """Footer: the schema elements, then PageIndex and one RowGroup
+    struct per group."""
 
     def _boundary_order(phys: str, pages) -> int:
         """ColumnIndex.boundary_order (0 UNORDERED / 1 ASCENDING / 2
@@ -1541,21 +1399,10 @@ def _finish_file(path, out: bytearray, rowgroups: list, col_meta0: list,
     for col_meta, rg_rows in rowgroups:
         chunks = []
         for c in col_meta:
-            g = c["grp"]
-            if g is not None and g["kind"] == "list_struct":
-                col_path = [g["parent"], "list", "element", c["name"]]
-            elif g is not None and g["kind"] == "map":
-                col_path = [g["parent"], "key_value", c["name"]]
-            elif c["is_list"]:
-                col_path = [c["name"], "list", "element"]
-            elif g is not None:
-                col_path = [g["parent"], c["name"]]
-            else:
-                col_path = [c["name"]]
             meta = [
                 (1, _CT_I32, _PHYS_IDS[c["phys"]]),
                 (2, _CT_LIST, (_CT_I32, c["encodings"])),
-                (3, _CT_LIST, (_CT_BINARY, col_path)),
+                (3, _CT_LIST, (_CT_BINARY, c["path"])),
                 (4, _CT_I32, _CODEC_IDS[codec]),
                 (5, _CT_I64, c["n"]),
                 (6, _CT_I64, c["total_raw"]),
@@ -1612,7 +1459,9 @@ def _finish_file(path, out: bytearray, rowgroups: list, col_meta0: list,
             # SortingColumn: declared sort of the rows WITHIN each group
             # (readers use it for merge planning and sort-aware scans) —
             # the caller asserts the order; this writer does not re-sort
-            name_idx = {c["name"]: i for i, c in enumerate(col_meta)}
+            name_idx = {
+                ".".join(c["path"]): i for i, c in enumerate(col_meta)
+            }
             rg_fields.append(
                 (
                     4,
@@ -1642,7 +1491,7 @@ def _finish_file(path, out: bytearray, rowgroups: list, col_meta0: list,
             # column_orders: TypeDefinedOrder per column — without it,
             # readers (parquet-cpp/Spark) DISTRUST the v2 min_value/
             # max_value statistics and row-group pruning never happens
-            (7, _CT_LIST, (_CT_STRUCT, [[(1, _CT_STRUCT, [])] for _ in col_meta0])),
+            (7, _CT_LIST, (_CT_STRUCT, [[(1, _CT_STRUCT, [])] for _ in rowgroups[0][0]])),
         ]
     )
     out += footer

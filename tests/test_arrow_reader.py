@@ -2,7 +2,9 @@
 Arrow array of the type ``_spark_type`` declares, so repeated INT96
 leaves come back as epoch-ns like flat ones, a pruned read that keeps no
 row still returns typed columns, and a column that would need 64-bit
-Arrow offsets fails with its name."""
+Arrow offsets fails with its name. ``read_table`` returns the requested
+column order, and a damaged page fails with a ValueError naming its
+column and offset."""
 
 import numpy as np
 import pyarrow as pa
@@ -166,3 +168,60 @@ def test_malformed_level_streams_raise(vals, defs, reps, msg):
             _list_col(), np.array(vals, np.int32),
             np.array(defs, np.uint64), np.array(reps, np.uint64),
         )
+
+
+def test_read_table_returns_requested_column_order(tmp_path):
+    path = str(tmp_path / "order.parquet")
+    cols = [
+        (name, "int32", "PLAIN", np.arange(4, dtype=np.int32) + k, None)
+        for k, name in enumerate("abc")
+    ]
+    po.write_table(path, cols, row_group_size=2)
+    for want in (["c", "a"], ["b", "c", "a"]):
+        assert list(pc.read_table(path, columns=want)) == want
+        assert list(pc.read_table(path, columns=want, row_group=1)) == want
+    assert list(pc.read_table(path)) == ["a", "b", "c"]
+
+
+def _damaged(tmp_path, find: bytes, repl: bytes) -> tuple:
+    """A one-column dictionary-encoded file with the first ``find`` at or
+    after the chunk's first page replaced by ``repl`` (same length)."""
+    path = str(tmp_path / "dict.parquet")
+    po.write_table(
+        path, [("v", "int32", "PLAIN_DICTIONARY",
+                np.array([5, 6, 5, 6, 6], np.int32), None)],
+    )
+    (col,) = pc.read_file_info(path).columns
+    buf = bytearray(open(path, "rb").read())
+    at = buf.index(find, col.start_offset)
+    buf[at : at + len(find)] = repl
+    open(path, "wb").write(bytes(buf))
+    return path, col
+
+
+def test_dictionary_index_past_dictionary_names_column_and_page(tmp_path):
+    # DictionaryPageHeader {1: num_values=2} -> 1: indices reach 1
+    path, col = _damaged(tmp_path, b"\x4c\x15\x04", b"\x4c\x15\x02")
+    with pytest.raises(ValueError, match=r"v: dictionary index 1 at or past "
+                       r"the 1-entry dictionary \(page at offset \d+\)"):
+        pc.read_table(path)
+
+
+def test_missing_page_header_field_names_column_and_page(tmp_path):
+    # DataPageHeader's first field id 1 -> 6: num_values and encoding gone
+    path, col = _damaged(tmp_path, b"\x2c\x15", b"\x2c\x65")
+    with pytest.raises(ValueError, match=r"v: page header at offset \d+ "
+                       r"lacks field\(s\) \[1, 2\]"):
+        pc.read_table(path)
+    # the page-pruned read decodes the same header from its buffer of
+    # selected pages
+    with pytest.raises(ValueError, match=r"v: page header at offset \d+ of "
+                       r"the selected pages lacks field\(s\) \[1, 2\]"):
+        pc.read_table_pruned(path, ("v", 5, 5))
+
+
+def test_zero_row_repeated_byte_array_column_reads_empty(tmp_path):
+    path = str(tmp_path / "empty.parquet")
+    pq.write_table(pa.table({"s": pa.array([], pa.list_(pa.string()))}), path)
+    rows, valid = pc.read_table(path)["s.list.element"]
+    assert rows == [] and len(valid) == 0

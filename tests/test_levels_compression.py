@@ -18,12 +18,6 @@ def test_levels_v1_roundtrip(max_level, n):
     np.testing.assert_array_equal(out, lv)
 
 
-def test_levels_v2_roundtrip():
-    lv = np.array([1, 1, 0, 1, 0, 0, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1], np.uint64)
-    buf = levels.encode_v2(lv, 1)
-    np.testing.assert_array_equal(levels.decode_v2(buf, 1, len(lv)), lv)
-
-
 def test_levels_v1_has_length_prefix():
     # v1 framing: 4-byte LE payload length (src/encodings/levels.rs:134-141)
     lv = np.ones(50, np.uint64)
@@ -35,7 +29,7 @@ def test_shred_assemble_nullable():
     rng = np.random.default_rng(1)
     vals = rng.integers(0, 100, 200).astype(np.int32)
     valid = rng.integers(0, 2, 200).astype(bool)
-    def_levels, dense = levels.shred_nullable(vals, valid)
+    def_levels, dense = valid.astype(np.uint64), vals[valid]
     assert len(dense) == valid.sum()
     out, out_valid = levels.assemble_nullable(def_levels, dense)
     np.testing.assert_array_equal(out_valid, valid)
@@ -57,7 +51,7 @@ def test_nullable_end_to_end_with_value_codec():
     rng = np.random.default_rng(7)
     vals = rng.integers(0, 50, 1000).astype(np.int32)
     valid = rng.integers(0, 5, 1000) > 0
-    def_levels, dense = levels.shred_nullable(vals, valid)
+    def_levels, dense = valid.astype(np.uint64), vals[valid]
     lv_buf = levels.encode_v1(def_levels, 1)
     val_blob = chunk.encode_chunk(dense, "dict", "int32")
     # decode
@@ -170,27 +164,6 @@ def test_rle_bool_chunk():
     blob = chunk.encode_chunk(v, "rle_bool", "bool")
     np.testing.assert_array_equal(chunk.decode_chunk(blob), v)
     assert chunk.read_info(blob).codec == "rle_bool"
-
-
-def test_bit_packed_levels_legacy_variant():
-    """Deprecated BIT_PACKED level layout (reference levels.rs:57,76-80):
-    fixed-width LSB-first packing, zero-padded final byte."""
-    import numpy as np
-
-    from engine import levels
-
-    lv = np.array([0, 1, 2, 3, 2, 1, 0, 3, 3], dtype=np.uint64)  # max_level 3
-    buf = levels.encode_bit_packed(lv, 3)
-    assert len(buf) == (len(lv) * 2 + 7) // 8  # width 2
-    out = levels.decode_bit_packed(buf, 3, len(lv))
-    assert np.array_equal(out, lv)
-    # width-1 def levels (the common nullable case)
-    dl = np.array([1, 1, 0, 1, 0, 0, 1, 1, 1, 0, 1], dtype=np.uint64)
-    buf1 = levels.encode_bit_packed(dl, 1)
-    assert np.array_equal(levels.decode_bit_packed(buf1, 1, len(dl)), dl)
-    # max_level 0 -> empty stream
-    assert levels.encode_bit_packed(np.zeros(5, np.uint64), 0) == b""
-    assert np.array_equal(levels.decode_bit_packed(b"", 0, 5), np.zeros(5))
 
 
 def test_block_compression_over_chunks():

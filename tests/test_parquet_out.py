@@ -632,9 +632,7 @@ def test_byte_array_stats_arrow_ordering_parity():
         if trial % 3 == 0:
             vals += [b"", b"\xff", b"\xff\x00", b"a", b"ab"]
         lens = np.array([len(v) for v in vals], np.int64)
-        s = po._column_stats(
-            "byte_array", (lens, b"".join(vals)), None, len(vals)
-        )
+        s = po._column_stats("byte_array", (lens, b"".join(vals)))
         lo, hi = min(vals), max(vals)
         assert s["min"] == lo[:64]
         # max is truncated-and-incremented only when over the cap
