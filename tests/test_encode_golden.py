@@ -79,9 +79,9 @@ _FIELDS = ("codec", "checksum", "n_values", "null_count",
            "vmin", "vmax", "vmin_d", "vmax_d", "vmin_s", "vmax_s")
 
 
-def _pin(chunks):
+def _pin(chunks, fields=_FIELDS):
     return {
-        (r["chunk_id"], r["column"]): tuple(r[f] for f in _FIELDS)
+        (r["chunk_id"], r["column"]): tuple(r[f] for f in fields)
         for r in chunks.collect()
     }
 
@@ -161,3 +161,72 @@ def test_corpus_chunks_are_byte_stable(spark):
     df = spark.createDataFrame(datagen.generate_pandas(N_ROWS, seed=7))
     chunks = encode_job.encode_table(df, rows_per_bucket=32)
     assert _pin(chunks) == GOLDEN_CORPUS
+
+
+# generic list columns beyond li64/lf64/lbytes: null lists, empty lists and
+# null elements in every element kind, pinned apart so GOLDEN_TABLE holds
+_LIST_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType(), False),
+        T.StructField("grp", T.StringType(), False),
+        T.StructField("li32", T.ArrayType(T.IntegerType(), True), True),
+        T.StructField("lf32", T.ArrayType(T.FloatType(), True), True),
+        T.StructField("lbool", T.ArrayType(T.BooleanType(), True), True),
+        T.StructField("lbin", T.ArrayType(T.BinaryType(), True), True),
+    ]
+)
+
+
+def _list_rows(seed: int = 13):
+    rng = np.random.default_rng(seed)
+
+    def lst(make):
+        # one list in five is NULL, one in four of the rest is empty
+        if rng.random() < 0.2:
+            return None
+        return [_maybe(rng, make()) for _ in range(int(rng.integers(0, 4)))]
+
+    return [
+        (
+            i,
+            f"g{i % 2}",
+            lst(lambda: int(rng.integers(-1000, 1000))),
+            lst(lambda: float(np.float32(rng.normal(0, 10)))),
+            lst(lambda: bool(rng.integers(0, 2))),
+            lst(lambda: bytes(rng.integers(0, 256, int(rng.integers(0, 4)), np.uint8))),
+        )
+        for i in range(N_ROWS)
+    ]
+
+
+# _FIELDS plus raw_bytes and enc_bytes, so the frame headers are pinned too
+_LIST_FIELDS = (*_FIELDS, "raw_bytes", "enc_bytes")
+
+# (*_FIELDS, raw_bytes, enc_bytes)
+GOLDEN_LISTS = {
+    ('g0#0000000000', 'grp'): ('dict_ba', 2883962647, 32, 0, None, None, None, None, 'g0', 'g0', 192, 49),
+    ('g0#0000000000', 'id'): ('delta', 2894324882, 32, 0, 0, 62, None, None, None, None, 256, 46),
+    ('g0#0000000000', 'lbin'): ('list', 1086206388, 32, 4, None, None, None, None, None, None, 175, 219),
+    ('g0#0000000000', 'lbool'): ('list', 1974572591, 32, 5, None, None, None, None, None, None, 167, 151),
+    ('g0#0000000000', 'lf32'): ('list', 667557626, 32, 6, None, None, -22.939552307128906, 16.511003494262695, None, None, 276, 258),
+    ('g0#0000000000', 'li32'): ('list', 3955012781, 32, 6, -998, 895, None, None, None, None, 264, 181),
+    ('g1#0000000000', 'grp'): ('dict_ba', 324640882, 32, 0, None, None, None, None, 'g1', 'g1', 192, 49),
+    ('g1#0000000000', 'id'): ('delta', 3779806617, 32, 0, 1, 63, None, None, None, None, 256, 46),
+    ('g1#0000000000', 'lbin'): ('list', 3463556750, 32, 7, None, None, None, None, None, None, 173, 216),
+    ('g1#0000000000', 'lbool'): ('list', 2837319834, 32, 4, None, None, None, None, None, None, 161, 150),
+    ('g1#0000000000', 'lf32'): ('list', 2242051279, 32, 5, None, None, -21.530353546142578, 24.159130096435547, None, None, 264, 262),
+    ('g1#0000000000', 'li32'): ('list', 1113909324, 32, 4, -991, 995, None, None, None, None, 284, 192),
+}
+
+
+def test_generic_list_chunks_are_byte_stable(spark):
+    df = spark.createDataFrame(_list_rows(), _LIST_SCHEMA)
+    chunks = encode_job.encode_table(
+        df,
+        columns=encode_job.derive_columns(df),
+        rows_per_bucket=32,
+        bucket_key="grp",
+        salt_col="id",
+        sort_col="id",
+    )
+    assert _pin(chunks, _LIST_FIELDS) == GOLDEN_LISTS

@@ -301,3 +301,37 @@ def test_binary_list_roundtrip(spark):
     assert df.orderBy("event_id").collect() == (
         out.select(*df.columns).orderBy("event_id").collect()
     )
+
+
+def test_struct_of_logical_leaves_roundtrip(spark):
+    """A nullable struct whose leaves are date, timestamp, decimal(10,2) and
+    decimal(38,6) round-trips value for value, NULL struct slots and NULL
+    leaves included."""
+    df = spark.range(0, 200).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % 3).cast("string").alias("grp"),
+        F.when(F.col("id") % 6 != 0, F.struct(
+            F.when(F.col("id") % 4 != 1,
+                   F.date_add(F.lit("2024-02-27").cast("date"), F.col("id").cast("int"))
+                   ).alias("d"),
+            F.timestamp_micros(F.col("id") * 86_400_000_123 + 7).alias("ts"),
+            F.when(F.col("id") % 5 != 2,
+                   (F.col("id") * 12345 - 999_999).cast("decimal(10,2)") / 100
+                   ).cast("decimal(10,2)").alias("small"),
+            F.concat(F.col("id").cast("string"), F.lit("98765432109876543210.123456"))
+            .cast("decimal(38,6)").alias("wide"),
+        )).alias("s"),
+    )
+    chunks, cols, plan = nested.encode_nested_table(
+        df, rows_per_bucket=64, bucket_key="grp",
+        salt_col="event_id", sort_col="event_id",
+    )
+    out = nested.rebuild(decode_job.decode_table(chunks, cols), plan)
+    assert out.schema["s"].dataType.simpleString() == (
+        df.schema["s"].dataType.simpleString()
+    )
+    a = df.orderBy("event_id").collect()
+    b = out.select(*df.columns).orderBy("event_id").collect()
+    assert a == b
+    assert out.where(F.col("s").isNull()).count() > 0
+    assert out.where(F.col("s.small").isNull() & F.col("s").isNotNull()).count() > 0
