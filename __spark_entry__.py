@@ -807,15 +807,14 @@ def _q_pruned_scan(spark, sf_dir) -> DataFrame:
 
 def _q_rt_nested_table(spark, sf_dir) -> DataFrame:
     """Nested generic-table path: array<string>, nullable array<string>,
-    array<int>, struct, map AND array<struct> (repeated group — shredded to
-    parallel array leaves with an element-validity leaf, reference
-    RepeatedReader src/record/reader.rs:159-240) columns derived from
-    documents, encoded via flatten -> LIST/leaf chunks -> decode -> rebuild,
-    then re-aggregated (record assembly src/record/reader.rs:303-520;
-    SchemaDescriptor leaf flattening src/schema/types.rs:652-735)."""
-    _engine(spark)
-    from engine.jobs import decode as decode_job
-    from engine.jobs import nested
+    array<int>, struct, map, array<struct> with NULL elements and
+    array<array<int>> with a NULL inner array, derived from documents and
+    encoded by encode_table(derive_columns(df)): each nested column is one
+    tree of LIST and STRUCT containers over leaf chunks (Dremel leaves plus
+    levels, reference src/column/writer.rs:304-345), rebuilt by
+    decode_table (record assembly src/record/reader.rs:159-520), then
+    re-aggregated."""
+    encode_job, decode_job = _engine(spark)
 
     docs = _read(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
@@ -850,11 +849,12 @@ def _q_rt_nested_table(spark, sf_dir) -> DataFrame:
             ),
         ).alias("aa"),
     )
-    chunks, cols, plan = nested.encode_nested_table(
-        df, rows_per_bucket=128, bucket_key="source",
+    cols = encode_job.derive_columns(df)
+    chunks = encode_job.encode_table(
+        df, columns=cols, rows_per_bucket=128, bucket_key="source",
         salt_col="doc_id", sort_col="doc_id",
     )
-    out = nested.rebuild(decode_job.decode_table(chunks, cols), plan)
+    out = decode_job.decode_table(chunks, cols)
     return out.select(
         "doc_id",
         F.size("words").cast("long").alias("n_words"),

@@ -28,6 +28,22 @@ reference's RLE value encoding is BOOLEAN-only, ``src/encodings/encoding.rs:
 String payloads (dtype=bytes, values passed as (lengths, concat data)):
     PLAIN_BA  u32 len + bytes per value  DICT_BA   dictionary of byte arrays
     DELTA_LENGTH_BA / DELTA_BA           FSST      symbol-table compression
+
+Nested columns are a tree of containers over leaf chunks, the reference's
+leaves-plus-levels column assembled back into records
+(``src/column/writer.rs:304-345``, ``src/record/reader.rs:159-302``)::
+
+    node   := LIST | STRUCT | leaf chunk
+    LIST   := [record def levels]            -- if FLAG_NULLABLE
+              u64 len | lengths chunk        -- int32, one per non-null record
+              node                           -- the elements, all slots
+    STRUCT := [record def levels]            -- if FLAG_NULLABLE
+              u32 n_fields
+              (u64 len | node) * n_fields    -- the non-null struct slots only
+
+A map is a LIST of STRUCT(key, value). Element and leaf NULLs ride the
+child's own FLAG_NULLABLE section. A container's n_values counts all its
+slots, NULL ones included, and its dtype byte repeats its first child's.
 """
 
 from __future__ import annotations
@@ -51,6 +67,7 @@ RLE = 4
 RLE_BOOL = 5
 PAGED = 6  # container: per-page sub-chunks, each with its own codec
 LIST = 7  # container: lengths sub-chunk + element-values sub-chunk
+STRUCT = 8  # container: one sub-chunk per field over the non-null slots
 PLAIN_BA = 16
 DICT_BA = 17
 DELTA_LENGTH_BA = 18
@@ -62,6 +79,7 @@ CODEC_NAMES = {
     RLE_BOOL: "rle_bool",
     PAGED: "paged",
     LIST: "list",
+    STRUCT: "struct",
     DICT: "dict",
     DELTA: "delta",
     BITPACK: "bitpack",
@@ -300,6 +318,13 @@ def encode_chunk(values, codec: str, dtype: str = "int32", valid=None) -> bytes:
         n = arr.size
         raw_bytes = n * _DTYPE_SIZE[dtype]
         payload = _encode_int_payload(arr, cid, dtype)
+    return _frame(cid, dtype, flags, n, raw_bytes, payload)
+
+
+def _frame(
+    cid: int, dtype: str, flags: int, n: int, raw_bytes: int, payload: bytes
+) -> bytes:
+    """Header (with the CRC of ``payload``) + payload."""
     crc = zlib.crc32(payload) & 0xFFFFFFFF
     header = (
         MAGIC
@@ -340,16 +365,7 @@ def encode_chunk_paged(
     payload = len(pages).to_bytes(4, "little") + b"".join(
         len(p).to_bytes(8, "little") + p for p in pages
     )
-    crc = zlib.crc32(payload) & 0xFFFFFFFF
-    header = (
-        MAGIC
-        + bytes([VERSION, PAGED, _DTYPES[dtype], 0])
-        + n.to_bytes(8, "little")
-        + (n * _DTYPE_SIZE[dtype]).to_bytes(8, "little")
-        + crc.to_bytes(4, "little")
-        + len(payload).to_bytes(8, "little")
-    )
-    return header + payload
+    return _frame(PAGED, dtype, 0, n, n * _DTYPE_SIZE[dtype], payload)
 
 
 def auto_codec(values, dtype: str, override: str | None = None) -> str:
@@ -370,10 +386,23 @@ def auto_codec(values, dtype: str, override: str | None = None) -> str:
     raise ValueError(f"no codec family for dtype {dtype}")
 
 
+def _record_levels(valid, n_dense: int) -> tuple[int, int, bytes]:
+    """(flags, n records, def-level head) of a container's record validity;
+    ``n_dense`` is the number of non-null records the container holds."""
+    if valid is None:
+        return 0, n_dense, b""
+    from . import levels as levels_mod
+
+    mask = np.ascontiguousarray(valid, dtype=bool)
+    if n_dense != int(mask.sum()):
+        raise ValueError("container chunk: children must be dense (non-null records)")
+    return FLAG_NULLABLE, len(mask), levels_mod.encode_v1(mask.astype(np.uint64), 1)
+
+
 def encode_chunk_list(
     lengths: np.ndarray,
     values,
-    elem_dtype: str,
+    elem_dtype: str | None = None,
     codec: str | None = None,
     valid: np.ndarray | None = None,
     elem_valid: np.ndarray | None = None,
@@ -384,8 +413,10 @@ def encode_chunk_list(
     ``lengths``: element count per NON-NULL record (dense). ``values``: flat
     element stream — ndarray for numeric elements, ``(ba_lengths, data)`` for
     string elements; when ``elem_valid`` is given the stream is dense
-    non-null elements and lengths count ALL element slots.
-    ``valid``: record-level validity (null lists). Frame::
+    non-null elements and lengths count ALL element slots. ``values`` may
+    instead be an already framed child node (``bytes``: a LIST, STRUCT or
+    leaf chunk of a nested column), which then carries the dtype and the
+    element nulls. ``valid``: record-level validity (null lists). Frame::
 
         header(codec=LIST, dtype=elem_dtype, flags)
         [record def levels]                 -- if FLAG_NULLABLE
@@ -395,57 +426,68 @@ def encode_chunk_list(
                                                 FLAG_NULLABLE section)
     """
     lengths = np.ascontiguousarray(lengths, dtype=np.int32)
-    flags = 0
-    head = b""
-    if valid is not None:
-        from . import levels as levels_mod
-
-        mask = np.ascontiguousarray(valid, dtype=bool)
-        if len(lengths) != int(mask.sum()):
-            raise ValueError("list chunk: lengths must be dense (non-null records)")
-        flags |= FLAG_NULLABLE
-        n = len(mask)
-        head = levels_mod.encode_v1(mask.astype(np.uint64), 1)
-    else:
-        n = len(lengths)
+    flags, n, head = _record_levels(valid, len(lengths))
     len_codec = auto_codec(lengths, "int32")
     lengths_blob = encode_chunk(lengths, len_codec, "int32")
-    vcodec = codec or auto_codec(values, elem_dtype)
-    values_blob = encode_chunk(values, vcodec, elem_dtype, valid=elem_valid)
+    if isinstance(values, bytes):
+        values_blob = values
+        info = read_info(values)
+        elem_dtype, raw_bytes = info.dtype, info.raw_bytes + 4 * n
+    else:
+        vcodec = codec or auto_codec(values, elem_dtype)
+        values_blob = encode_chunk(values, vcodec, elem_dtype, valid=elem_valid)
+        if elem_dtype == "bytes":
+            ba_lengths, data = values
+            raw_bytes = int(np.asarray(ba_lengths, dtype=np.int64).sum()) + 4 * n
+        else:
+            nvals = int(lengths.sum()) if elem_valid is None else len(
+                np.ascontiguousarray(elem_valid)
+            )
+            raw_bytes = nvals * _DTYPE_SIZE[elem_dtype] + 4 * n
     payload = (
         head + len(lengths_blob).to_bytes(8, "little") + lengths_blob + values_blob
     )
-    if elem_dtype == "bytes":
-        ba_lengths, data = values
-        raw_bytes = int(np.asarray(ba_lengths, dtype=np.int64).sum()) + 4 * n
-    else:
-        nvals = int(lengths.sum()) if elem_valid is None else len(
-            np.ascontiguousarray(elem_valid)
-        )
-        raw_bytes = nvals * _DTYPE_SIZE[elem_dtype] + 4 * n
-    crc = zlib.crc32(payload) & 0xFFFFFFFF
-    header = (
-        MAGIC
-        + bytes([VERSION, LIST, _DTYPES[elem_dtype], flags])
-        + n.to_bytes(8, "little")
-        + raw_bytes.to_bytes(8, "little")
-        + crc.to_bytes(4, "little")
-        + len(payload).to_bytes(8, "little")
+    return _frame(LIST, elem_dtype, flags, n, raw_bytes, payload)
+
+
+def encode_chunk_struct(
+    children: list, n_dense: int, valid: np.ndarray | None = None
+) -> bytes:
+    """Encode a struct column slice: one framed child node per field, each
+    holding only the ``n_dense`` non-null struct slots (dense, like list
+    lengths), after the record def levels when ``valid`` is given. Frame::
+
+        header(codec=STRUCT, dtype=first child's, flags)
+        [record def levels]                 -- if FLAG_NULLABLE
+        u32 n_fields
+        (u64 child_len | child_blob) * n_fields
+    """
+    infos = [read_info(c) for c in children]
+    flags, n, head = _record_levels(valid, n_dense)
+    if any(i.n_values != n_dense for i in infos):
+        raise ValueError(f"struct chunk: every field must hold {n_dense} rows")
+    payload = head + len(children).to_bytes(4, "little") + b"".join(
+        len(c).to_bytes(8, "little") + c for c in children
     )
-    return header + payload
+    dtype = infos[0].dtype if infos else "int32"
+    return _frame(STRUCT, dtype, flags, n, sum(i.raw_bytes for i in infos), payload)
+
+
+def _decode_levels(payload: np.ndarray, flags: int, n: int):
+    """A container's record validity (or None) and the bytes it took."""
+    if not flags & FLAG_NULLABLE:
+        return None, 0
+    from . import levels as levels_mod
+
+    def_levels, consumed = levels_mod.decode_v1(payload, 1, n)
+    return def_levels.astype(bool), consumed
 
 
 def _decode_list(payload: np.ndarray, flags: int, n: int):
     """-> (lengths, values[, record_valid]); ``values`` is whatever the
-    element chunk decodes to (ndarray, (lens, data), or nullable tuples)."""
-    pos = 0
-    record_valid = None
-    if flags & FLAG_NULLABLE:
-        from . import levels as levels_mod
-
-        def_levels, consumed = levels_mod.decode_v1(payload, 1, n)
-        record_valid = def_levels.astype(bool)
-        pos = consumed
+    element chunk decodes to (ndarray, (lens, data), nullable tuples, or a
+    nested container's result)."""
+    record_valid, pos = _decode_levels(payload, flags, n)
     llen = int.from_bytes(payload[pos : pos + 8].tobytes(), "little")
     pos += 8
     lengths = decode_chunk(payload[pos : pos + llen], verify_checksum=False)
@@ -454,6 +496,39 @@ def _decode_list(payload: np.ndarray, flags: int, n: int):
     if record_valid is not None:
         return lengths, values, record_valid
     return lengths, values
+
+
+def _decode_struct(payload: np.ndarray, flags: int, n: int):
+    """-> (decoded field children, record_valid or None, number of non-null
+    slots). Every child must hold exactly the non-null struct slots."""
+    valid, pos = _decode_levels(payload, flags, n)
+    n_dense = n if valid is None else int(valid.sum())
+
+    def take(width: int, what: str) -> int:
+        nonlocal pos
+        if pos + width > payload.size:
+            raise ValueError(f"struct chunk: truncated {what}")
+        pos += width
+        return int.from_bytes(payload[pos - width : pos].tobytes(), "little")
+
+    fields = []
+    for i in range(take(4, "field count")):
+        clen = take(8, f"length prefix of field {i}")
+        if pos + clen > payload.size:
+            raise ValueError(
+                f"struct chunk: field {i} claims {clen} bytes, "
+                f"{payload.size - pos} present"
+            )
+        child = payload[pos : pos + clen]
+        pos += clen
+        rows = read_info(child).n_values
+        if rows != n_dense:
+            raise ValueError(
+                f"struct chunk: field {i} holds {rows} rows, "
+                f"{n_dense} non-null struct slots expected"
+            )
+        fields.append(decode_chunk(child, verify_checksum=False))
+    return fields, valid, n_dense
 
 
 def _decode_paged(payload: np.ndarray, dtype: str) -> np.ndarray:
@@ -562,6 +637,8 @@ def decode_chunk(blob: bytes | np.ndarray, verify_checksum: bool = True):
             return _check_n(_decode_paged(payload, info.dtype), info.n_values)
         if cid == LIST:
             return _decode_list(payload, flags, info.n_values)
+        if cid == STRUCT:
+            return _decode_struct(payload, flags, info.n_values)
         if flags & FLAG_NULLABLE:
             from . import levels as levels_mod
 

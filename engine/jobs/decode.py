@@ -16,6 +16,10 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
+    BooleanType,
+    DoubleType,
+    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -286,13 +290,13 @@ def decode_tokens_agg(chunks_df: DataFrame, colocated: bool = False) -> DataFram
 
 
 _SPARK_TYPES = {
-    "int32": "int",
-    "int64": "long",
-    "float32": "float",
-    "float64": "double",
-    "bytes": "string",
-    "binary": "binary",
-    "bool": "boolean",
+    "int32": IntegerType(),
+    "int64": LongType(),
+    "float32": FloatType(),
+    "float64": DoubleType(),
+    "bytes": StringType(),
+    "binary": BinaryType(),
+    "bool": BooleanType(),
 }
 
 
@@ -309,11 +313,58 @@ def _values_array(decoded, kind: str):
     return pa.array(decoded)
 
 
+def _spark_type(kind: str):
+    """Spark type a generic-table column of ``kind`` decodes to (before
+    any logical cast)."""
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    if kind.startswith("nested:"):
+        return _parse_datatype_json_string(kind[7:])
+    if kind.startswith("list:"):
+        return ArrayType(_SPARK_TYPES[kind[5:]])
+    return _SPARK_TYPES[kind]
+
+
+def _node_array(decoded, t):
+    """Decoded chunk of one node of a list or nested column -> its Arrow
+    array of type ``t``, by recursion over ``t``: a list through
+    _list_array, a map as the list of its entries viewed as a map, a
+    struct from its dense fields (none, for an empty struct) with the NULL
+    slots scattered back by one take, a leaf through _values_array and its
+    logical type's cast."""
+    import pyarrow as pa
+
+    from .encode import physical_type
+
+    if pa.types.is_map(t):
+        return _node_array(decoded, pa.list_(t.field(0))).view(t)
+    if pa.types.is_list(t):
+        lengths, values, record_valid = _unpack_list_chunk(decoded)
+        arr = _list_array(lengths, _node_array(values, t.value_type), record_valid)
+        return arr if arr.type == t else arr.view(t)
+    if pa.types.is_struct(t):
+        fields, valid, n_dense = decoded
+        if len(fields) != t.num_fields:
+            raise ValueError(
+                f"struct chunk holds {len(fields)} fields, the column spec {t} "
+                f"has {t.num_fields}"
+            )
+        kids = [_node_array(d, f.type) for d, f in zip(fields, t)]
+        arr = pa.Array.from_buffers(t, n_dense, [None], children=kids)
+        if valid is None:
+            return arr
+        return arr.take(pa.array(np.cumsum(valid) - 1, mask=~valid))
+    p = physical_type(t)
+    arr = _values_array(decoded, "bytes" if pa.types.is_string(p) else str(p))
+    return arr if p == t else arr.cast(t)
+
+
 def _column_array(decoded, kind: str):
     """Decoded chunk of a generic-table column -> its Arrow array."""
-    if kind.startswith("list:"):
-        lengths, values, record_valid = _unpack_list_chunk(decoded)
-        return _list_array(lengths, _values_array(values, kind[5:]), record_valid)
+    if kind.startswith(("list:", "nested:")):
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        return _node_array(decoded, to_arrow_type(_spark_type(kind)))
     return _values_array(decoded, kind)
 
 
@@ -386,20 +437,15 @@ def decode_table(
         )
         return out.unionByName(null_rows)
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
 
     fields = []
     for name, spec in columns.items():
         kind = spec[0]
         if kind == "int32_list":
             raise ValueError("list columns: use decode_chunks (corpus decoder)")
-        # programmatic StructField: flattened struct leaves carry literal
-        # dots in their names, which a DDL string would misparse
-        if kind.startswith("list:"):
-            dt = ArrayType(_parse_datatype_string(_SPARK_TYPES[kind[5:]]))
-        else:
-            dt = _parse_datatype_string(_SPARK_TYPES[kind])
-        fields.append(StructField(name, dt, True))
+        # programmatic StructField: a column name may hold dots, which a
+        # DDL string would misparse
+        fields.append(StructField(name, _spark_type(kind), True))
     schema = StructType(fields)
     arrow_schema = to_arrow_schema(schema)
     kinds = {name: spec[0] for name, spec in columns.items()}
@@ -431,7 +477,7 @@ def decode_table(
                 out.append(pa.nulls(tbl.column("n_docs")[0].as_py(), field.type))
             else:
                 raise KeyError(f"column {field.name} missing and no n_docs metadata")
-        return pa.Table.from_arrays(out, names=arrow_schema.names).cast(arrow_schema)
+        return pa.Table.from_arrays(out, schema=arrow_schema)
 
     out = chunks_df.groupBy("chunk_id").applyInArrow(gen, schema)
     if logical:
@@ -519,7 +565,7 @@ def token_histogram(chunks_df: DataFrame, column: str = "tokens") -> DataFrame:
         for rb in batches:
             for blob in rb.column(0).to_pylist():
                 info = chunk.read_info(blob)
-                if info.dtype == "bytes" or info.codec == "list":
+                if info.dtype == "bytes" or info.codec in ("list", "struct"):
                     raise ValueError(
                         "token_histogram expects numeric flat chunks "
                         f"(got {info.codec}/{info.dtype} for column {column!r})"
@@ -653,7 +699,7 @@ def row_filter_expr(predicate, float_columns=()):
     """The CNF as an exact row-level Spark Column — the residual the
     filtered scan applies after chunk pruning (SQL semantics: NULL fails
     every range/comparison/IN). Column references are backtick-quoted so
-    flattened struct leaves with dotted names resolve. NaN semantics
+    column names holding dots resolve. NaN semantics
     match the parquet residual and the NaN-excluded chunk statistics —
     NaN never matches: NaN bounds/values/members are match-nothing, and
     ``float_columns`` names the DOUBLE/FLOAT columns that need an isnan

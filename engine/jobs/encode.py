@@ -197,6 +197,83 @@ def _numpy(arr, kind: str) -> np.ndarray:
     return np.ascontiguousarray(arr.to_numpy(zero_copy_only=False), dtype=kind)
 
 
+def physical_type(t):
+    """The Arrow type a nested leaf's values ride in a chunk: dates as int32
+    days, timestamps as int64 ticks, decimals as their exact decimal string
+    (the top-level columns' logical types, converted at the Arrow boundary
+    instead of in SQL); any other leaf as itself."""
+    import pyarrow as pa
+
+    if pa.types.is_date32(t):
+        return pa.int32()
+    if pa.types.is_timestamp(t):
+        return pa.int64()
+    if pa.types.is_decimal(t):
+        return pa.string()
+    return t
+
+
+def _leaf(arr, col: str, kind: str | None):
+    """A leaf node -> (dense values, chunk dtype, validity or None, stats);
+    ``kind`` forces the element kind of a ``list:<kind>`` column."""
+    import pyarrow as pa
+
+    p = physical_type(arr.type)
+    if p != arr.type:
+        arr = arr.cast(p)
+    if kind is None:  # numpy's name for a fixed-width leaf, else byte arrays
+        t = arr.type
+        kind = "bytes"
+        if pa.types.is_primitive(t):
+            kind = np.dtype(t.to_pandas_dtype()).name
+    if kind in ("bytes", "binary"):
+        dense, valid, _ = _shred(arr)
+        return bytearrays.flat_from_arrow(dense), "bytes", valid, {}
+    dense, valid, _ = _shred(_cast_input(arr, kind, col))
+    values = _numpy(dense, kind)
+    return values, kind, valid, {} if kind == "bool" else _num_stats(values, kind)
+
+
+def _is_nested(t) -> bool:
+    import pyarrow as pa
+
+    return pa.types.is_struct(t) or pa.types.is_list(t) or pa.types.is_map(t)
+
+
+def _encode_node(arr, col: str, kind: str | None = None):
+    """One Arrow node of a list or nested column -> (framed chunk, stats).
+    A list is a LIST frame over its elements (lengths and flat child lifted
+    from the ListArray buffers, Dremel record shredding, reference
+    src/record/reader.rs:159-240), a map the LIST of its (key, value)
+    entries, a struct a STRUCT frame over its non-null slots, a leaf a value
+    chunk. Record and element nulls come off the validity bitmaps. Numeric
+    leaf statistics pass up through lists."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = arr.type
+    if pa.types.is_map(t):
+        arr = arr.view(pa.list_(t.field(0)))
+    elif not _is_nested(t):
+        values, elem, valid, stats = _leaf(arr, col, kind)
+        codec = chunk.auto_codec(values, elem)
+        return chunk.encode_chunk(values, codec, elem, valid=valid), stats
+    dense, valid, _ = _shred(arr)
+    if pa.types.is_struct(t):
+        kids = [_encode_node(c, col)[0] for c in dense.flatten()]
+        return chunk.encode_chunk_struct(kids, len(dense), valid), {}
+    lengths = pc.list_value_length(dense).to_numpy(zero_copy_only=False)
+    child = dense.flatten()
+    if _is_nested(child.type):
+        blob, stats = _encode_node(child, col)
+        return chunk.encode_chunk_list(lengths, blob, valid=valid), stats
+    values, elem, elem_valid, stats = _leaf(child, col, kind)
+    blob = chunk.encode_chunk_list(
+        lengths, values, elem, valid=valid, elem_valid=elem_valid
+    )
+    return blob, stats
+
+
 def _encode_column(arr, col: str, spec, bloom: bool):
     """One column of one bucket -> (codec, framed blob, null_count, stats,
     bloom blob or None)."""
@@ -248,30 +325,10 @@ def _encode_column(arr, col: str, spec, bloom: bool):
         if len(dense) and kind == "bytes":
             stats = dict(zip(("vmin_s", "vmax_s"), _ba_stats(dense)))
         return codec, blob, null_count, stats, bloom_blob
-    if kind.startswith("list:"):
-        import pyarrow.compute as pc
-
-        # lengths + flat child lifted from the ListArray buffers (offsets,
-        # values child); record and element nulls from the two validity
-        # bitmaps (Dremel record shredding, reference
-        # src/record/reader.rs:159-240)
-        elem = kind[5:]
-        dense, valid, null_count = _shred(arr)
-        lengths = pc.list_value_length(dense).to_numpy(zero_copy_only=False)
-        child = dense.flatten()
-        stats = {}
-        if elem in ("bytes", "binary"):
-            child, elem_valid, _ = _shred(child)
-            values, elem = bytearrays.flat_from_arrow(child), "bytes"
-        else:
-            child, elem_valid, _ = _shred(_cast_input(child, elem, col))
-            values = _numpy(child, elem)
-            if elem != "bool":
-                stats = _num_stats(values, elem)
-        blob = chunk.encode_chunk_list(
-            lengths, values, elem, valid=valid, elem_valid=elem_valid
-        )
-        return "list", blob, null_count, stats, None
+    if kind.startswith(("list:", "nested:")):
+        elem = kind[5:] if kind.startswith("list:") else None
+        blob, stats = _encode_node(arr, col, elem)
+        return chunk.read_info(blob).codec, blob, arr.null_count, stats, None
     if kind in ("int32", "int64", "float32", "float64", "bool"):
         dense, valid, null_count = _shred(_cast_input(arr, kind, col))
         vals = _numpy(dense, kind)
@@ -389,7 +446,10 @@ def derive_columns(df: DataFrame) -> dict:
     "switch your table to this engine" path). DATE/TIMESTAMP columns are
     annotated logical types riding int32 days / int64 micros — the engine
     casts on encode and restores the original type on decode (the reference's
-    converted-type mechanism, src/basic.rs:56-146)."""
+    converted-type mechanism, src/basic.rs:56-146). An array of scalars is a
+    ``list:<kind>`` column; any other struct, map or array column is
+    ``nested:<its Spark type as JSON>``, whose leaves may be any type a
+    top-level column may be."""
     from pyspark.sql import types as T
 
     mapping = {
@@ -406,6 +466,21 @@ def derive_columns(df: DataFrame) -> dict:
         T.TimestampType(): "timestamp",
         T.TimestampNTZType(): "timestamp_ntz",
     }
+
+    def check_leaves(dt, path: str) -> None:
+        if isinstance(dt, T.StructType):
+            for sub in dt.fields:
+                check_leaves(sub.dataType, f"{path}.{sub.name}")
+        elif isinstance(dt, T.ArrayType):
+            check_leaves(dt.elementType, f"{path}.element")
+        elif isinstance(dt, T.MapType):
+            check_leaves(dt.keyType, f"{path}.key")
+            check_leaves(dt.valueType, f"{path}.value")
+        elif not (
+            dt in mapping or dt in logical_map or isinstance(dt, T.DecimalType)
+        ):
+            raise ValueError(f"column {path}: {dt} not encodable; cast first")
+
     out = {}
     for f in df.schema.fields:
         if isinstance(f.dataType, T.ArrayType) and f.dataType.elementType in mapping:
@@ -435,6 +510,9 @@ def derive_columns(df: DataFrame) -> dict:
                 ("bytes", "cast({c} as string)", f"cast({{c}} as decimal({p},{s}))"),
             )
             out[f.name] = ColumnSpec("bytes", logical=logical)
+        elif isinstance(f.dataType, (T.ArrayType, T.StructType, T.MapType)):
+            check_leaves(f.dataType, f.name)
+            out[f.name] = ColumnSpec("nested:" + f.dataType.json())
         else:
             raise ValueError(
                 f"column {f.name}: {f.dataType} not encodable; cast first"
@@ -469,7 +547,7 @@ def logical_spec(logical: str):
 
 def apply_logical_casts(df: DataFrame, columns: dict) -> DataFrame:
     """Cast logical-typed columns to their physical representation
-    (column refs backtick-quoted: flattened struct leaves carry '$')."""
+    (column refs backtick-quoted: a column name may hold '.')."""
     for name, spec in columns.items():
         logical = spec[3] if len(spec) > 3 else None
         if logical:
@@ -553,10 +631,16 @@ def encode_table(
             "chunk_id",
             "left_anti",
         )
-    # backtick-quote: flattened struct leaves carry literal '$'/'.' chars
-    # (plan_buckets already rejected inputs named like the meta columns)
+    # mapInArrow resolves its input columns with df[name], which reads a
+    # '.' as struct access: data columns cross it under positional aliases
+    # and get their names back per bucket (plan_buckets already rejected
+    # inputs named like the meta columns)
+    alias = {c: f"_c{i}" for i, c in enumerate(columns)}
+    names = ["chunk_id", *skew.BUCKET_META_COLS, *columns]
     cols = [
-        F.col(f"`{c}`") for c in ("chunk_id", *skew.BUCKET_META_COLS, *columns)
+        "chunk_id",
+        *skew.BUCKET_META_COLS,
+        *[F.col(f"`{c}`").alias(a) for c, a in alias.items()],
     ]
 
     def encode_stream(batches):
@@ -568,14 +652,18 @@ def encode_table(
 
         for pending in _chunk_groups(batches):
             tbl = pa.Table.from_batches(pending).combine_chunks()
-            yield _encode_group_arrow(tbl, columns, block_codec, bloom_cols)
+            yield _encode_group_arrow(
+                tbl.rename_columns(names), columns, block_codec, bloom_cols
+            )
 
     # one shuffle: co-locate buckets, sort (chunk_id, doc_id) in Tungsten,
     # then a pure partition-parallel mapInArrow encode pass
     return (
         bucketed.select(*cols)
         .repartition(F.col("chunk_id"))
-        .sortWithinPartitions(F.col("chunk_id"), F.col(f"`{sort_col}`"))
+        .sortWithinPartitions(
+            F.col("chunk_id"), F.col(alias.get(sort_col, f"`{sort_col}`"))
+        )
         .mapInArrow(encode_stream, CHUNK_SCHEMA)
     )
 

@@ -666,6 +666,20 @@ def _shred(arr, field, path, pos, defs, reps, d, r, leaves) -> None:
             base = np.full(len(ok), d, np.uint8) if defs is None else defs
             defs = base + ok
         d += 1
+    elif arr.null_count:
+        # a required node has no def level for a NULL: one on a slot every
+        # ancestor defines would be written as its buffer's stale value. A
+        # NULL under a NULL parent is dead and stays legal (Spark writes it)
+        valid = _bitmap_bits(arr.buffers()[0], arr.offset, len(arr))
+        live = _live(pos, defs, d)
+        if pos is not None:
+            valid = valid[pos[live]]
+        elif live is not None:
+            valid = valid[live]
+        if not valid.all():
+            raise ValueError(
+                f"column {'.'.join(path)}: NULL in a non-nullable field"
+            )
     if pa.types.is_struct(t):
         for i, f in enumerate(t):
             _shred(arr.field(i), f, path + [f.name], pos, defs, reps, d, r,

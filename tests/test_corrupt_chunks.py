@@ -5,7 +5,8 @@ Mirrors the reference's fuzz harness over its read path
 (``fuzz/src/main.rs:14-32``) and its malformed golden file
 (``data/nation.dict-malformed.parquet``): truncated header/payload, bad
 magic/version/codec/dtype/flags, CRC flips, lying n_values, a LIST frame
-whose lengths disagree with the element count, and a bad block-codec id
+whose lengths disagree with the element count, STRUCT frames whose fields
+disagree on rows or whose length prefix is cut, and a bad block-codec id
 inside a compressed frame.
 """
 
@@ -132,6 +133,63 @@ def test_list_lengths_disagree_with_elements():
     decoded = chunk.decode_chunk(header + payload)  # frame-level OK
     with pytest.raises(ValueError, match="lengths sum"):
         decode_job._column_array(decoded, "list:int32")
+
+
+def _struct_frame(n: int, children: list, tail: bytes = b"") -> bytes:
+    """A hand-built STRUCT frame (encode_chunk_struct refuses bad input)."""
+    payload = len(children).to_bytes(4, "little") + b"".join(
+        len(c).to_bytes(8, "little") + c for c in children
+    )
+    return chunk._frame(chunk.STRUCT, "int64", 0, n, 0, payload + tail)
+
+
+def _ints(n: int) -> bytes:
+    return chunk.encode_chunk(np.arange(n, dtype=np.int64), "plain", "int64")
+
+
+def test_struct_fields_disagree_on_row_count():
+    with pytest.raises(ValueError, match="field 1 holds 4 rows, 3 non-null"):
+        chunk.decode_chunk(_struct_frame(3, [_ints(3), _ints(4)]))
+
+
+def test_struct_truncated_child_length_prefix():
+    """The field count promises a second child, but only half its u64
+    length prefix is present."""
+    cut = _struct_frame(3, [_ints(3)])
+    payload = bytearray(cut[chunk._HEADER_LEN :])
+    payload[:4] = (2).to_bytes(4, "little")
+    blob = chunk._frame(chunk.STRUCT, "int64", 0, 3, 0, bytes(payload) + b"\x01\x00\x00\x00")
+    with pytest.raises(ValueError, match="truncated length prefix of field 1"):
+        chunk.decode_chunk(blob)
+    # a child body shorter than its length prefix claims
+    long = _struct_frame(3, [_ints(3)])[:-4]
+    with pytest.raises(ValueError, match="field 0 claims"):
+        chunk.decode_chunk(_refit_crc(_patch(long, 28, (len(long) - 36).to_bytes(8, "little"))))
+
+
+def test_struct_lying_n_values():
+    leaf = _ints(3)
+    plain = chunk.encode_chunk_struct([leaf, leaf], 3)
+    lying = _patch(plain, 8, (1_000_000).to_bytes(8, "little"))
+    with pytest.raises(ValueError, match="field 0 holds 3 rows, 1000000 non-null"):
+        chunk.decode_chunk(lying)
+    nullable = chunk.encode_chunk_struct(
+        [leaf, leaf], 3, valid=np.array([True, False, True, True])
+    )
+    for n in (2, 1_000_000):
+        with pytest.raises(ValueError):
+            chunk.decode_chunk(_patch(nullable, 8, n.to_bytes(8, "little")))
+
+
+def test_struct_field_count_disagrees_with_spec():
+    """A STRUCT chunk decoded under a column spec with another number of
+    fields fails naming both, not inside Arrow."""
+    import pyarrow as pa
+
+    decoded = chunk.decode_chunk(chunk.encode_chunk_struct([_ints(3)], 3))
+    two = pa.struct([("a", pa.int64()), ("b", pa.int64())])
+    with pytest.raises(ValueError, match="holds 1 fields, the column spec"):
+        decode_job._node_array(decoded, two)
 
 
 def test_bad_block_codec_id():

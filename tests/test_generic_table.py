@@ -55,11 +55,12 @@ def test_generic_roundtrip(spark, table):
 
 
 def test_unencodable_type_raises(spark):
-    # array<struct> has no leaf mapping even after nested.flatten
+    # a NullType leaf has no chunk kind at any depth; the error names it
     df = spark.range(5).select(
-        F.col("id"), F.array(F.struct(F.col("id").alias("a"))).alias("xs")
+        F.col("id"),
+        F.array(F.struct(F.col("id").alias("a"), F.lit(None).alias("z"))).alias("xs"),
     )
-    with pytest.raises(ValueError, match="not encodable"):
+    with pytest.raises(ValueError, match=r"column xs\.element\.z: .* not encodable"):
         encode_job.derive_columns(df)
 
 
@@ -152,3 +153,16 @@ def test_schema_evolution_missing_column_decodes_null(spark, tmp_path):
     assert old.where(F.col("tag").isNull()).count() == 100
     assert new.where(F.col("tag").isNull()).count() == 0
     assert out.agg(F.sum("x")).first()[0] == sum(i * 2.0 for i in range(200))
+
+
+def test_sort_col_outside_encoded_columns(spark):
+    """Rows may be ordered by a column that is not itself encoded."""
+    df = spark.range(40).select(
+        F.col("id"), F.lit("g").alias("grp"), (F.col("id") * 2).alias("x")
+    )
+    cols = {"x": encode_job.ColumnSpec("int64")}
+    chunks = encode_job.encode_table(
+        df, columns=cols, bucket_key="grp", salt_col="id", sort_col="id"
+    )
+    out = decode_job.decode_table(chunks, cols)
+    assert sorted(r["x"] for r in out.collect()) == list(range(0, 80, 2))

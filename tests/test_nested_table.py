@@ -1,19 +1,19 @@
 """Nested/complex types through the generic job path (VERDICT r1 #3):
 array<scalar> columns ride LIST container chunks (lengths sub-chunk +
 element sub-chunk — Dremel shredding, reference record assembly
-``src/record/reader.rs:159-520``); structs/maps flatten declaratively to
-leaf columns and rebuild after decode (``src/schema/types.rs:652-735``).
+``src/record/reader.rs:159-520``); struct, map and nested-list columns
+ride one recursive tree of LIST and STRUCT containers over leaf chunks,
+encoded by ``encode_table(derive_columns(df))`` and rebuilt by
+``decode_table``.
 """
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from engine import chunk
 from engine.jobs import decode as decode_job
 from engine.jobs import encode as encode_job
-from engine.jobs import nested
 
 
 def _norm(v):
@@ -30,6 +30,15 @@ def _assert_same_rows(df, out, key):
     for c in a.columns:
         for i in range(len(a)):
             assert _norm(a[c][i]) == _norm(b[c][i]), (c, i, a[c][i], b[c][i])
+
+
+def _roundtrip(df):
+    cols = encode_job.derive_columns(df)
+    chunks = encode_job.encode_table(
+        df, columns=cols, rows_per_bucket=64, bucket_key="grp",
+        salt_col="event_id", sort_col="event_id",
+    )
+    return decode_job.decode_table(chunks, cols)
 
 
 def test_list_chunk_roundtrip_numeric():
@@ -92,11 +101,7 @@ def test_struct_and_map_roundtrip(spark):
             F.array(F.col("id").cast("double"), (F.col("id") * 2).cast("double")),
         ).alias("m"),
     )
-    chunks, cols, plan = nested.encode_nested_table(
-        df, rows_per_bucket=64, bucket_key="grp",
-        salt_col="event_id", sort_col="event_id",
-    )
-    out = nested.rebuild(decode_job.decode_table(chunks, cols), plan)
+    out = _roundtrip(df)
     a = df.orderBy("event_id").collect()
     b = out.select(*df.columns).orderBy("event_id").collect()
     assert a == b
@@ -127,11 +132,7 @@ def test_array_of_struct_roundtrip(spark):
             ),
         ).alias("items"),
     )
-    chunks, cols, plan = nested.encode_nested_table(
-        df, rows_per_bucket=64, bucket_key="grp",
-        salt_col="event_id", sort_col="event_id",
-    )
-    out = nested.rebuild(decode_job.decode_table(chunks, cols), plan)
+    out = _roundtrip(df)
     a = df.orderBy("event_id").collect()
     b = out.select(*df.columns).orderBy("event_id").collect()
     assert a == b
@@ -160,11 +161,7 @@ def test_map_with_struct_values_roundtrip(spark):
             F.struct((F.col("id") * 2).alias("n"), F.lit("fixed").alias("s")),
         ).alias("m"),
     )
-    chunks, cols, plan = nested.encode_nested_table(
-        df, rows_per_bucket=64, bucket_key="grp",
-        salt_col="event_id", sort_col="event_id",
-    )
-    out = nested.rebuild(decode_job.decode_table(chunks, cols), plan)
+    out = _roundtrip(df)
     a = df.orderBy("event_id").collect()
     b = out.select(*df.columns).orderBy("event_id").collect()
     assert a == b
@@ -201,11 +198,7 @@ def test_deep_shapes_roundtrip(spark):
             F.array((F.col("id") / 7).cast("double")),
         ).alias("mv"),
     )
-    chunks, cols, plan = nested.encode_nested_table(
-        df, rows_per_bucket=64, bucket_key="grp",
-        salt_col="event_id", sort_col="event_id",
-    )
-    out = nested.rebuild(decode_job.decode_table(chunks, cols), plan)
+    out = _roundtrip(df)
     a = df.orderBy("event_id").collect()
     b = out.select(*df.columns).orderBy("event_id").collect()
     assert a == b
@@ -217,10 +210,23 @@ def test_deep_shapes_roundtrip(spark):
     assert n_null_inner > 0
 
 
-def test_unsupported_shapes_fail_loudly(spark):
-    sep_clash = spark.range(2).select(F.col("id").alias(f"a{nested.SEP}b"))
-    with pytest.raises(ValueError, match="reserved"):
-        nested.flatten(sep_clash)
+def test_dotted_and_dollar_names_roundtrip(spark):
+    """A top-level column and struct fields named with '.' and '$' are
+    ordinary names: no separator is reserved."""
+    df = spark.range(0, 50).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % 3).cast("string").alias("grp"),
+        (F.col("id") * 3).alias("a.b"),
+        F.struct(
+            F.col("id").alias("a.b"),
+            F.concat(F.lit("v"), F.col("id")).alias("c$d"),
+        ).alias("c$d"),
+    )
+    out = _roundtrip(df)
+    assert out.columns[2:] == ["a.b", "c$d"]
+    a = df.orderBy("event_id").collect()
+    b = out.select(*[F.col(f"`{c}`") for c in df.columns]).orderBy("event_id").collect()
+    assert a == b
 
 
 def test_list_stats_recorded(spark):
@@ -322,11 +328,7 @@ def test_struct_of_logical_leaves_roundtrip(spark):
             .cast("decimal(38,6)").alias("wide"),
         )).alias("s"),
     )
-    chunks, cols, plan = nested.encode_nested_table(
-        df, rows_per_bucket=64, bucket_key="grp",
-        salt_col="event_id", sort_col="event_id",
-    )
-    out = nested.rebuild(decode_job.decode_table(chunks, cols), plan)
+    out = _roundtrip(df)
     assert out.schema["s"].dataType.simpleString() == (
         df.schema["s"].dataType.simpleString()
     )
@@ -335,3 +337,19 @@ def test_struct_of_logical_leaves_roundtrip(spark):
     assert a == b
     assert out.where(F.col("s").isNull()).count() > 0
     assert out.where(F.col("s.small").isNull() & F.col("s").isNotNull()).count() > 0
+
+
+def test_empty_struct_roundtrip(spark):
+    """A struct without fields still has rows and NULLs: the STRUCT frame
+    carries them in its header and def levels, with no child."""
+    df = spark.range(0, 40).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % 3).cast("string").alias("grp"),
+        F.expr("named_struct()").alias("e"),
+        F.expr("if(id % 4 = 0, null, named_struct('z', named_struct()))").alias("ze"),
+    )
+    out = _roundtrip(df)
+    a = df.orderBy("event_id").collect()
+    b = out.select(*df.columns).orderBy("event_id").collect()
+    assert a == b
+    assert out.where(F.col("ze").isNull()).count() == 10

@@ -145,3 +145,37 @@ def test_shred_inverts_assemble_on_sliced_arrays():
             assert np.array_equal(g.defs, w.defs)
             assert np.array_equal(g.reps, w.reps)
             assert np.array_equal(g.values, w.values)
+
+
+def test_null_on_live_slot_of_required_field_raises(tmp_path):
+    """A NULL where a required field has a value to write is refused,
+    naming the leaf; it used to be written as the buffer's stale 0."""
+    tbl = pa.Table.from_arrays(
+        [pa.array([1, None, 3])],
+        schema=pa.schema([pa.field("a", pa.int64(), nullable=False)]),
+    )
+    with pytest.raises(ValueError, match="column a: NULL in a non-nullable"):
+        po.write_table(str(tmp_path / "a.parquet"), tbl)
+    s = pa.StructArray.from_arrays(
+        [pa.array([1, None, 3]), pa.array(["x", "y", "z"])],
+        fields=[pa.field("x", pa.int64(), False), pa.field("y", pa.string())],
+    )
+    tbl = pa.Table.from_arrays([s], names=["s"])
+    with pytest.raises(ValueError, match="column s.x: NULL in a non-nullable"):
+        po.write_table(str(tmp_path / "s.parquet"), tbl)
+
+
+def test_null_under_null_parent_of_required_field_is_written(tmp_path):
+    """Spark writes struct<x: bigint NOT NULL> with a NULL child under
+    every NULL struct slot; that child is dead and the file reads back."""
+    s = pa.StructArray.from_arrays(
+        [pa.array([1, None, 3]), pa.array(["x", None, "z"])],
+        fields=[pa.field("x", pa.int64(), False), pa.field("y", pa.string())],
+        mask=pa.array([False, True, False]),
+    )
+    tbl = pa.Table.from_arrays([s], names=["s"])
+    path = str(tmp_path / "s.parquet")
+    po.write_table(path, tbl)
+    assert pq.read_table(path).column("s").to_pylist() == [
+        {"x": 1, "y": "x"}, None, {"x": 3, "y": "z"},
+    ]
